@@ -105,6 +105,12 @@ object GeoEval {
       xmax: Double, ymax: Double): Long =
     SpatialKey.hilbert(x, y, xmin, ymin, xmax, ymax)
 
+  /** Count of `splits` (ascending, distinct) below `key`. */
+  def bucketOf(splits: Array[Long], key: Long): Int = {
+    val i = java.util.Arrays.binarySearch(splits, key)
+    if (i >= 0) i else -i - 1
+  }
+
   def mortonXY(x: Double, y: Double, xmin: Double, ymin: Double,
       xmax: Double, ymax: Double): Long =
     SpatialKey.morton(x, y, xmin, ymin, xmax, ymax)

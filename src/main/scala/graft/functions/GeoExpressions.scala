@@ -1,7 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -312,6 +314,33 @@ object GeoExpressions {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, c => s"$E.hilbert($c, $xmin, $ymin, $xmax, $ymax)")
     override protected def withNewChildInternal(c: Expression): HilbertIndex =
+      copy(child = c)
+  }
+
+  /** Output partition of a Hilbert key under ascending split keys: the
+    * number of splits below the key, so partition i holds the keys in
+    * (splits(i-1), splits(i)] — `RangePartitioner`'s placement rule. A
+    * null key goes to partition 0, where ASC NULLS FIRST sorts it. Feeds
+    * the shuffle of [[graft.table.GeoTable.sortHilbert]].
+    */
+  case class HilbertBucket(child: Expression, splits: Array[Long])
+      extends UnaryExpression with ImplicitCastInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(LongType)
+    override def dataType: DataType = IntegerType
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = {
+      val k = child.eval(input)
+      if (k == null) 0 else GeoEval.bucketOf(splits, k.asInstanceOf[Long])
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("splits", splits, "long[]")
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        |${c.code}
+        |int ${ev.value} = ${c.isNull} ? 0 : $E.bucketOf($ref, ${c.value});
+        """.stripMargin, isNull = FalseLiteral)
+    }
+    override protected def withNewChildInternal(c: Expression): HilbertBucket =
       copy(child = c)
   }
 

@@ -40,6 +40,8 @@ object geo {
       y1: Double): Column = col(EnvelopeIntersects(ex(g), x0, y0, x1, y1))
   def hilbert_index(g: Column, xmin: Double, ymin: Double, xmax: Double,
       ymax: Double): Column = col(HilbertIndex(ex(g), xmin, ymin, xmax, ymax))
+  def hilbert_bucket(key: Column, splits: Array[Long]): Column =
+    col(HilbertBucket(ex(key), splits))
   def hilbert_xy(x: Column, y: Column, xmin: Double, ymin: Double,
       xmax: Double, ymax: Double): Column =
     col(HilbertIndexXY(ex(x), ex(y), xmin, ymin, xmax, ymax))

@@ -40,6 +40,18 @@ object Bpe {
     * feeding unsegmented garbage into the trainer. */
   val MaxVocab = 20000000
 
+  /** A pair weight after one bookkeeping delta. Exact deltas never take
+    * a weight below zero, so a negative result is an accounting bug: it
+    * fails here instead of entering the merge heap as a bogus candidate.
+    */
+  private[graft] def nextWeight(pair: (String, String), weight: Long,
+      delta: Long): Long = {
+    val nw = weight + delta
+    if (nw < 0L) throw new IllegalStateException(
+      s"BPE pair weight underflow: $pair at $weight + $delta = $nw")
+    nw
+  }
+
   /** Symbol delimiter — U+241F SYMBOL FOR UNIT SEPARATOR. */
   val Delim = "␟"
 
@@ -115,7 +127,7 @@ object Bpe {
         }
       })
     def addWeight(k: (String, String), delta: Long): Unit = {
-      val nw = weights.getOrElse(k, 0L) + delta
+      val nw = nextWeight(k, weights.getOrElse(k, 0L), delta)
       if (nw == 0L) weights.remove(k)
       else {
         weights.update(k, nw)

@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.geo
 import graft.geom.{GeoJson, Proj, Wkt}
@@ -95,22 +95,15 @@ final case class GeoTable(
 
   /** Actual data bounds, mirroring the reference's `_get_data_bounds`
     * (`core/extract.py:200-221`). Prefers the declared metadata bbox
-    * (O(1), footer-only); falls back to one envelope aggregation — a
-    * FULL SCAN, so this is for explicit diagnostic calls, and
-    * [[filterBbox]]'s warning path deliberately uses only the footer
-    * bbox (at 100 TB a scan to decorate a log line is wrong). Returns
-    * None on any failure — bounds are decoration, never load-bearing.
+    * (O(1), footer-only); falls back to the [[bounds]] sketch — a FULL
+    * SCAN, so this is for explicit diagnostic calls, and [[filterBbox]]'s
+    * warning path deliberately uses only the footer bbox (at 100 TB a
+    * scan to decorate a log line is wrong). Returns None on any failure
+    * — bounds are decoration, never load-bearing.
     */
   private[graft] def dataBounds: Option[(Double, Double, Double, Double)] =
     meta.primary.flatMap(_.bbox).orElse {
-      try {
-        val g = col(geomCol)
-        val r = df.agg(
-          min(geo.st_xmin(g)), min(geo.st_ymin(g)),
-          max(geo.st_xmax(g)), max(geo.st_ymax(g))).head()
-        if ((0 to 3).exists(r.isNullAt)) None
-        else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      } catch { case _: Exception => None }
+      try sketch(0).bounds catch { case _: Exception => None }
     }
 
   def filterBbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double): GeoTable = {
@@ -261,38 +254,53 @@ final case class GeoTable(
 
   // ---- sorts (SURVEY §2.6) ----------------------------------------------
 
-  /** Dataset bounds: bbox-struct stats fast path via footer would apply
-    * on read; on a live plan we aggregate envelope expressions
-    * (`core/common.py:3493-3573`).
+  /** One scan of the values [[bounds]] reads — the covering bbox fields
+    * when the table has them, else the geometry envelope — sized to pick
+    * `outPartitions` Hilbert splits (0: bounds only).
     */
-  def bounds(): (Double, Double, Double, Double) = {
-    val bboxCol = meta.primary.flatMap(_.coveringBbox)
-      .filter(df.columns.contains)
-    val r = bboxCol match {
+  private def sketch(outPartitions: Int): HilbertSketch.Sketch =
+    meta.primary.flatMap(_.coveringBbox).filter(df.columns.contains) match {
       case Some(b) =>
-        df.agg(min(col(s"$b.xmin")), min(col(s"$b.ymin")),
-          max(col(s"$b.xmax")), max(col(s"$b.ymax"))).head()
+        HilbertSketch.run(df.select(Seq("xmin", "ymin", "xmax", "ymax")
+          .map(f => col(s"$b.$f").cast("double")): _*), wkb = false, outPartitions)
       case None =>
-        val g = col(geomCol)
-        df.agg(min(geo.st_xmin(g)), min(geo.st_ymin(g)),
-          max(geo.st_xmax(g)), max(geo.st_ymax(g))).head()
+        HilbertSketch.run(df.select(col(geomCol)), wkb = true, outPartitions)
     }
-    // an empty (or all-null-geometry) table aggregates to NULLs; a
-    // degenerate world envelope keeps the callers (sortHilbert,
-    // enrichSpatial, fix) total instead of NPEing on getDouble
-    if (r.isNullAt(0)) (-180.0, -90.0, 180.0, 90.0)
-    else (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-  }
 
-  /** Two-phase Hilbert sort (`core/hilbert_order.py`): bounds agg, then
-    * global sort by curve index. Spark executes the global sort as
-    * range-partition + in-partition sort — exactly the
-    * repartitionByRange+sortWithinPartitions shape that scales to
-    * arbitrary cluster width.
+  /** Dataset bounds (`core/common.py:3493-3573`) in one job: min/max of
+    * the covering bbox fields when the table has them, else of the
+    * geometry envelope (each WKB decoded once), with Spark `min`/`max`
+    * semantics — nulls skipped, NaN above every double. An empty (or
+    * all-null-geometry) table reads as the world envelope, which keeps
+    * the callers (sortHilbert, enrichSpatial, fix) total.
+    */
+  def bounds(): (Double, Double, Double, Double) = sketch(0).boundsOrWorld
+
+  /** Two-phase Hilbert sort (`core/hilbert_order.py`: bounds, then order
+    * by curve index) as one scan plus one shuffle. The scan is the
+    * [[bounds]] job, which also keeps a seeded sample of envelope
+    * midpoints; that sample then gives n-1 split keys for the n shuffle
+    * partitions, the way `RangePartitioner` would pick them after a
+    * sampling scan of its own. Each row's key is projected once, the
+    * shuffle sends the row straight to its split's partition, and each
+    * partition sorts by key (nulls first) — partition order times
+    * in-partition order is the global key order, so the part files come
+    * out Hilbert-ordered. AQE coalesces the shuffle as it does an
+    * `orderBy`'s, so a small table still writes one file. The splits are
+    * fixed for the shuffle partition count set when this is called.
     */
   def sortHilbert(): GeoTable = {
-    val (x0, y0, x1, y1) = bounds()
-    copy(df = df.orderBy(geo.hilbert_index(col(geomCol), x0, y0, x1, y1)))
+    val n = GraftBridge.numShufflePartitions(spark)
+    val s = sketch(n)
+    val (x0, y0, x1, y1) = s.boundsOrWorld
+    val key = col(GeoTable.HilbertKeyCol)
+    val keyed = df.withColumn(GeoTable.HilbertKeyCol,
+      geo.hilbert_index(col(geomCol), x0, y0, x1, y1))
+    val splits = s.splits(n)
+    copy(df = GraftBridge.repartitionByPartitionId(keyed, GeoTable.HilbertKeyCol)(
+        geo.hilbert_bucket(_, splits))
+      .sortWithinPartitions(key.asc_nulls_first)
+      .drop(GeoTable.HilbertKeyCol))
   }
 
   /** Quadkey sort: ensure key column, string sort (Z-order), optional
@@ -930,6 +938,8 @@ final case class PartitionAnalysis(nPartitions: Long, minRows: Long,
 }
 
 object GeoTable {
+  /** Helper column of [[GeoTable.sortHilbert]], dropped before it returns. */
+  private val HilbertKeyCol = "__hilbert_key"
 
   /** Collect bound for the driver-assembled single-file sinks (shapefile/
     * GeoPackage/FlatGeobuf/in-memory FeatureCollection): these formats are

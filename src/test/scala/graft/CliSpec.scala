@@ -94,6 +94,22 @@ class CliSpec extends AnyFunSuite {
     Main.run(spark, Seq("meta", s"$dir/d.parquet"))
   }
 
+  test("sortHilbert keeps AQE coalescing: the 300-row fixture writes no " +
+      "more files than the global orderBy it replaced") {
+    val dir = tmp("coalesce")
+    val df = spark.range(0, 300).toDF("id")
+      .withColumn("geometry", geo.st_point(col("id") % 90, col("id") % 45))
+    val t = GeoTable.fromDataFrame(df, "geometry").addBbox()
+    t.sortHilbert().write(s"$dir/sketch.parquet", compression = "zstd")
+    val (x0, y0, x1, y1) = t.bounds()
+    t.copy(df = t.df.orderBy(geo.hilbert_index(col("geometry"), x0, y0, x1, y1)))
+      .write(s"$dir/orderby.parquet", compression = "zstd")
+    def files(p: String): Int =
+      graft.meta.Footer.partFiles(p, new org.apache.hadoop.conf.Configuration()).size
+    assert(files(s"$dir/sketch.parquet") <= files(s"$dir/orderby.parquet"))
+    assert(files(s"$dir/sketch.parquet") == 1)
+  }
+
   test("--explain prints the formatted Spark plan of the staged action " +
       "(r15 #7)") {
     val dir = tmp("explain")

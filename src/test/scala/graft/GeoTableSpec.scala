@@ -111,6 +111,127 @@ class GeoTableSpec extends AnyFunSuite {
     assert(after < before, s"sort must improve ratio ($before -> $after)")
   }
 
+  /** The bounds aggregate and global `orderBy` that sortHilbert made
+    * before it became one sketch job plus one shuffle: the reference
+    * behavior the sketch must reproduce exactly.
+    */
+  private def aggBounds(t: GeoTable): (Double, Double, Double, Double) = {
+    val g = col("geometry")
+    val r = t.meta.primary.flatMap(_.coveringBbox).filter(t.df.columns.contains) match {
+      case Some(b) => t.df.agg(min(col(s"$b.xmin")), min(col(s"$b.ymin")),
+        max(col(s"$b.xmax")), max(col(s"$b.ymax"))).head()
+      case None => t.df.agg(min(geo.st_xmin(g)), min(geo.st_ymin(g)),
+        max(geo.st_xmax(g)), max(geo.st_ymax(g))).head()
+    }
+    if (r.isNullAt(0)) (-180.0, -90.0, 180.0, 90.0)
+    else (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+  }
+
+  private def bits(b: (Double, Double, Double, Double)): Seq[Long] =
+    b.productIterator.map(v =>
+      java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])).toSeq
+
+  /** `body` with AQE's shuffle-partition coalescing set to `on`. */
+  private def coalescing[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, old)
+  }
+
+  /** Hilbert keys of `df` in row order, over fixed bounds. */
+  private def keySeq(df: org.apache.spark.sql.DataFrame,
+      b: (Double, Double, Double, Double)): Seq[Option[Long]] =
+    df.select(geo.hilbert_index(col("geometry"), b._1, b._2, b._3, b._4))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+
+  /** id, geometry: scattered polygons and points, each geometry repeated
+    * (duplicate keys), every 13th row a null geometry, and — when
+    * `empties` — every 17th row an empty polygon (a NaN envelope).
+    */
+  private def sortFixture(n: Int, empties: Boolean): GeoTable = {
+    val x = col("id") % 97 * 3.7 - 179
+    val y = col("id") % 89 * 1.9 - 85
+    val poly = geo.st_geomfromtext(concat(lit("POLYGON (("),
+      x, lit(" "), y, lit(", "), x + 0.5, lit(" "), y, lit(", "),
+      x + 0.5, lit(" "), y + 0.25, lit(", "), x, lit(" "), y, lit("))")))
+    val base = when(col("id") % 2 === 0, geo.st_point(x, y)).otherwise(poly)
+    val withEmpty =
+      if (empties) when(col("id") % 17 === 0,
+        geo.st_geomfromtext(lit("POLYGON EMPTY"))).otherwise(base)
+      else base
+    val df = spark.range(n).toDF("id").withColumn("geometry",
+      when(col("id") % 13 === 0, lit(null).cast("binary")).otherwise(withEmpty))
+    GeoTable.fromDataFrame(df, "geometry")
+  }
+
+  test("sortHilbert reproduces the bounds aggregate + orderBy key " +
+      "sequence; bounds() is bit-identical to the aggregate") {
+    val stored = tmpDir("hilbert_equiv")
+    sortFixture(600, empties = false).addBbox().write(stored)
+    val fromFile = GeoTable.read(spark, stored)
+    assert(fromFile.meta.primary.flatMap(_.coveringBbox).contains("bbox"))
+    val tables = Seq(
+      "geometry" -> sortFixture(3000, empties = false),
+      "geometry+empty" -> sortFixture(3000, empties = true),
+      "bbox" -> sortFixture(3000, empties = false).addBbox(),
+      "bbox+empty" -> sortFixture(3000, empties = true).addBbox(),
+      "file bbox" -> fromFile,
+      "0 rows" -> sortFixture(100, empties = false).filterWhere("id < 0"),
+      "1 row" -> sortFixture(100, empties = false).filterWhere("id = 5"),
+      "all null" -> sortFixture(100, empties = false).filterWhere("id % 13 = 0"))
+    // with coalescing off the shuffle keeps all its partitions, so the
+    // key sequence also checks that each row went to its split's partition
+    for (coalesce <- Seq(true, false); (name, t) <- tables) coalescing(coalesce) {
+      val b = aggBounds(t)
+      assert(bits(t.bounds()) == bits(b), s"$name: bounds ${t.bounds()} vs $b")
+      val want = keySeq(t.df.orderBy(
+        geo.hilbert_index(col("geometry"), b._1, b._2, b._3, b._4)), b)
+      val sorted = t.sortHilbert()
+      assert(keySeq(sorted.df, b) == want, s"$name (coalesce=$coalesce)")
+      assert(sorted.df.columns.toSeq == t.df.columns.toSeq)
+      assert(sorted.df.select("id").as[Long].collect().sorted.toSeq ==
+        t.df.select("id").as[Long].collect().sorted.toSeq, name)
+    }
+    // NaN ranks above every double: one empty geometry makes max NaN,
+    // never min
+    val nanB = sortFixture(3000, empties = true).bounds()
+    assert(nanB._3.isNaN && nanB._4.isNaN && !nanB._1.isNaN && !nanB._2.isNaN)
+    // the diagnostic dataBounds reads the same sketch, None without envelopes
+    val g = sortFixture(3000, empties = false)
+    assert(g.dataBounds.map(bits).contains(bits(aggBounds(g))))
+    assert(sortFixture(100, empties = false).filterWhere("id % 13 = 0")
+      .dataBounds.isEmpty)
+  }
+
+  test("sortHilbert plan: one sketch job, no range exchange") {
+    val t = sortFixture(2000, empties = false).addBbox()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    val sorted = try {
+      val s = t.sortHilbert()
+      org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+      s
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"sortHilbert ran ${jobs.get} jobs")
+    val plan = sorted.df.queryExecution.executedPlan.toString.toLowerCase
+    assert(!plan.contains("rangepartitioning"), plan)
+    assert(plan.contains("shufflepartitionidpassthrough"), plan)
+    // with coalescing off, the splits spread the rows over every shuffle
+    // partition (a placement that sent all rows to one partition would
+    // still sort correctly, so the order pins alone cannot see it)
+    val sizes = coalescing(on = false)(t.sortHilbert().df
+      .groupBy(spark_partition_id()).count().collect().map(_.getLong(1)))
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(sizes.length == n && sizes.max <= 2 * 2000 / n, sizes.toSeq)
+  }
+
   test("quadkey: CRS gate + sort") {
     val t = pointsTable(100)
     val q = t.addQuadkey(zoom = 5)

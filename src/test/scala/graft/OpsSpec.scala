@@ -1230,6 +1230,14 @@ class OpsSpec extends AnyFunSuite {
       == Seq("lo", "w", "est"))
   }
 
+  test("bpe: a pair weight driven below zero fails loudly") {
+    assert(graft.ops.Bpe.nextWeight(("a", "b"), 5L, -5L) == 0L)
+    assert(graft.ops.Bpe.nextWeight(("a", "b"), 0L, 3L) == 3L)
+    val e = intercept[IllegalStateException](
+      graft.ops.Bpe.nextWeight(("a", "b"), 2L, -3L))
+    assert(e.getMessage.contains("underflow"))
+  }
+
   test("bpe: exhaustion stops early; non-alnum words are excluded") {
     // single-char words have no adjacent pairs -> zero merges
     val single = Seq("a b c a b").toDF("text")

@@ -31,22 +31,34 @@ class PartitionPruneSpec extends AnyFunSuite {
     * cell-count / soundness / refusal assertions stay strict.
     */
   private val cpuBean = java.lang.management.ManagementFactory.getThreadMXBean
+  /** Current-thread CPU ns; fails at once where the JVM reports -1
+    * (unsupported, or supported but disabled), which would otherwise
+    * make every budget vacuous and the busy spin below endless.
+    */
+  private def cpuNowNs(): Long = {
+    val t = cpuBean.getCurrentThreadCpuTime
+    assert(t >= 0, "thread CPU time is unsupported or disabled " +
+      s"(ThreadMXBean returned $t)")
+    t
+  }
   private def cpuMs[T](body: => T): (T, Double) = {
-    val t0 = cpuBean.getCurrentThreadCpuTime
+    val t0 = cpuNowNs()
     val r = body
-    (r, (cpuBean.getCurrentThreadCpuTime - t0) / 1e6)
+    (r, (cpuNowNs() - t0) / 1e6)
   }
 
   test("cpu-time budget instrument is live: measures compute, not wall") {
     assert(cpuBean.isCurrentThreadCpuTimeSupported,
       "ThreadMXBean CPU time unsupported — budget assertions would be vacuous")
+    assert(cpuBean.isThreadCpuTimeEnabled,
+      "ThreadMXBean CPU time disabled — budget assertions would be vacuous")
     // negative pin: a deliberate ~100 ms busy spin MUST register as CPU,
     // so an artificially exponentialized covering (pure compute) cannot
     // hide from the budgets below the way it could from a quiet wall
     val (_, ms) = cpuMs {
       var x = 0L
-      val until = cpuBean.getCurrentThreadCpuTime + 100L * 1000000L
-      while (cpuBean.getCurrentThreadCpuTime < until) { x += 1 }
+      val until = cpuNowNs() + 100L * 1000000L
+      while (cpuNowNs() < until) { x += 1 }
       x
     }
     assert(ms >= 80.0, f"busy spin of 100 ms CPU measured only $ms%.1f ms")
@@ -177,7 +189,7 @@ class PartitionPruneSpec extends AnyFunSuite {
       "holds at high res, pole neighborhoods, and antimeridian edges; " +
       "planning time bounded") {
     val rnd = new scala.util.Random(20260816L)
-    val cpu0 = cpuBean.getCurrentThreadCpuTime
+    val cpu0 = cpuNowNs()
     var hits = 0
     // random interior points of random boxes: every point's cell must be
     // in the covering whenever a covering is returned at all
@@ -235,7 +247,7 @@ class PartitionPruneSpec extends AnyFunSuite {
         assert(keys.contains(cell), s"hier cell $cell ($py,$px) missing")
       }
     }
-    val sec = (cpuBean.getCurrentThreadCpuTime - cpu0) / 1e9
+    val sec = (cpuNowNs() - cpu0) / 1e9
     assert(sec < 30.0,
       f"covering planning burned $sec%.1f s CPU — not interactive")
   }
