@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.geom._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-level evaluation helpers for the geo expressions. Kept as an
@@ -29,11 +31,24 @@ object GeoEval {
     case g => Ops.centroid(g).y
   }
 
-  // envelope accessors
-  def stXMin(wkb: Array[Byte]): Double = Wkb.read(wkb).envelope._1
-  def stYMin(wkb: Array[Byte]): Double = Wkb.read(wkb).envelope._2
-  def stXMax(wkb: Array[Byte]): Double = Wkb.read(wkb).envelope._3
-  def stYMax(wkb: Array[Byte]): Double = Wkb.read(wkb).envelope._4
+  /** The one envelope decoder: (xmin, ymin, xmax, ymax), NaNs if empty. */
+  def stEnvelope(wkb: Array[Byte]): InternalRow = {
+    val (x0, y0, x1, y1) = Wkb.read(wkb).envelope
+    new GenericInternalRow(Array[Any](x0, y0, x1, y1))
+  }
+
+  /** Whether envelope `env` (an [[stEnvelope]] row) meets the closed
+    * box, in Spark's double order: `xmax >= bxmin`, `xmin <= bxmax`,
+    * `ymax >= bymin`, `ymin <= bymax`, with NaN above every double.
+    */
+  def envelopeInBox(env: InternalRow, xmin: Double, ymin: Double,
+      xmax: Double, ymax: Double): Boolean = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    compareDoubles(env.getDouble(2), xmin) >= 0 &&
+      compareDoubles(env.getDouble(0), xmax) <= 0 &&
+      compareDoubles(env.getDouble(3), ymin) >= 0 &&
+      compareDoubles(env.getDouble(1), ymax) <= 0
+  }
 
   def stCentroid(wkb: Array[Byte]): Array[Byte] =
     Wkb.write(Ops.centroid(Wkb.read(wkb)))
@@ -46,15 +61,6 @@ object GeoEval {
 
   def stContains(a: Array[Byte], b: Array[Byte]): Boolean =
     Ops.contains(Wkb.read(a), Wkb.read(b))
-
-  /** bbox "slow path": geometry envelope vs literal envelope
-    * (reference `core/extract.py:576-579`).
-    */
-  def envIntersects(wkb: Array[Byte], x0: Double, y0: Double,
-      x1: Double, y1: Double): Boolean = {
-    val (gx0, gy0, gx1, gy1) = Wkb.read(wkb).envelope
-    !(gx0 > x1 || x0 > gx1 || gy0 > y1 || y0 > gy1)
-  }
 
   // codecs
   def stAsText(wkb: Array[Byte]): UTF8String =
@@ -89,18 +95,6 @@ object GeoEval {
     Wkb.write(Proj.transformGeom(Wkb.read(wkb), from.toString, to.toString))
 
   // spatial keys
-  def hilbert(wkb: Array[Byte], xmin: Double, ymin: Double,
-      xmax: Double, ymax: Double): Long = {
-    val g = Wkb.read(wkb)
-    val c = g match {
-      case p: Point => p
-      case _ =>
-        val (x0, y0, x1, y1) = g.envelope
-        Point((x0 + x1) / 2, (y0 + y1) / 2)
-    }
-    SpatialKey.hilbert(c.x, c.y, xmin, ymin, xmax, ymax)
-  }
-
   def hilbertXY(x: Double, y: Double, xmin: Double, ymin: Double,
       xmax: Double, ymax: Double): Long =
     SpatialKey.hilbert(x, y, xmin, ymin, xmax, ymax)
@@ -117,14 +111,6 @@ object GeoEval {
 
   def quadkeyLonLat(lon: Double, lat: Double, zoom: Int): UTF8String =
     UTF8String.fromString(SpatialKey.quadkey(lon, lat, zoom))
-
-  /** Quadkey of geometry: bbox midpoint, like the reference
-    * (`core/add_quadkey_column.py` midpoint-of-bbox rule).
-    */
-  def quadkeyGeom(wkb: Array[Byte], zoom: Int): UTF8String = {
-    val (x0, y0, x1, y1) = Wkb.read(wkb).envelope
-    UTF8String.fromString(SpatialKey.quadkey((x0 + x1) / 2, (y0 + y1) / 2, zoom))
-  }
 
   /** H3 cell hex string of (lat, lng) — the reference's
     * `h3_latlng_to_cell_string(lat, lng, res)` surface

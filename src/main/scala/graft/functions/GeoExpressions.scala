@@ -10,9 +10,26 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Catalyst expressions for the ST_* surface (SURVEY §2.8). All are
   * codegen-enabled via static calls into [[GeoEval]], keeping geometry
   * work inside whole-stage codegen (no Scala-closure UDF overhead).
+  * Everything derived from a geometry's envelope (the `st_xmin` family,
+  * the midpoint quadkey and Hilbert keys, the sort sketch, the bbox
+  * filter) is built over [[StEnvelope]]; there is no second envelope
+  * decoder.
   */
 object GeoExpressions {
   private val E = "graft.functions.GeoEval"
+
+  /** Java source for the double constant `d`. NaN and the infinities
+    * have no Java literal, and bounds read from data can be NaN (an
+    * empty geometry's envelope), so they are spelled as `Double` fields.
+    */
+  private def javaDouble(d: Double): String =
+    if (d.isNaN) "Double.NaN"
+    else if (d.isInfinite) (if (d > 0) "Double.POSITIVE_INFINITY" else "Double.NEGATIVE_INFINITY")
+    else s"${d}D"
+
+  /** Java source for four fixed key bounds, as trailing call arguments. */
+  private def boundsArgs(xmin: Double, ymin: Double, xmax: Double, ymax: Double): String =
+    Seq(xmin, ymin, xmax, ymax).map(javaDouble).mkString(", ")
 
   abstract class GeoUnary extends UnaryExpression with Serializable
       with ImplicitCastInputTypes {
@@ -46,36 +63,45 @@ object GeoExpressions {
     override protected def withNewChildInternal(c: Expression): StY = copy(c)
   }
 
-  case class StXMin(child: Expression) extends GeoUnary {
-    def evalMethod = "stXMin"
-    override def dataType: DataType = DoubleType
+  /** The geometry's envelope as `struct<xmin, ymin, xmax, ymax>`, one
+    * WKB decode per row; null for a null geometry, NaN fields for an
+    * empty one. The bounds functions, the envelope-midpoint keys, the
+    * Hilbert sort sketch and the bbox filter all read its fields, and a
+    * projection's subexpression elimination evaluates it once per row
+    * however many of them the projection holds.
+    */
+  case class StEnvelope(child: Expression) extends GeoUnary {
+    def evalMethod = "stEnvelope"
+    override def dataType: DataType = StEnvelope.Type
     override protected def nullSafeEval(v: Any): Any =
-      GeoEval.stXMin(v.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(c: Expression): StXMin = copy(c)
+      GeoEval.stEnvelope(v.asInstanceOf[Array[Byte]])
+    override protected def withNewChildInternal(c: Expression): StEnvelope = copy(c)
   }
 
-  case class StYMin(child: Expression) extends GeoUnary {
-    def evalMethod = "stYMin"
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(v: Any): Any =
-      GeoEval.stYMin(v.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(c: Expression): StYMin = copy(c)
+  object StEnvelope {
+    val Fields: Seq[String] = Seq("xmin", "ymin", "xmax", "ymax")
+    val Type: StructType =
+      StructType(Fields.map(StructField(_, DoubleType, nullable = false)))
   }
 
-  case class StXMax(child: Expression) extends GeoUnary {
-    def evalMethod = "stXMax"
-    override def dataType: DataType = DoubleType
+  /** Whether the envelope struct `child` (an [[StEnvelope]]) meets the
+    * closed box `(xmin, ymin, xmax, ymax)`, compared in Spark's double
+    * order (NaN above every double) like the four plain comparisons
+    * `GeoTable.filterBbox` builds over a covering, so an empty
+    * geometry's NaN envelope never matches. One predicate over one
+    * envelope: a Filter has no subexpression elimination, and four field
+    * comparisons would decode the WKB once each.
+    */
+  case class EnvelopeInBox(child: Expression, xmin: Double, ymin: Double,
+      xmax: Double, ymax: Double) extends UnaryExpression with Predicate {
+    override def nullIntolerant: Boolean = true
     override protected def nullSafeEval(v: Any): Any =
-      GeoEval.stXMax(v.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(c: Expression): StXMax = copy(c)
-  }
-
-  case class StYMax(child: Expression) extends GeoUnary {
-    def evalMethod = "stYMax"
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(v: Any): Any =
-      GeoEval.stYMax(v.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(c: Expression): StYMax = copy(c)
+      GeoEval.envelopeInBox(v.asInstanceOf[InternalRow], xmin, ymin, xmax, ymax)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c =>
+        s"$E.envelopeInBox($c, ${boundsArgs(xmin, ymin, xmax, ymax)})")
+    override protected def withNewChildInternal(c: Expression): EnvelopeInBox =
+      copy(child = c)
   }
 
   case class StCentroid(child: Expression) extends GeoUnary {
@@ -284,39 +310,6 @@ object GeoExpressions {
       copy(l, r)
   }
 
-  /** Envelope-vs-literal-envelope test — the reference's spatial filter
-    * "slow path" when no bbox column exists (`core/extract.py:576-579`).
-    */
-  case class EnvelopeIntersects(child: Expression, x0: Double, y0: Double,
-      x1: Double, y1: Double) extends UnaryExpression with Predicate with ImplicitCastInputTypes {
-    override def inputTypes: Seq[DataType] = Seq(BinaryType)
-    override def nullIntolerant: Boolean = true
-    override protected def nullSafeEval(v: Any): Any =
-      GeoEval.envIntersects(v.asInstanceOf[Array[Byte]], x0, y0, x1, y1)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$E.envIntersects($c, $x0, $y0, $x1, $y1)")
-    override protected def withNewChildInternal(c: Expression): EnvelopeIntersects =
-      copy(child = c)
-  }
-
-  /** Hilbert index of a geometry over dataset bounds fixed at plan time —
-    * phase 2 of the reference's two-phase hilbert sort
-    * (`core/hilbert_order.py:80-113`).
-    */
-  case class HilbertIndex(child: Expression, xmin: Double, ymin: Double,
-      xmax: Double, ymax: Double) extends UnaryExpression
-      with ImplicitCastInputTypes {
-    override def inputTypes: Seq[DataType] = Seq(BinaryType)
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      GeoEval.hilbert(v.asInstanceOf[Array[Byte]], xmin, ymin, xmax, ymax)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$E.hilbert($c, $xmin, $ymin, $xmax, $ymax)")
-    override protected def withNewChildInternal(c: Expression): HilbertIndex =
-      copy(child = c)
-  }
-
   /** Output partition of a Hilbert key under ascending split keys: the
     * number of splits below the key, so partition i holds the keys in
     * (splits(i-1), splits(i)] — `RangePartitioner`'s placement rule. A
@@ -344,7 +337,11 @@ object GeoExpressions {
       copy(child = c)
   }
 
-  /** Hilbert index of raw x/y columns (geometry-free fast path). */
+  /** Hilbert index of x/y columns over bounds fixed at plan time — phase
+    * 2 of the reference's two-phase hilbert sort
+    * (`core/hilbert_order.py:80-113`); a geometry's key is this over its
+    * [[StEnvelope]] midpoint.
+    */
   case class HilbertIndexXY(left: Expression, right: Expression,
       xmin: Double, ymin: Double, xmax: Double, ymax: Double)
       extends BinaryExpression
@@ -357,7 +354,7 @@ object GeoExpressions {
         xmin, ymin, xmax, ymax)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, (x, y) =>
-        s"$E.hilbertXY($x, $y, $xmin, $ymin, $xmax, $ymax)")
+        s"$E.hilbertXY($x, $y, ${boundsArgs(xmin, ymin, xmax, ymax)})")
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(l, r)
   }
@@ -374,13 +371,14 @@ object GeoExpressions {
         xmin, ymin, xmax, ymax)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, (x, y) =>
-        s"$E.mortonXY($x, $y, $xmin, $ymin, $xmax, $ymax)")
+        s"$E.mortonXY($x, $y, ${boundsArgs(xmin, ymin, xmax, ymax)})")
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(l, r)
   }
 
   /** Quadkey from lon/lat at fixed zoom (reference registers exactly this
-    * as its one UDF, `core/add_quadkey_column.py:171-235`).
+    * as its one UDF, `core/add_quadkey_column.py:171-235`); a geometry's
+    * quadkey is this over its [[StEnvelope]] midpoint.
     */
   case class QuadkeyLonLat(left: Expression, right: Expression, zoom: Int)
       extends BinaryExpression
@@ -394,19 +392,6 @@ object GeoExpressions {
       defineCodeGen(ctx, ev, (lon, lat) => s"$E.quadkeyLonLat($lon, $lat, $zoom)")
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(l, r)
-  }
-
-  case class QuadkeyGeom(child: Expression, zoom: Int) extends UnaryExpression
-      with ImplicitCastInputTypes {
-    override def inputTypes: Seq[DataType] = Seq(BinaryType)
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = StringType
-    override protected def nullSafeEval(v: Any): Any =
-      GeoEval.quadkeyGeom(v.asInstanceOf[Array[Byte]], zoom)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$E.quadkeyGeom($c, $zoom)")
-    override protected def withNewChildInternal(c: Expression): QuadkeyGeom =
-      copy(child = c)
   }
 
   /** H3 cell string from (lat, lng) at a fixed resolution — the exact

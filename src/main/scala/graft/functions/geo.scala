@@ -2,22 +2,38 @@ package graft.functions
 
 import graft.geom.{Geom, Wkb}
 import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetStructField}
 import org.apache.spark.sql.functions.lit
 import GeoExpressions._
 
 /** Column-facing geo function surface (the `ST_*` set of SURVEY §2.8),
   * plus SQL registration so `spark.sql("... st_x(geom) ...")` works.
+  * The bounds functions and the geometry keys are field reads of one
+  * [[StEnvelope]]: each is a plain expression over the same envelope,
+  * so a projection that uses several of them decodes the WKB once.
   */
 object geo {
   import GraftBridge.{column => col, expression => ex}
 
+  /** Field `i` (in [[StEnvelope.Fields]] order) of `g`'s envelope. */
+  private def envField(g: Expression, i: Int): Expression =
+    GetStructField(StEnvelope(g), i, Some(StEnvelope.Fields(i)))
+
+  /** Envelope midpoint, the anchor of the quadkey and Hilbert keys
+    * (reference `core/add_quadkey_column.py` midpoint-of-bbox rule). A
+    * point's midpoint is the point itself; past |8.9e307| it overflows
+    * to ±Infinity, which both keys clamp to the point's own edge cell.
+    */
+  private def midpoint(g: Column): (Column, Column) =
+    ((st_xmin(g) + st_xmax(g)) / 2.0, (st_ymin(g) + st_ymax(g)) / 2.0)
+
   def st_point(x: Column, y: Column): Column = col(StPoint(ex(x), ex(y)))
   def st_x(g: Column): Column = col(StX(ex(g)))
   def st_y(g: Column): Column = col(StY(ex(g)))
-  def st_xmin(g: Column): Column = col(StXMin(ex(g)))
-  def st_ymin(g: Column): Column = col(StYMin(ex(g)))
-  def st_xmax(g: Column): Column = col(StXMax(ex(g)))
-  def st_ymax(g: Column): Column = col(StYMax(ex(g)))
+  def st_xmin(g: Column): Column = col(envField(ex(g), 0))
+  def st_ymin(g: Column): Column = col(envField(ex(g), 1))
+  def st_xmax(g: Column): Column = col(envField(ex(g), 2))
+  def st_ymax(g: Column): Column = col(envField(ex(g), 3))
   def st_centroid(g: Column): Column = col(StCentroid(ex(g)))
   def st_astext(g: Column): Column = col(StAsText(ex(g)))
   def st_geomfromtext(s: Column): Column = col(StGeomFromText(ex(s)))
@@ -36,10 +52,11 @@ object geo {
   def st_distance(a: Column, b: Column): Column = col(StDistance(ex(a), ex(b)))
   def st_intersects(a: Column, b: Column): Column = col(StIntersects(ex(a), ex(b)))
   def st_contains(a: Column, b: Column): Column = col(StContains(ex(a), ex(b)))
-  def envelope_intersects(g: Column, x0: Double, y0: Double, x1: Double,
-      y1: Double): Column = col(EnvelopeIntersects(ex(g), x0, y0, x1, y1))
   def hilbert_index(g: Column, xmin: Double, ymin: Double, xmax: Double,
-      ymax: Double): Column = col(HilbertIndex(ex(g), xmin, ymin, xmax, ymax))
+      ymax: Double): Column = {
+    val (x, y) = midpoint(g)
+    hilbert_xy(x, y, xmin, ymin, xmax, ymax)
+  }
   def hilbert_bucket(key: Column, splits: Array[Long]): Column =
     col(HilbertBucket(ex(key), splits))
   def hilbert_xy(x: Column, y: Column, xmin: Double, ymin: Double,
@@ -50,7 +67,10 @@ object geo {
     col(MortonIndexXY(ex(x), ex(y), xmin, ymin, xmax, ymax))
   def quadkey(lon: Column, lat: Column, zoom: Int): Column =
     col(QuadkeyLonLat(ex(lon), ex(lat), zoom))
-  def quadkey_geom(g: Column, zoom: Int): Column = col(QuadkeyGeom(ex(g), zoom))
+  def quadkey_geom(g: Column, zoom: Int): Column = {
+    val (x, y) = midpoint(g)
+    quadkey(x, y, zoom)
+  }
   def h3_latlng_to_cell_string(lat: Column, lng: Column, res: Int): Column =
     col(H3LatLng(ex(lat), ex(lng), res))
   def h3_geom(g: Column, res: Int): Column = col(H3Geom(ex(g), res))
@@ -75,16 +95,15 @@ object geo {
   /** Register SQL names (st_x, st_intersects, ...) on a session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def one(name: String, b: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-        => org.apache.spark.sql.catalyst.expressions.Expression): Unit =
+    def one(name: String, b: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, b, "built-in")
     one("st_point", es => StPoint(es(0), es(1)))
     one("st_x", es => StX(es.head))
     one("st_y", es => StY(es.head))
-    one("st_xmin", es => StXMin(es.head))
-    one("st_ymin", es => StYMin(es.head))
-    one("st_xmax", es => StXMax(es.head))
-    one("st_ymax", es => StYMax(es.head))
+    one("st_xmin", es => envField(es.head, 0))
+    one("st_ymin", es => envField(es.head, 1))
+    one("st_xmax", es => envField(es.head, 2))
+    one("st_ymax", es => envField(es.head, 3))
     one("st_centroid", es => StCentroid(es.head))
     one("st_astext", es => StAsText(es.head))
     one("st_geomfromtext", es => StGeomFromText(es.head))

@@ -12,11 +12,6 @@ object Ops {
 
   // ---- envelope ---------------------------------------------------------
 
-  def xmin(g: Geom): Double = g.envelope._1
-  def ymin(g: Geom): Double = g.envelope._2
-  def xmax(g: Geom): Double = g.envelope._3
-  def ymax(g: Geom): Double = g.envelope._4
-
   def envelopesOverlap(a: Geom, b: Geom): Boolean = {
     val (ax0, ay0, ax1, ay1) = a.envelope
     val (bx0, by0, bx1, by1) = b.envelope

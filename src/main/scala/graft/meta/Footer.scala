@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageType
 import scala.jdk.CollectionConverters._
 
 /** Footer-only parquet utilities (reference `core/duckdb_metadata.py` /
@@ -174,26 +175,7 @@ object Footer {
     val (dirs0, files) = firstLevel.partition(p =>
       java.nio.file.Files.isDirectory(p))
     val dirs = dirs0.filterNot(d => hiddenName(d.getFileName.toString))
-    val par = math.min(32, Runtime.getRuntime.availableProcessors)
-    val fromDirs: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (dirs.sizeIs <= 4 || par <= 1) dirs.flatMap(walkOne)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-        try {
-          dirs.map { d =>
-            pool.submit(new java.util.concurrent.Callable[
-              Seq[org.apache.hadoop.fs.FileStatus]] {
-              override def call() = walkOne(d)
-            })
-          }.flatMap { f =>
-            try f.get()
-            catch {
-              case ee: java.util.concurrent.ExecutionException
-                if ee.getCause != null => throw ee.getCause
-            }
-          }
-        } finally pool.shutdownNow()
-      }
+    val fromDirs = fanOut(dirs, serialUpTo = 4)(walkOne).flatten
     val fromFiles = files.flatMap { f =>
       val name = f.getFileName.toString
       if (isPartFileName(name) && java.nio.file.Files.isRegularFile(f))
@@ -243,26 +225,7 @@ object Footer {
     val first = fs.listStatus(p)
     val (dirs0, files) = first.partition(_.isDirectory)
     val dirs = dirs0.filterNot(d => hiddenName(d.getPath.getName)).toSeq
-    val par = math.min(32, Runtime.getRuntime.availableProcessors)
-    val fromDirs: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (dirs.sizeIs <= 4 || par <= 1) dirs.flatMap(d => walkOne(d.getPath))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-        try {
-          dirs.map { d =>
-            pool.submit(new java.util.concurrent.Callable[
-              Seq[org.apache.hadoop.fs.FileStatus]] {
-              override def call() = walkOne(d.getPath)
-            })
-          }.flatMap { f =>
-            try f.get()
-            catch {
-              case ee: java.util.concurrent.ExecutionException
-                if ee.getCause != null => throw ee.getCause
-            }
-          }
-        } finally pool.shutdownNow()
-      }
+    val fromDirs = fanOut(dirs, serialUpTo = 4)(d => walkOne(d.getPath)).flatten
     val fromFiles = files.toSeq.filter { s =>
       val name = s.getPath.getName
       val part = isPartFileName(name)
@@ -543,24 +506,11 @@ object Footer {
   def withKeyValueMetadata(path: Path, extra: Map[String, String],
       conf: Configuration = newConf()): Unit = {
     val in = HadoopInputFile.fromPath(path, conf)
-    val footer = ParquetFileReader.open(in)
-    val (schema, existingKv) =
-      try {
-        val fm = footer.getFooter.getFileMetaData
-        (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap)
-      } finally footer.close()
-
+    val (schema, existingKv) = schemaAndKv(in)
     val tmp = new Path(path.getParent, s".${path.getName}.kvtmp")
-    val fs = path.getFileSystem(conf)
-    if (fs.exists(tmp)) fs.delete(tmp, false)
-    val writer = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(tmp, conf), schema,
-      ParquetFileWriter.Mode.CREATE,
-      128L * 1024 * 1024, 8 * 1024 * 1024)
-    writer.start()
-    writer.appendFile(in)
-    writer.end((existingKv ++ extra).asJava)
+    rewrite(in, tmp, schema, existingKv ++ extra, conf)
     // atomic-ish swap (reference base.py temp+rename)
+    val fs = path.getFileSystem(conf)
     fs.delete(path, false)
     if (!fs.rename(tmp, path))
       throw new java.io.IOException(s"rename $tmp -> $path failed")
@@ -577,14 +527,9 @@ object Footer {
     */
   def stripNativeGeoTypes(in: Path, out: Path,
       conf: Configuration = newConf()): Unit = {
-    import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
+    import org.apache.parquet.schema.{PrimitiveType, Type}
     val inFile = HadoopInputFile.fromPath(in, conf)
-    val reader = ParquetFileReader.open(inFile)
-    val (schema, kv) =
-      try {
-        val fm = reader.getFooter.getFileMetaData
-        (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap)
-      } finally reader.close()
+    val (schema, kv) = schemaAndKv(inFile)
     val fields: java.util.List[Type] = schema.getFields
     val stripped = new MessageType(schema.getName,
       fields.asScala.map {
@@ -595,14 +540,7 @@ object Footer {
           new PrimitiveType(p.getRepetition, p.getPrimitiveTypeName, p.getName)
         case t => t
       }.asJava)
-    val fs = out.getFileSystem(conf)
-    if (fs.exists(out)) fs.delete(out, false)
-    val writer = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(out, conf), stripped,
-      ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
-    writer.start()
-    writer.appendFile(inFile)
-    writer.end(kv.asJava)
+    rewrite(inFile, out, stripped, kv, conf)
   }
 
   /** Inverse of [[stripNativeGeoTypes]] — upgrade a WKB GeoParquet file
@@ -633,12 +571,9 @@ object Footer {
       crs: Option[String] = None,
       geographyAlgorithm: Option[String] = None,
       conf: Configuration = newConf()): Unit = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
     val inFile = HadoopInputFile.fromPath(in, conf)
-    val reader = ParquetFileReader.open(inFile)
-    val schema =
-      try reader.getFooter.getFileMetaData.getSchema
-      finally reader.close()
+    val schema = schemaAndKv(inFile)._1
     val fields: java.util.List[Type] = schema.getFields
     var found = false
     val upgraded = new MessageType(schema.getName,
@@ -662,41 +597,56 @@ object Footer {
         case t => t
       }.asJava)
     require(found, s"geometry column $geomCol not found in schema")
+    rewrite(inFile, out, upgraded, kv, conf)
+  }
+
+  /** Schema and key-value metadata from the footer of `in`. */
+  private def schemaAndKv(in: HadoopInputFile): (MessageType, Map[String, String]) = {
+    val reader = ParquetFileReader.open(in)
+    try {
+      val fm = reader.getFooter.getFileMetaData
+      (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap)
+    } finally reader.close()
+  }
+
+  /** Write `out` (replacing it) as the row groups of `in`, byte-copied
+    * (appendFile, never decoded), under `schema` and with `kv` as the
+    * whole key-value metadata: the one copy behind
+    * [[withKeyValueMetadata]], [[stripNativeGeoTypes]] and
+    * [[addNativeGeoTypes]].
+    */
+  private def rewrite(in: HadoopInputFile, out: Path, schema: MessageType,
+      kv: Map[String, String], conf: Configuration): Unit = {
     val fs = out.getFileSystem(conf)
     if (fs.exists(out)) fs.delete(out, false)
     val writer = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(out, conf), upgraded,
+      HadoopOutputFile.fromPath(out, conf), schema,
       ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
     writer.start()
-    writer.appendFile(inFile)
+    writer.appendFile(in)
     writer.end(kv.asJava)
   }
 
-  /** Attach GeoParquet metadata to every part file of a written dataset.
-    * When `perFileBbox` is set, each part's `geo` carries its own bbox
-    * recomputed from that file's row-group stats (reference strips the
-    * global bbox per partition, `core/partition_common.py:657-706`).
+  /** `f` over `items` in order, fanned over a pool of at most 32 threads
+    * (each call an independent footer or listing round trip; serial, a
+    * wide layout pays O(files) driver stalls). Up to `serialUpTo` items,
+    * or on one core, it runs serially on the caller's thread. A failure
+    * rethrows the task's ORIGINAL exception, unwrapped from
+    * ExecutionException, exactly as the serial loop would throw it.
     */
-  /** Footer reads for a bounded list of parts, fanned over the same
-    * 32-thread pool discipline as [[writeGeoMetadata]] (each read is an
-    * independent footer open; serial, a wide layout pays O(files) driver
-    * stalls — ADVICE r16 on `inspect --verbose`). Order preserved;
-    * failures rethrow the ORIGINAL exception, matching the serial loop.
-    */
-  def readMany(paths: Seq[Path],
-      conf: Configuration = newConf()): Seq[FooterInfo] = {
+  private def fanOut[A, B](items: Seq[A], serialUpTo: Int = 1)(f: A => B): Seq[B] = {
     val par = math.min(32, Runtime.getRuntime.availableProcessors)
-    if (paths.sizeIs <= 1 || par <= 1) paths.map(read(_, conf))
+    if (items.sizeIs <= serialUpTo || par <= 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(par, paths.size))
+        math.min(par, items.size))
       try {
-        paths.map { p =>
-          pool.submit(new java.util.concurrent.Callable[FooterInfo] {
-            override def call(): FooterInfo = read(p, conf)
+        items.toVector.map { a =>
+          pool.submit(new java.util.concurrent.Callable[B] {
+            override def call(): B = f(a)
           })
-        }.map { f =>
-          try f.get()
+        }.map { fut =>
+          try fut.get()
           catch {
             case ee: java.util.concurrent.ExecutionException
               if ee.getCause != null => throw ee.getCause
@@ -706,6 +656,19 @@ object Footer {
     }
   }
 
+  /** Footer reads for a bounded list of parts, fanned out like
+    * [[writeGeoMetadata]] (ADVICE r16 on `inspect --verbose`). Order
+    * preserved; failures rethrow the ORIGINAL exception.
+    */
+  def readMany(paths: Seq[Path],
+      conf: Configuration = newConf()): Seq[FooterInfo] =
+    fanOut(paths)(read(_, conf))
+
+  /** Attach GeoParquet metadata to every part file of a written dataset.
+    * When `perFileBbox` is set, each part's `geo` carries its own bbox
+    * recomputed from that file's row-group stats (reference strips the
+    * global bbox per partition, `core/partition_common.py:657-706`).
+    */
   def writeGeoMetadata(path: String, geo: GeoMeta,
       perFileBboxCol: Option[String] = None,
       conf: Configuration = newConf(),
@@ -740,27 +703,8 @@ object Footer {
     // byte-copy + rename of its OWN file) and the loop is the write
     // path's scale bottleneck: serial, it cost ~59 ms/file — a
     // 30k-partition H3 layout stalled ~30 min in the footer pass alone
-    // (round-15 DirScale). A bounded pool turns that into wall/32;
-    // failures propagate via Future.get so the contract stays loud —
-    // unwrapped from ExecutionException so callers keep seeing the
-    // ORIGINAL exception type the serial loop used to throw.
-    val par = math.min(32, Runtime.getRuntime.availableProcessors)
-    if (files.sizeIs <= 1 || par <= 1) files.foreach(one)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      try {
-        files.map { p =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = one(p)
-          })
-        }.foreach { f =>
-          try f.get()
-          catch {
-            case ee: java.util.concurrent.ExecutionException
-              if ee.getCause != null => throw ee.getCause
-          }
-        }
-      } finally pool.shutdownNow()
-    }
+    // (round-15 DirScale). The bounded pool turns that into wall/32,
+    // and a failed file still fails the call with its own exception.
+    fanOut(files)(one)
   }
 }

@@ -165,29 +165,17 @@ object LogReg {
       round(lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z))), 6).as("score"))
   }
 
-  /** The feature build and scoring pass are pure per-row CPU (one md5
-    * per token); a production table's parquet splits spread that across
-    * the cluster, but a SINGLE small file (one row group) pins it all to
-    * one task. Round-robin repartition to the session parallelism when
-    * the scan has fewer splits — the exchange ships the raw text once,
-    * strictly cheaper than single-threading the hash work, and a no-op
-    * at real split counts.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
   private def trainCore(docs: DataFrame, textCol: String, label: Column,
       dims: Int, iters: Int): (DataFrame, Array[Long]) = {
     // ONE projection builds the cached sparse rows: the token_hash_counts
     // kernel hashes + counts per document inside whole-stage codegen
     // (bias entry included), so no token occurrence ever crosses a
     // shuffle — the round-5 explode + groupBy(doc,f) + collect_list
-    // build shuffled the corpus twice for the same multiset.
-    val prep = spread(docs.select(col("doc_id"),
+    // build shuffled the corpus twice for the same multiset. The hashing
+    // is pure per-row CPU, so a single-split scan is spread first.
+    val prep = Par.spread(docs.select(col("doc_id"),
         label.cast("double").as("y"),
-        coalesce(col(textCol), lit("")).as("__txt")))
+        coalesce(col(textCol), lit("")).as("__txt")), col("doc_id"))
       .select(col("doc_id"), col("y"),
         SketchExpressions.token_hash_counts(col("__txt"), dims).as("fs"))
       .persist(StorageLevel.MEMORY_AND_DISK)

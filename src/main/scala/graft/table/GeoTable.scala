@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.geo
+import graft.functions.GeoExpressions.{EnvelopeInBox, StEnvelope}
 import graft.geom.{GeoJson, Proj, Wkt}
 import graft.meta.{Footer, GeoColumnMeta, GeoMeta}
 
@@ -69,10 +70,6 @@ final case class GeoTable(
       geometryColumn = if (dropGeom) None else geometryColumn)
   }
 
-  /** bbox spatial filter: bbox-struct fast path when a covering column
-    * exists (Parquet min/max pruning applies), envelope-intersects slow
-    * path otherwise (`core/extract.py:568-579`).
-    */
   /** CRS-mismatch diagnosis for a bbox filter (reference
     * `core/extract.py:104-247` _warn_if_crs_mismatch): Some(message)
     * when the filter's units don't match the table CRS — a degree-sized
@@ -106,6 +103,14 @@ final case class GeoTable(
       try sketch(0).bounds catch { case _: Exception => None }
     }
 
+  /** bbox spatial filter (`core/extract.py:568-579`): an overlap test
+    * of each row's envelope against the closed box. With a covering it
+    * is four plain comparisons on the struct's fields, so Parquet min/max
+    * pruning applies; without one it is [[EnvelopeInBox]] over
+    * `st_envelope(geometry)`, one WKB decode per row. Both compare in
+    * Spark's double order, so a null or empty (NaN-envelope) geometry
+    * never matches on either path.
+    */
   def filterBbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double): GeoTable = {
     // warn rather than fail, like the reference (`_warn_if_crs_mismatch`,
     // core/extract.py:222-247): degree-shaped bbox against projected data
@@ -123,16 +128,15 @@ final case class GeoTable(
         "; if you get 0 results, use coordinates in the table's CRS")
     }
     // the covering named in meta may have been projected away
-    // (selectColumns exclude) — fall back to the slow path rather than
-    // resolve a missing column. Both paths also require the covering
+    // (selectColumns exclude) — fall back to the envelope rather than
+    // resolve a missing column. Both lookups also require the covering
     // SHAPE (struct with xmin/ymin/xmax/ymax): a payload column that
     // merely happens to be NAMED "bounds" would otherwise throw on
     // field extraction (string) or silently mis-filter (odd struct).
     def bboxShaped(name: String): Boolean =
       df.schema(name).dataType match {
         case s: org.apache.spark.sql.types.StructType =>
-          Seq("xmin", "ymin", "xmax", "ymax")
-            .forall(s.fieldNames.contains)
+          StEnvelope.Fields.forall(s.fieldNames.contains)
         case _ => false
       }
     val bboxCol = meta.primary.flatMap(_.coveringBbox)
@@ -144,7 +148,8 @@ final case class GeoTable(
         col(s"$b.xmax") >= xmin && col(s"$b.xmin") <= xmax &&
           col(s"$b.ymax") >= ymin && col(s"$b.ymin") <= ymax
       case None =>
-        geo.envelope_intersects(col(geomCol), xmin, ymin, xmax, ymax)
+        GraftBridge.column(EnvelopeInBox(
+          StEnvelope(GraftBridge.expression(col(geomCol))), xmin, ymin, xmax, ymax))
     }
     // Hive dataset written by our spatial partitioners: AND in the
     // partition-column covering conjunct so the scan gets
@@ -254,22 +259,35 @@ final case class GeoTable(
 
   // ---- sorts (SURVEY §2.6) ----------------------------------------------
 
-  /** One scan of the values [[bounds]] reads — the covering bbox fields
-    * when the table has them, else the geometry envelope — sized to pick
-    * `outPartitions` Hilbert splits (0: bounds only).
+  /** Each row's envelope as four columns xmin, ymin, xmax, ymax: the
+    * fields of the covering struct `covering` when given, else the
+    * fields of `st_envelope(geometry)`, which a projection's
+    * subexpression elimination evaluates once per row.
+    */
+  private def envelopeColumns(covering: Option[String]): Seq[Column] =
+    covering match {
+      case Some(b) => StEnvelope.Fields.map(f => col(s"$b.$f"))
+      case None =>
+        val g = col(geomCol)
+        Seq(geo.st_xmin(g), geo.st_ymin(g), geo.st_xmax(g), geo.st_ymax(g))
+    }
+
+  /** The four doubles [[bounds]] and the sort sketch read: the covering
+    * bbox fields when the table has them, else the geometry envelope.
+    */
+  private[graft] def sketchInput: DataFrame =
+    df.select(envelopeColumns(meta.primary.flatMap(_.coveringBbox)
+      .filter(df.columns.contains)).map(_.cast("double")): _*)
+
+  /** One scan of [[sketchInput]], sized to pick `outPartitions` Hilbert
+    * splits (0: bounds only).
     */
   private def sketch(outPartitions: Int): HilbertSketch.Sketch =
-    meta.primary.flatMap(_.coveringBbox).filter(df.columns.contains) match {
-      case Some(b) =>
-        HilbertSketch.run(df.select(Seq("xmin", "ymin", "xmax", "ymax")
-          .map(f => col(s"$b.$f").cast("double")): _*), wkb = false, outPartitions)
-      case None =>
-        HilbertSketch.run(df.select(col(geomCol)), wkb = true, outPartitions)
-    }
+    HilbertSketch.run(sketchInput, outPartitions)
 
   /** Dataset bounds (`core/common.py:3493-3573`) in one job: min/max of
     * the covering bbox fields when the table has them, else of the
-    * geometry envelope (each WKB decoded once), with Spark `min`/`max`
+    * `st_envelope` fields (each WKB decoded once), with Spark `min`/`max`
     * semantics — nulls skipped, NaN above every double. An empty (or
     * all-null-geometry) table reads as the world envelope, which keeps
     * the callers (sortHilbert, enrichSpatial, fix) total.
@@ -526,7 +544,7 @@ final case class GeoTable(
       .repartition(col("__qk"))
       .write.partitionBy("__qk").mode("overwrite").parquet(outPath)
     val sp = if (hadKey) None else {
-      val (rw, rh) = midpointReach() // quadkeyGeom anchors at envelope midpoint
+      val (rw, rh) = midpointReach() // quadkey_geom anchors at envelope midpoint
       Some(graft.meta.SpatialPartitioning("quadkey", "__qk",
         level = math.min(zoom, prefixChars), maxHalfW = rw, maxHalfH = rh))
     }

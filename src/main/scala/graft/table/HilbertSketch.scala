@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, Encoders}
-import graft.geom.{SpatialKey, Wkb}
+import graft.geom.SpatialKey
 
 /** The one scan behind [[GeoTable.bounds]] and [[GeoTable.sortHilbert]].
   * Per input partition it keeps the envelope bounds, the count of rows
@@ -88,14 +88,17 @@ private[table] object HilbertSketch {
     }
   }
 
-  /** Run the sketch over `proj`, which holds either the four double
-    * covering fields xmin, ymin, xmax, ymax (`wkb` false) or one WKB
-    * geometry column (`wkb` true, decoded once per row). The reservoir
-    * is sized for `outPartitions` splits like `RangePartitioner`'s
-    * sample — 20 keys per output partition, at most 1e6, oversampled 3x
-    * across the input partitions; 0 keeps no midpoints (bounds only).
+  /** Run the sketch over `proj`, whose four double columns are each
+    * row's envelope xmin, ymin, xmax, ymax: the covering fields or the
+    * `st_envelope` fields, so a geometry is decoded at most once per row
+    * and only in `proj`'s own projection. A row with a null field offers
+    * its other fields to the bounds but no midpoint to the reservoir.
+    * The reservoir is sized for `outPartitions` splits like
+    * `RangePartitioner`'s sample — 20 keys per output partition, at
+    * most 1e6, oversampled 3x across the input partitions; 0 keeps no
+    * midpoints (bounds only).
     */
-  def run(proj: DataFrame, wkb: Boolean, outPartitions: Int): Sketch = {
+  def run(proj: DataFrame, outPartitions: Int): Sketch = {
     val rdd = proj.queryExecution.toRdd
     val total = math.min(20.0 * outPartitions, 1e6)
     val k = if (outPartitions <= 0) 0
@@ -115,23 +118,15 @@ private[table] object HilbertSketch {
         offered += 1
       }
       rows.foreach { r =>
-        if (wkb) {
-          if (!r.isNullAt(0)) {
-            val (a, b, c, d) = Wkb.read(r.getBinary(0)).envelope
-            ext.add(0, a); ext.add(1, b); ext.add(2, c); ext.add(3, d)
-            offer((a + c) / 2, (b + d) / 2)
-          }
-        } else {
-          var complete = true
-          var i = 0
-          while (i < 4) {
-            if (r.isNullAt(i)) complete = false else ext.add(i, r.getDouble(i))
-            i += 1
-          }
-          if (complete)
-            offer((r.getDouble(0) + r.getDouble(2)) / 2,
-              (r.getDouble(1) + r.getDouble(3)) / 2)
+        var complete = true
+        var i = 0
+        while (i < 4) {
+          if (r.isNullAt(i)) complete = false else ext.add(i, r.getDouble(i))
+          i += 1
         }
+        if (complete)
+          offer((r.getDouble(0) + r.getDouble(2)) / 2,
+            (r.getDouble(1) + r.getDouble(3)) / 2)
       }
       val kept = math.min(offered, k.toLong).toInt
       Iterator(Part(ext, offered, xs.take(kept), ys.take(kept)))

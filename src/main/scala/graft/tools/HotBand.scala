@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * the media sibling of [[SkewCurve]] (text hot keys) and the round-13
   * verdict's one named scale hazard.
   *
-  * The ×10/×100/×1000 media tiers ([[ProfMediaScale]]) hold clique
+  * The ×10/×100/×1000 scaled media corpora ([[ScaleCurve]]) hold clique
   * density constant, so they can never observe the failure mode a real
   * web corpus guarantees: solid-color/black thumbnails collapse
   * millions of documents onto a handful of aHash band values, and black

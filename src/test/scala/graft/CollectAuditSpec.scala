@@ -63,10 +63,7 @@ class CollectAuditSpec extends AnyFunSuite {
     // registered SQL function (functions/text.scala) and the kernel the
     // generator's spec checks equivalence against.
     val allowed = Set("functions/SketchExpressions.scala",
-      "functions/text.scala",
-      // the A/B profiler's clearly-labeled eager comparison arm (the
-      // HotBand verbatim-legacy pattern) — not an exec path
-      "tools/ProfPairsGen.scala")
+      "functions/text.scala")
     val offenders = for {
       f <- scalaFiles
       if !allowed.exists(s => f.toString.endsWith(s))

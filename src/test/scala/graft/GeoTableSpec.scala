@@ -131,13 +131,16 @@ class GeoTableSpec extends AnyFunSuite {
     b.productIterator.map(v =>
       java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])).toSeq
 
-  /** `body` with AQE's shuffle-partition coalescing set to `on`. */
-  private def coalescing[T](on: Boolean)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+  /** `body` with session conf `key` set to `value`, restored after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val old = spark.conf.get(key)
-    spark.conf.set(key, on.toString)
+    spark.conf.set(key, value)
     try body finally spark.conf.set(key, old)
   }
+
+  /** `body` with AQE's shuffle-partition coalescing set to `on`. */
+  private def coalescing[T](on: Boolean)(body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", on.toString)(body)
 
   /** Hilbert keys of `df` in row order, over fixed bounds. */
   private def keySeq(df: org.apache.spark.sql.DataFrame,
@@ -230,6 +233,129 @@ class GeoTableSpec extends AnyFunSuite {
       .groupBy(spark_partition_id()).count().collect().map(_.getLong(1)))
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(sizes.length == n && sizes.max <= 2 * 2000 / n, sizes.toSeq)
+  }
+
+  test("bbox filter drops null and empty geometries on both paths") {
+    val df = Seq(Some("POLYGON EMPTY"), Some("POINT EMPTY"), Some("POINT (1 1)"),
+        Some("POINT (50 50)"), None).toDF("wkt")
+      .select(col("wkt"), geo.st_geomfromtext(col("wkt")).as("geometry"))
+    val t = GeoTable.fromDataFrame(df, "geometry")
+    for ((name, tt) <- Seq("envelope" -> t, "covering" -> t.addBbox()))
+      assert(tt.filterBbox(0, 0, 10, 10).df.select("wkt").as[String]
+        .collect().toSeq == Seq("POINT (1 1)"), name)
+  }
+
+  test("bbox filter: envelope and covering paths keep the same rows") {
+    // closed box edges, -0.0 against a 0.0 edge, a box inside a polygon,
+    // and misses on each side
+    val wkts = Seq("POINT (10 10)", "POINT (0 0)", "POINT (-0.0 3)",
+      "POINT (10.000001 5)", "POINT (5 -1e-9)", "LINESTRING (11 0, 12 12)",
+      "LINESTRING (-3 -3, 0 0)", "POLYGON ((-5 -5, 20 -5, 20 20, -5 20, -5 -5))",
+      "MULTIPOINT ((-1 -1), (11 11))", "POINT EMPTY")
+    val df = wkts.toDF("wkt")
+      .select(col("wkt"), geo.st_geomfromtext(col("wkt")).as("geometry"))
+    val t = GeoTable.fromDataFrame(df, "geometry")
+    val want = Seq("POINT (10 10)", "POINT (0 0)", "POINT (-0.0 3)",
+      "LINESTRING (-3 -3, 0 0)", "POLYGON ((-5 -5, 20 -5, 20 20, -5 20, -5 -5))",
+      "MULTIPOINT ((-1 -1), (11 11))")
+    def kept(tt: GeoTable, x1: Double, y1: Double): Seq[String] =
+      tt.filterBbox(0, 0, x1, y1).df.select("wkt").as[String].collect().toSeq
+    assert(kept(t, 10, 10) == want)
+    assert(kept(t.addBbox(), 10, 10) == want)
+    // a NaN box edge sits above every double in Spark's order on both paths
+    assert(kept(t, Double.NaN, Double.NaN) == kept(t.addBbox(), Double.NaN, Double.NaN))
+  }
+
+  test("envelope kernel: bounds, quadkey and Hilbert key equal the " +
+      "per-geometry envelope reference bit for bit") {
+    val wkts = Seq(None, Some("POINT EMPTY"), Some("POLYGON EMPTY"),
+      Some("GEOMETRYCOLLECTION EMPTY"), Some("POINT (0 0)"),
+      Some("POINT (-0.0 12.5)"), Some("POINT (-179.99 -85.1)"),
+      Some("POINT (1e300 -1e300)"), Some("POINT (1.7e308 -1.7e308)"),
+      Some("POINT (33.3333333333 44.4444444444)"),
+      Some("LINESTRING (0 0, 3 7.25)"),
+      Some("POLYGON ((10 10, 20 10, 20 25, 10 25, 10 10))"),
+      Some("POLYGON ((-0.1 -0.2, 0.3 -0.2, 0.3 0.1, -0.1 -0.2))"),
+      Some("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((40 -30, 41 -30, 41 -29, 40 -30)))"),
+      Some("GEOMETRYCOLLECTION (POINT (5 5), LINESTRING (-20 3, -17 9), " +
+        "POLYGON ((60 60, 61 60, 61 61, 60 60)))"))
+    val b = (-30.0, -40.0, 70.0, 65.0)
+    val g = col("geometry")
+    val rows = wkts.toDF("wkt").select(geo.st_geomfromtext(col("wkt")).as("geometry"))
+      .select(g, geo.st_xmin(g), geo.st_ymin(g), geo.st_xmax(g), geo.st_ymax(g),
+        geo.quadkey_geom(g, 13), geo.hilbert_index(g, b._1, b._2, b._3, b._4))
+      .collect()
+    assert(rows.length == wkts.length)
+    def raw(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    for (r <- rows) {
+      val got = (1 to 6).map(i => if (r.isNullAt(i)) None else Some(r.get(i) match {
+        case d: Double => raw(d)
+        case v => v
+      }))
+      val want: Seq[Option[Any]] = Option(r.getAs[Array[Byte]](0)) match {
+        case None => Seq.fill(6)(None)
+        case Some(wkb) =>
+          val geom = graft.geom.Wkb.read(wkb)
+          val (x0, y0, x1, y1) = geom.envelope
+          val (mx, my) = ((x0 + x1) / 2, (y0 + y1) / 2)
+          // the removed per-geometry Hilbert kernel keyed a point by itself
+          val (hx, hy) = geom match {
+            case graft.geom.Point(x, y) => (x, y)
+            case _ => (mx, my)
+          }
+          Seq(raw(x0), raw(y0), raw(x1), raw(y1),
+            graft.geom.SpatialKey.quadkey(mx, my, 13),
+            graft.geom.SpatialKey.hilbert(hx, hy, b._1, b._2, b._3, b._4)).map(Some(_))
+      }
+      assert(got == want, Option(r.getAs[Array[Byte]](0)).map(graft.geom.Wkb.read))
+    }
+    // the SQL names resolve to the same fields
+    wkts.toDF("wkt").createOrReplaceTempView("envelope_kernel_wkts")
+    val sql = spark.sql("SELECT st_xmin(g), st_ymin(g), st_xmax(g), st_ymax(g) " +
+      "FROM (SELECT st_geomfromtext(wkt) AS g FROM envelope_kernel_wkts)").collect()
+    assert(sql.map(r => (0 until 4).map(i =>
+        if (r.isNullAt(i)) None else Some(raw(r.getDouble(i))))).toSeq ==
+      rows.map(r => (1 to 4).map(i =>
+        if (r.isNullAt(i)) None else Some(raw(r.getDouble(i))))).toSeq)
+  }
+
+  /** Calls into `GeoEval` in the generated code of `df`'s physical plan,
+    * by method name; AQE off, so the plan holds its final codegen stages.
+    * Every stage must compile: a stage that does not runs interpreted,
+    * and its generated text would count calls that never run.
+    */
+  private def geoEvalCalls(df: => org.apache.spark.sql.DataFrame): Map[String, Int] =
+    withConf("spark.sql.adaptive.enabled", "false") {
+      val plan = df.queryExecution.executedPlan
+      plan.foreach {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+            .compile(w.doCodeGen()._2)
+        case _ =>
+      }
+      val code = org.apache.spark.sql.execution.debug.codegenString(plan)
+      assert(!code.contains("Wkb.read("), code)
+      "GeoEval\\.(\\w+)\\(".r.findAllMatchIn(code).map(_.group(1)).toSeq
+        .groupBy(identity).map { case (m, calls) => m -> calls.size }
+    }
+
+  test("geo_etl chain, sort sketch and bbox filter decode each WKB once per row") {
+    val in = tmpDir("one_decode")
+    // empty geometries make the sort bounds NaN, which the key stage
+    // must still compile
+    sortFixture(2000, empties = true).write(in)
+    val t = GeoTable.read(spark, in).addBbox().addQuadkey()
+    // GeoEval methods that never decode a WKB
+    val decodeFree = Set("hilbertXY", "quadkeyLonLat", "bucketOf", "envelopeInBox")
+    for ((name, df) <- Seq("chain" -> (() => t.sortHilbert().df),
+        "sketch" -> (() => t.sketchInput),
+        "sketch without covering" -> (() => GeoTable.read(spark, in).sketchInput),
+        "bbox filter without covering" ->
+          (() => GeoTable.read(spark, in).filterBbox(-10, -10, 10, 10).df))) {
+      val calls = geoEvalCalls(df())
+      assert(calls.get("stEnvelope").contains(1), s"$name: $calls")
+      assert((calls.keySet - "stEnvelope").subsetOf(decodeFree), s"$name: $calls")
+    }
   }
 
   test("quadkey: CRS gate + sort") {

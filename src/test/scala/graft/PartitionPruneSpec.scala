@@ -88,6 +88,20 @@ class PartitionPruneSpec extends AnyFunSuite {
   private def filesRead(df: org.apache.spark.sql.DataFrame): Long =
     df.select(input_file_name()).distinct().count()
 
+  /** ids of the rows under `path` whose geometry envelope meets the
+    * closed box, decided on the driver from the WKB: the pruning-free
+    * reference a pruned read must reproduce. Null and empty (NaN
+    * envelope) geometries never meet a box.
+    */
+  private def envelopeHits(path: String, x0: Double, y0: Double,
+      x1: Double, y1: Double): Set[Long] =
+    spark.read.parquet(path).select("id", "geometry").collect().collect {
+      case r if !r.isNullAt(1) && {
+          val (a, b, c, d) = graft.geom.Wkb.read(r.getAs[Array[Byte]](1)).envelope
+          c >= x0 && a <= x1 && d >= y0 && b <= y1
+        } => r.getLong(0)
+    }.toSet
+
   private def partitionFilterCount(df: org.apache.spark.sql.DataFrame): Int = {
     val s = df.queryExecution.executedPlan.toString
     "PartitionFilters: \\[[^\\]]".r.findAllIn(s).length
@@ -109,9 +123,7 @@ class PartitionPruneSpec extends AnyFunSuite {
     assert(prunedFiles < allFiles,
       s"pruning must read fewer files: $prunedFiles vs $allFiles")
     // result equivalence vs a metadata-free slow path on the same data
-    val want = spark.read.parquet(out)
-      .filter(geo.envelope_intersects(col("geometry"), -10, -10, 10, 10))
-      .select("id").collect().map(_.getLong(0)).toSet
+    val want = envelopeHits(out, -10, -10, 10, 10)
     val got = pruned.select("id").collect().map(_.getLong(0)).toSet
     assert(got == want, s"row mismatch: missing=${want -- got} extra=${got -- want}")
   }
@@ -129,9 +141,7 @@ class PartitionPruneSpec extends AnyFunSuite {
         (87.3, 12.7, 94.1, 19.9), (-180.0, -85.0, -140.0, -40.0))) {
       val got = t.filterBbox(x0, y0, x1, y1).df
         .select("id").collect().map(_.getLong(0)).toSet
-      val want = spark.read.parquet(out)
-        .filter(geo.envelope_intersects(col("geometry"), x0, y0, x1, y1))
-        .select("id").collect().map(_.getLong(0)).toSet
+      val want = envelopeHits(out, x0, y0, x1, y1)
       assert(got == want,
         s"bbox ($x0,$y0,$x1,$y1): missing=${want -- got} extra=${got -- want}")
     }
@@ -147,18 +157,14 @@ class PartitionPruneSpec extends AnyFunSuite {
     assert(partitionFilterCount(pruned) > 0,
       s"expected PartitionFilters:\n${pruned.queryExecution.executedPlan.toString.take(2500)}")
     assert(filesRead(pruned.select(input_file_name().as("f"))) < filesRead(t.df))
-    val want = spark.read.parquet(out)
-      .filter(geo.envelope_intersects(col("geometry"), 10, 10, 22, 22))
-      .select("id").collect().map(_.getLong(0)).toSet
+    val want = envelopeHits(out, 10, 10, 22, 22)
     val got = pruned.select("id").collect().map(_.getLong(0)).toSet
     assert(got == want, s"missing=${want -- got} extra=${got -- want}")
     // near-pole box (round-14: no longer a refusal — the lng pad is
     // capped at the full circle): rows must match with or without a
     // partition filter
     val polar = t.filterBbox(-170, 80, 170, 89).df
-    val wantPolar = spark.read.parquet(out)
-      .filter(geo.envelope_intersects(col("geometry"), -170, 80, 170, 89))
-      .count()
+    val wantPolar = envelopeHits(out, -170, 80, 170, 89).size
     assert(polar.count() == wantPolar)
   }
 
@@ -351,9 +357,7 @@ class PartitionPruneSpec extends AnyFunSuite {
     assert(partitionFilterCount(pruned) > 0,
       s"expected PartitionFilters:\n${pruned.queryExecution.executedPlan.toString.take(2500)}")
     assert(filesRead(pruned.select(input_file_name().as("f"))) < filesRead(t.df))
-    val want = spark.read.parquet(out)
-      .filter(geo.envelope_intersects(col("geometry"), -15, -15, 15, 15))
-      .select("id").collect().map(_.getLong(0)).toSet
+    val want = envelopeHits(out, -15, -15, 15, 15)
     val got = pruned.select("id").collect().map(_.getLong(0)).toSet
     assert(got == want, s"missing=${want -- got} extra=${got -- want}")
   }
@@ -368,9 +372,7 @@ class PartitionPruneSpec extends AnyFunSuite {
       "user-supplied key column must not claim pruning metadata")
     // still correct, just unpruned
     val got = t.filterBbox(-10, -10, 10, 10).df.count()
-    val want = spark.read.parquet(out)
-      .filter(geo.envelope_intersects(col("geometry"), -10, -10, 10, 10))
-      .count()
+    val want = envelopeHits(out, -10, -10, 10, 10).size
     assert(got == want)
   }
 
