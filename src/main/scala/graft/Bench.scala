@@ -531,14 +531,11 @@ object Bench {
     val note = if (fit < entries.size) s""","queries_note":"slowest $fit of ${entries.size}; full set in $outFile"""" else ""
     val compactLine =
       head + s""","queries":${entries.take(fit).mkString("{", ",", "}")}$note}"""
-    println(compactLine)
-    // Driver-parse contract (round-18, VERDICT r17 #2): every BENCH_rNN
-    // artifact since r05 recorded parsed:null because sbt's logger
-    // prefixes the println above with "[info] ". Additions only — the
-    // same compact line goes (a) to a bare sidecar file and (b) raw to
-    // fd 1 via FileDescriptor.out, which bypasses the logger's
-    // System.out redirection, so the tail capture carries one
-    // unprefixed JSON line whatever the logger does.
+    // Under sbt a println reaches stdout prefixed "[info] " by the
+    // logger, and a parser of the output's last line finds no JSON. The
+    // compact line goes (a) to a bare sidecar file and (b) raw to fd 1
+    // via FileDescriptor.out, which bypasses the logger's System.out
+    // redirection: exactly one unprefixed JSON line, in or out of sbt.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_line.json"), compactLine + "\n")
     catch { case _: Throwable => () }

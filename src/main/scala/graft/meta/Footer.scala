@@ -373,70 +373,72 @@ object Footer {
 
   def read(path: Path, conf: Configuration = newConf()): FooterInfo = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try {
-      val meta: ParquetMetadata = reader.getFooter
-      val fm = meta.getFileMetaData
-      val groups = meta.getBlocks.asScala.toSeq.map { b =>
-        val cols = b.getColumns.asScala.toSeq.map { c =>
-          val stats = Option(c.getStatistics)
-          c.getPath.toDotString -> ColumnStats(
-            codec = c.getCodec.name(),
-            compressedSize = c.getTotalSize,
-            uncompressedSize = c.getTotalUncompressedSize,
-            nullCount = stats.filter(_.isNumNullsSet).map(_.getNumNulls),
-            min = stats.filter(s => s.hasNonNullValue).map(_.genericGetMin),
-            max = stats.filter(s => s.hasNonNullValue).map(_.genericGetMax),
-            geoBbox = Option(c.getGeospatialStatistics)
-              .flatMap(gs => Option(gs.getBoundingBox))
-              .filter(_.isXYValid)
-              .map(b => (b.getXMin, b.getYMin, b.getXMax, b.getYMax)),
-            geoTypes = Option(c.getGeospatialStatistics)
-              .flatMap(gs => Option(gs.getGeospatialTypes))
-              .flatMap(gt => Option(gt.getTypes))
-              .map(_.asScala.map(_.toInt).toSet)
-              .filter(_.nonEmpty))
-        }.toMap
-        RowGroupInfo(b.getRowCount, b.getTotalByteSize, b.getCompressedSize, cols)
-      }
-      val fields = fm.getSchema.getFields.asScala.toSeq.map { f =>
-        val prim = f.isPrimitive
-        FieldInfo(
-          name = f.getName,
-          primitive = prim,
-          primitiveType =
-            if (prim) Some(f.asPrimitiveType().getPrimitiveTypeName.name())
-            else None,
-          repeated = f.isRepetition(
-            org.apache.parquet.schema.Type.Repetition.REPEATED),
-          logicalType =
-            Option(f.getLogicalTypeAnnotation).map(_.getClass.getSimpleName),
-          geoCrs = Option(f.getLogicalTypeAnnotation).flatMap {
-            case g: org.apache.parquet.schema.LogicalTypeAnnotation.GeometryLogicalTypeAnnotation =>
-              Option(g.getCrs).filter(_.nonEmpty)
-            case g: org.apache.parquet.schema.LogicalTypeAnnotation.GeographyLogicalTypeAnnotation =>
-              Option(g.getCrs).filter(_.nonEmpty)
-            case _ => None
-          },
-          geoAlgorithm = Option(f.getLogicalTypeAnnotation).collect {
-            case g: org.apache.parquet.schema.LogicalTypeAnnotation.GeographyLogicalTypeAnnotation =>
-              Option(g.getAlgorithm).map(_.name().toLowerCase)
-                .getOrElse("spherical")
-          },
-          groupFields =
-            if (prim) Seq.empty
-            else f.asGroupType().getFields.asScala.toSeq.map { c =>
-              c.getName -> (if (c.isPrimitive)
-                c.asPrimitiveType().getPrimitiveTypeName.name() else "GROUP")
-            })
-      }
-      FooterInfo(
-        rowCount = groups.map(_.rowCount).sum,
-        numRowGroups = groups.size,
-        keyValueMeta = fm.getKeyValueMetaData.asScala.toMap,
-        schemaFields = fields.map(_.name),
-        schemaInfo = fields,
-        rowGroups = groups)
-    } finally reader.close()
+    try info(reader.getFooter) finally reader.close()
+  }
+
+  /** [[FooterInfo]] of a footer already read. */
+  private def info(meta: ParquetMetadata): FooterInfo = {
+    val fm = meta.getFileMetaData
+    val groups = meta.getBlocks.asScala.toSeq.map { b =>
+      val cols = b.getColumns.asScala.toSeq.map { c =>
+        val stats = Option(c.getStatistics)
+        c.getPath.toDotString -> ColumnStats(
+          codec = c.getCodec.name(),
+          compressedSize = c.getTotalSize,
+          uncompressedSize = c.getTotalUncompressedSize,
+          nullCount = stats.filter(_.isNumNullsSet).map(_.getNumNulls),
+          min = stats.filter(s => s.hasNonNullValue).map(_.genericGetMin),
+          max = stats.filter(s => s.hasNonNullValue).map(_.genericGetMax),
+          geoBbox = Option(c.getGeospatialStatistics)
+            .flatMap(gs => Option(gs.getBoundingBox))
+            .filter(_.isXYValid)
+            .map(b => (b.getXMin, b.getYMin, b.getXMax, b.getYMax)),
+          geoTypes = Option(c.getGeospatialStatistics)
+            .flatMap(gs => Option(gs.getGeospatialTypes))
+            .flatMap(gt => Option(gt.getTypes))
+            .map(_.asScala.map(_.toInt).toSet)
+            .filter(_.nonEmpty))
+      }.toMap
+      RowGroupInfo(b.getRowCount, b.getTotalByteSize, b.getCompressedSize, cols)
+    }
+    val fields = fm.getSchema.getFields.asScala.toSeq.map { f =>
+      val prim = f.isPrimitive
+      FieldInfo(
+        name = f.getName,
+        primitive = prim,
+        primitiveType =
+          if (prim) Some(f.asPrimitiveType().getPrimitiveTypeName.name())
+          else None,
+        repeated = f.isRepetition(
+          org.apache.parquet.schema.Type.Repetition.REPEATED),
+        logicalType =
+          Option(f.getLogicalTypeAnnotation).map(_.getClass.getSimpleName),
+        geoCrs = Option(f.getLogicalTypeAnnotation).flatMap {
+          case g: org.apache.parquet.schema.LogicalTypeAnnotation.GeometryLogicalTypeAnnotation =>
+            Option(g.getCrs).filter(_.nonEmpty)
+          case g: org.apache.parquet.schema.LogicalTypeAnnotation.GeographyLogicalTypeAnnotation =>
+            Option(g.getCrs).filter(_.nonEmpty)
+          case _ => None
+        },
+        geoAlgorithm = Option(f.getLogicalTypeAnnotation).collect {
+          case g: org.apache.parquet.schema.LogicalTypeAnnotation.GeographyLogicalTypeAnnotation =>
+            Option(g.getAlgorithm).map(_.name().toLowerCase)
+              .getOrElse("spherical")
+        },
+        groupFields =
+          if (prim) Seq.empty
+          else f.asGroupType().getFields.asScala.toSeq.map { c =>
+            c.getName -> (if (c.isPrimitive)
+              c.asPrimitiveType().getPrimitiveTypeName.name() else "GROUP")
+          })
+    }
+    FooterInfo(
+      rowCount = groups.map(_.rowCount).sum,
+      numRowGroups = groups.size,
+      keyValueMeta = fm.getKeyValueMetaData.asScala.toMap,
+      schemaFields = fields.map(_.name),
+      schemaInfo = fields,
+      rowGroups = groups)
   }
 
   /** O(1) row count across all part files (no Spark job). */
@@ -448,10 +450,16 @@ object Footer {
     * no data scan.
     */
   def bboxFromStats(path: String, bboxCol: String,
-      conf: Configuration = newConf()): Option[(Double, Double, Double, Double)] = {
-    val infos = partFiles(path, conf).map(p => read(p, conf))
+      conf: Configuration = newConf()): Option[(Double, Double, Double, Double)] =
+    statsBbox(partFiles(path, conf).flatMap(p => read(p, conf).rowGroups), bboxCol)
+
+  /** The bbox the `bboxCol` struct's min/max statistics span over
+    * `groups`; None when any corner has no statistics.
+    */
+  private def statsBbox(groups: Seq[RowGroupInfo],
+      bboxCol: String): Option[(Double, Double, Double, Double)] = {
     def agg(corner: String, isMin: Boolean): Option[Double] = {
-      val vs = infos.flatMap(_.rowGroups).flatMap { rg =>
+      val vs = groups.flatMap { rg =>
         rg.columns.get(s"$bboxCol.$corner").flatMap(c => if (isMin) c.min else c.max)
           .collect {
             // FLOAT coverings are spec-legal (Checks accepts FLOAT or
@@ -504,12 +512,21 @@ object Footer {
     * page decode.
     */
   def withKeyValueMetadata(path: Path, extra: Map[String, String],
-      conf: Configuration = newConf()): Unit = {
-    val in = HadoopInputFile.fromPath(path, conf)
-    val (schema, existingKv) = schemaAndKv(in)
+      conf: Configuration = newConf()): Unit =
+    mergeKeyValues(path, conf)(_ => extra)
+
+  /** Rewrite `path` in place under its own schema, with `extra` (derived
+    * from the same footer) merged into its key-value metadata: one
+    * [[rewrite]] into a hidden temp file, then a delete-and-rename swap
+    * (reference base.py temp+rename).
+    */
+  private def mergeKeyValues(path: Path, conf: Configuration)(
+      extra: ParquetMetadata => Map[String, String]): Unit = {
     val tmp = new Path(path.getParent, s".${path.getName}.kvtmp")
-    rewrite(in, tmp, schema, existingKv ++ extra, conf)
-    // atomic-ish swap (reference base.py temp+rename)
+    rewrite(path, tmp, conf) { footer =>
+      val fm = footer.getFileMetaData
+      (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap ++ extra(footer))
+    }
     val fs = path.getFileSystem(conf)
     fs.delete(path, false)
     if (!fs.rename(tmp, path))
@@ -528,19 +545,21 @@ object Footer {
   def stripNativeGeoTypes(in: Path, out: Path,
       conf: Configuration = newConf()): Unit = {
     import org.apache.parquet.schema.{PrimitiveType, Type}
-    val inFile = HadoopInputFile.fromPath(in, conf)
-    val (schema, kv) = schemaAndKv(inFile)
-    val fields: java.util.List[Type] = schema.getFields
-    val stripped = new MessageType(schema.getName,
-      fields.asScala.map {
-        case p: PrimitiveType if Option(p.getLogicalTypeAnnotation).exists { lt =>
-            val n = lt.getClass.getSimpleName
-            n.contains("Geometry") || n.contains("Geography")
-          } =>
-          new PrimitiveType(p.getRepetition, p.getPrimitiveTypeName, p.getName)
-        case t => t
-      }.asJava)
-    rewrite(inFile, out, stripped, kv, conf)
+    rewrite(in, out, conf) { footer =>
+      val fm = footer.getFileMetaData
+      val schema = fm.getSchema
+      val fields: java.util.List[Type] = schema.getFields
+      val stripped = new MessageType(schema.getName,
+        fields.asScala.map {
+          case p: PrimitiveType if Option(p.getLogicalTypeAnnotation).exists { lt =>
+              val n = lt.getClass.getSimpleName
+              n.contains("Geometry") || n.contains("Geography")
+            } =>
+            new PrimitiveType(p.getRepetition, p.getPrimitiveTypeName, p.getName)
+          case t => t
+        }.asJava)
+      (stripped, fm.getKeyValueMetaData.asScala.toMap)
+    }
   }
 
   /** Inverse of [[stripNativeGeoTypes]] — upgrade a WKB GeoParquet file
@@ -572,59 +591,56 @@ object Footer {
       geographyAlgorithm: Option[String] = None,
       conf: Configuration = newConf()): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
-    val inFile = HadoopInputFile.fromPath(in, conf)
-    val schema = schemaAndKv(inFile)._1
-    val fields: java.util.List[Type] = schema.getFields
-    var found = false
-    val upgraded = new MessageType(schema.getName,
-      fields.asScala.map {
-        case p: PrimitiveType if p.getName == geomCol =>
-          require(p.getPrimitiveTypeName ==
-              PrimitiveType.PrimitiveTypeName.BINARY,
-            s"geometry column $geomCol must be BINARY WKB, found " +
-              p.getPrimitiveTypeName)
-          found = true
-          val ann = geographyAlgorithm match {
-            case Some(alg) => LogicalTypeAnnotation.geographyType(
-              crs.orNull,
-              org.apache.parquet.column.schema.EdgeInterpolationAlgorithm
-                .valueOf(alg.toUpperCase))
-            case None => LogicalTypeAnnotation.geometryType(crs.orNull)
-          }
-          org.apache.parquet.schema.Types
-            .primitive(p.getPrimitiveTypeName, p.getRepetition)
-            .as(ann).named(p.getName)
-        case t => t
-      }.asJava)
-    require(found, s"geometry column $geomCol not found in schema")
-    rewrite(inFile, out, upgraded, kv, conf)
-  }
-
-  /** Schema and key-value metadata from the footer of `in`. */
-  private def schemaAndKv(in: HadoopInputFile): (MessageType, Map[String, String]) = {
-    val reader = ParquetFileReader.open(in)
-    try {
-      val fm = reader.getFooter.getFileMetaData
-      (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap)
-    } finally reader.close()
+    rewrite(in, out, conf) { footer =>
+      val schema = footer.getFileMetaData.getSchema
+      val fields: java.util.List[Type] = schema.getFields
+      var found = false
+      val upgraded = new MessageType(schema.getName,
+        fields.asScala.map {
+          case p: PrimitiveType if p.getName == geomCol =>
+            require(p.getPrimitiveTypeName ==
+                PrimitiveType.PrimitiveTypeName.BINARY,
+              s"geometry column $geomCol must be BINARY WKB, found " +
+                p.getPrimitiveTypeName)
+            found = true
+            val ann = geographyAlgorithm match {
+              case Some(alg) => LogicalTypeAnnotation.geographyType(
+                crs.orNull,
+                org.apache.parquet.column.schema.EdgeInterpolationAlgorithm
+                  .valueOf(alg.toUpperCase))
+              case None => LogicalTypeAnnotation.geometryType(crs.orNull)
+            }
+            org.apache.parquet.schema.Types
+              .primitive(p.getPrimitiveTypeName, p.getRepetition)
+              .as(ann).named(p.getName)
+          case t => t
+        }.asJava)
+      require(found, s"geometry column $geomCol not found in schema")
+      (upgraded, kv)
+    }
   }
 
   /** Write `out` (replacing it) as the row groups of `in`, byte-copied
-    * (appendFile, never decoded), under `schema` and with `kv` as the
-    * whole key-value metadata: the one copy behind
-    * [[withKeyValueMetadata]], [[stripNativeGeoTypes]] and
-    * [[addNativeGeoTypes]].
+    * (never decoded), under the schema and whole key-value metadata
+    * `plan` derives from `in`'s footer: the one copy behind
+    * [[withKeyValueMetadata]], [[writeGeoMetadata]],
+    * [[stripNativeGeoTypes]] and [[addNativeGeoTypes]]. One reader
+    * supplies both the footer and the row groups, so `in` is opened once.
     */
-  private def rewrite(in: HadoopInputFile, out: Path, schema: MessageType,
-      kv: Map[String, String], conf: Configuration): Unit = {
-    val fs = out.getFileSystem(conf)
-    if (fs.exists(out)) fs.delete(out, false)
-    val writer = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(out, conf), schema,
-      ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
-    writer.start()
-    writer.appendFile(in)
-    writer.end(kv.asJava)
+  private def rewrite(in: Path, out: Path, conf: Configuration)(
+      plan: ParquetMetadata => (MessageType, Map[String, String])): Unit = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(in, conf))
+    try {
+      val (schema, kv) = plan(reader.getFooter)
+      val fs = out.getFileSystem(conf)
+      if (fs.exists(out)) fs.delete(out, false)
+      val writer = new ParquetFileWriter(
+        HadoopOutputFile.fromPath(out, conf), schema,
+        ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
+      writer.start()
+      reader.appendTo(writer)
+      writer.end(kv.asJava)
+    } finally reader.close()
   }
 
   /** `f` over `items` in order, fanned over a pool of at most 32 threads
@@ -673,17 +689,18 @@ object Footer {
       perFileBboxCol: Option[String] = None,
       conf: Configuration = newConf(),
       extra: Map[String, String] = Map.empty): Unit = {
-    def one(p: Path): Unit = {
+    // one reader per part: its footer's row-group stats give the
+    // per-file bbox, and the same reader feeds the byte copy
+    def one(p: Path): Unit = mergeKeyValues(p, conf) { footer =>
       val m = perFileBboxCol match {
         case Some(bcol) =>
-          val bb = bboxFromStats(p.toString, bcol, conf)
+          val bb = statsBbox(info(footer).rowGroups, bcol)
           geo.copy(columns = geo.columns.map { case (n, c) =>
             if (n == geo.primaryColumn) n -> c.copy(bbox = bb) else n -> c
           })
         case None => geo
       }
-      withKeyValueMetadata(p,
-        extra + (GeoMeta.FooterKey -> GeoMeta.toJson(m)), conf)
+      extra + (GeoMeta.FooterKey -> GeoMeta.toJson(m))
     }
     // dedupe by REAL path before fanning out: partFiles follows symlinks,
     // so one physical file reachable through two linked directories is

@@ -816,7 +816,8 @@ object Dedup {
     * join + one aggregate, both keyed on the id, and converges in
     * O(cluster diameter) rounds; dup clusters are shallow in practice,
     * so this is the standard corpus-scale formulation (no driver-side
-    * graph).
+    * graph). Throws IllegalStateException when `maxIter` rounds do not
+    * converge.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 20): DataFrame = {
@@ -875,13 +876,12 @@ object Dedup {
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"connectedComponents round $i converged=$converged")
     }
-    if (!converged) {
-      // partially-propagated labels would silently produce wrong
-      // cluster ids; surface it (clusters deeper than maxIter hops)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents did not converge after $maxIter rounds; " +
-          "labels may span partially-merged clusters — raise maxIter")
-    }
+    // partially-propagated labels are wrong cluster ids (clusters deeper
+    // than maxIter hops); never return them
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within maxIter = $maxIter " +
+          "rounds; raise maxIter")
     labels
   }
 

@@ -1166,26 +1166,6 @@ object GeoTable {
     }
   }
 
-  /** Read GeoParquet: data via Spark (Hive partition discovery / globs /
-    * mergeSchema native), `geo` metadata via the first part-file footer,
-    * geometry column from metadata then name heuristics.
-    */
-  /** Local-scheme parquet DataFrame over a PRE-LISTED file index: Spark's
-    * own read path re-lists the tree through Hadoop's local FS, which
-    * without the native library stats each file via an `ls` subprocess —
-    * 17-19 s of driver stall at 10⁴ hive directories (DirScale r15)
-    * for a listing the NIO walk produces in 0.26 s. Hand Spark the NIO
-    * listing instead: prefill a FileStatusCache under the qualified
-    * root, build the InMemoryFileIndex from it (cache hit ⇒ no FS walk;
-    * partition inference runs over the cached statuses as usual), infer
-    * the schema through ParquetFileFormat (one footer at
-    * mergeSchema=false, the standard distributed merge otherwise), and
-    * assemble the same HadoopFsRelation `spark.read.parquet` resolves
-    * to — pushdown, pruning and partition discovery are untouched
-    * because the relation IS the stock one, only the listing changed.
-    * None (remote scheme, empty dir, or any failure) falls back to the
-    * stock reader.
-    */
   /** Deep nullable-ification, mirroring Spark's private
     * `StructType.asNullable` that stock DataSource resolution applies to
     * file-sourced data schemas (files may appear/disappear between
@@ -1206,17 +1186,46 @@ object GeoTable {
     }
   }
 
-  private[graft] def fastLocalParquetDf(spark: SparkSession, path: String,
-      mergeSchema: Boolean): Option[DataFrame] =
+  /** A dataset planned from our own listing: the stock parquet relation
+    * over the pre-listed files, those files in path order, and the
+    * key-value metadata of the first one's footer.
+    */
+  private[graft] final case class Listed(df: DataFrame, files: Seq[Path],
+      footerKv: Map[String, String])
+
+  /** Plan a parquet read over a PRE-LISTED file index. Spark's own read
+    * path re-lists the tree through Hadoop's local FS, which without the
+    * native library stats each file via an `ls` subprocess — 17-19 s of
+    * driver stall at 10⁴ hive directories (tools/DirScale) for a listing
+    * the NIO walk produces in 0.26 s. Hand Spark the NIO listing instead:
+    * prefill a FileStatusCache under the qualified root and build the
+    * InMemoryFileIndex from it (cache hit ⇒ no FS walk; partition
+    * inference runs over the cached statuses as usual).
+    *
+    * The footer of the first file in path order — the file stock
+    * `inferSchema` picks at mergeSchema=false — is read once, here on the
+    * driver: it yields both the data schema (converted exactly as
+    * `mergeSchemasInParallel` converts it, without that method's Spark
+    * job) and the key-value metadata [[read]] takes `geo` from. At
+    * mergeSchema=true the schema still comes from Spark's distributed
+    * merge, which needs every footer.
+    *
+    * The relation IS the one `spark.read.parquet` resolves to, so
+    * pushdown, pruning and partition discovery are untouched. None
+    * (unlistable path, foreign files, empty dir, or any failure) tells
+    * the caller to use the stock reader, which then raises the stock
+    * errors.
+    */
+  private[graft] def listedRead(spark: SparkSession, path: String,
+      mergeSchema: Boolean): Option[Listed] =
     try {
       import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
       // session conf first: it carries fs.<scheme>.impl registrations
       // the non-local listing path (VERDICT r16 #6) resolves through
       val conf = spark.sessionState.newHadoopConf()
-      graft.meta.Footer.partFileStatuses(path, conf)
-          .filter(_.nonEmpty).flatMap { st =>
-        val root = new org.apache.hadoop.fs.Path(path)
+      Footer.partFileStatuses(path, conf).filter(_.nonEmpty).flatMap { st =>
+        val root = new Path(path)
         val fs = root.getFileSystem(conf)
         val qualified = fs.makeQualified(root)
         val statuses = st.map(s => new org.apache.hadoop.fs.FileStatus(
@@ -1230,22 +1239,33 @@ object GeoTable {
           userSpecifiedSchema = None, fileStatusCache = cache,
           userSpecifiedPartitionSpec =
             certainlyStringPartitionSpec(qualified, statuses))
+        val head = statuses.head
+        val footer = ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(head, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
         val fmt = new ParquetFileFormat
-        // mergeSchema=false needs ONE representative footer — handing
-        // inferSchema all 30k statuses costs ~1 s of driver list
-        // processing before it reads that one footer anyway
-        val inferOver =
-          if (mergeSchema) statuses.toIndexedSeq else statuses.take(1).toIndexedSeq
-        fmt.inferSchema(spark, opts, inferOver).map { dataSchema =>
+        val dataSchema =
+          if (mergeSchema) fmt.inferSchema(spark, opts, statuses.toIndexedSeq)
+          else Some(GraftBridge.parquetSchemaFromFooter(spark,
+            new org.apache.parquet.hadoop.Footer(head.getPath, footer)))
+        dataSchema.map { ds =>
+          import scala.jdk.CollectionConverters._
           // stock DataSource resolution forces the data schema nullable
           // (files may appear/disappear); mirror it for schema parity
-          spark.baseRelationToDataFrame(HadoopFsRelation(index,
+          val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
             index.partitionSpec().partitionColumns,
-            deepNullable(dataSchema).asInstanceOf[org.apache.spark.sql.types.StructType],
+            deepNullable(ds).asInstanceOf[org.apache.spark.sql.types.StructType],
             bucketSpec = None, fmt, opts)(spark))
+          Listed(df, statuses.toSeq.map(_.getPath),
+            footer.getFileMetaData.getKeyValueMetaData.asScala.toMap)
         }
       }
     } catch { case _: Throwable => None }
+
+  /** [[listedRead]]'s DataFrame alone. */
+  private[graft] def fastLocalParquetDf(spark: SparkSession, path: String,
+      mergeSchema: Boolean): Option[DataFrame] =
+    listedRead(spark, path, mergeSchema).map(_.df)
 
   /** Pre-built partition spec for hive layouts whose every partition
     * value is PROVABLY a string under Spark's own inference rules —
@@ -1307,36 +1327,46 @@ object GeoTable {
     }))
   }
 
+  /** Read GeoParquet: data via Spark (Hive partition discovery / globs /
+    * mergeSchema native), `geo` metadata and the `graft:partitioning`
+    * key from the first part file's footer, geometry column from
+    * metadata then name heuristics. On a dataset [[listedRead]] can
+    * list, one listing and one footer read plan the whole read, and at
+    * mergeSchema=false no Spark job runs.
+    */
   def read(spark: SparkSession, path: String,
       mergeSchema: Boolean = false): GeoTable = {
-    val df0 = fastLocalParquetDf(spark, path, mergeSchema).getOrElse(
+    val listed = listedRead(spark, path, mergeSchema)
+    val df0 = listed.map(_.df).getOrElse(
       spark.read.option("mergeSchema", mergeSchema.toString).parquet(path))
-    // firstPartFile, not partFiles().headOption: one footer is enough for
-    // geo metadata + graft:partitioning, and the early-exit descent keeps
-    // read planning O(depth), not O(files), on wide hive layouts.
-    // Degradation contract (ADVICE r15): the O(depth) pick assumes every
-    // part carries identical graft footers — true for completed writes,
+    // without our listing, firstPartFile, not partFiles().headOption: its
+    // early-exit descent keeps read planning O(depth), not O(files), on
+    // wide hive layouts.
+    // Degradation contract: one footer assumes every part
+    // carries identical graft footers — true for completed writes,
     // violated by a previously-FAILED partial writeGeoMetadata pass. If
-    // the first pick carries NO graft keys, scan a bounded prefix of the
-    // full listing for one that does, so a partially-footered dataset
-    // reads its metadata deterministically instead of depending on which
-    // file the descent happened to reach.
-    val firstInfo = Footer.firstPartFile(path).map(p => Footer.read(p))
-      .map { info =>
-        val hasGraftKeys = info.geo.isDefined || info.keyValueMeta
-          .contains(graft.meta.SpatialPartitioning.FooterKey)
-        if (hasGraftKeys) info
-        else
-          (try Footer.partFiles(path).iterator.take(16)
-              .map(p => Footer.read(p))
-              .find(i => i.geo.isDefined || i.keyValueMeta
-                .contains(graft.meta.SpatialPartitioning.FooterKey))
-            catch { case _: Throwable => None })
-            .getOrElse(info)
-      }
-    val geoMeta = firstInfo.flatMap(_.geo)
-    val partitioning = firstInfo
-      .flatMap(_.keyValueMeta.get(graft.meta.SpatialPartitioning.FooterKey))
+    // the first footer carries NO graft keys, scan a bounded prefix of
+    // the listing for one that does, so a partially-footered dataset
+    // reads its metadata deterministically.
+    def graftKeyed(kv: Map[String, String]): Boolean =
+      kv.contains(GeoMeta.FooterKey) ||
+        kv.contains(graft.meta.SpatialPartitioning.FooterKey)
+    val (firstKv, files) = listed match {
+      case Some(l) => (Some(l.footerKv), () => l.files)
+      case None => (Footer.firstPartFile(path).map(p => Footer.read(p).keyValueMeta),
+        () => Footer.partFiles(path))
+    }
+    val kv = firstKv.map { kv0 =>
+      if (graftKeyed(kv0)) kv0
+      else
+        (try files().iterator.take(16)
+            .map(p => Footer.read(p).keyValueMeta).find(graftKeyed)
+          catch { case _: Throwable => None })
+          .getOrElse(kv0)
+    }
+    val geoMeta = kv.flatMap(_.get(GeoMeta.FooterKey)).map(GeoMeta.fromJson)
+    val partitioning = kv
+      .flatMap(_.get(graft.meta.SpatialPartitioning.FooterKey))
       .flatMap(graft.meta.SpatialPartitioning.fromJsonOpt)
     val geomCol = geoMeta.map(_.primaryColumn)
       .filter(df0.columns.contains)

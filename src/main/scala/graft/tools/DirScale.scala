@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * daily spatial partitions. Reported phases:
   *
   *  - partFiles: the full recursive listing (NIO fast path);
-  *  - firstPartFile: the early-exit descent `GeoTable.read` now uses
-  *    for footer restore — must stay ~flat as directories grow;
-  *  - read: full `GeoTable.read` planning (Spark FileIndex + one footer);
+  *  - firstPartFile: the early-exit descent `GeoTable.read` uses for
+  *    its footer when the listing declines — must stay ~flat as
+  *    directories grow;
+  *  - read: full `GeoTable.read` planning (one listing, one footer, the
+  *    Spark FileIndex over that listing);
   *  - prune+count: `filterBbox` over a small box on the spatially
   *    partitioned layout — partition pruning must keep matched-file
   *    work constant while total file count grows.
@@ -97,10 +99,10 @@ object DirScale {
         }
         require(nSlow == nFiles, s"slow listing $nSlow != $nFiles")
         val tSlowRead = t(s"n=$nDirs slow-FS fast read (planning)") {
-          val fast = graft.table.GeoTable.fastLocalParquetDf(
+          val fast = graft.table.GeoTable.listedRead(
             spark, s"graftslow://$dir", mergeSchema = false)
           require(fast.isDefined, "fast path must fire through the scheme")
-          require(fast.get.columns.nonEmpty)
+          require(fast.get.df.columns.nonEmpty && fast.get.footerKv.nonEmpty)
         }
         println(f"[dirscale] n=$nDirs%-6d SLOW(${slowMs}ms) " +
           f"list=$tSlowList%.3f read=$tSlowRead%.3f " +

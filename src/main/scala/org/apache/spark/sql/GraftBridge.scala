@@ -36,6 +36,25 @@ object GraftBridge {
     classic.Dataset.ofRows(ds.sparkSession, RepartitionByExpression(
       Seq(DirectShufflePartitionID(expression(id(column(attr))))), plan, None))
   }
+
+  /** The Spark data schema of one Parquet footer, as
+    * `ParquetFileFormat.mergeSchemasInParallel` derives it for that
+    * file: the converter takes the same five session flags, and the
+    * Spark row-metadata key, when present, wins over the Parquet schema.
+    * Runs on the caller's thread; no Spark job.
+    */
+  def parquetSchemaFromFooter(spark: SparkSession,
+      footer: org.apache.parquet.hadoop.Footer): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(footer, converter)
+  }
 }
 
 /** Bridge into `private[spark]` scheduler internals used by the

@@ -207,8 +207,8 @@ class GeoTableSpec extends AnyFunSuite {
       .dataBounds.isEmpty)
   }
 
-  test("sortHilbert plan: one sketch job, no range exchange") {
-    val t = sortFixture(2000, empties = false).addBbox()
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -217,12 +217,17 @@ class GeoTableSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
     sc.addSparkListener(listener)
-    val sorted = try {
-      val s = t.sortHilbert()
+    try {
+      val a = f
       org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
-      s
+      (a, jobs.get)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 1, s"sortHilbert ran ${jobs.get} jobs")
+  }
+
+  test("sortHilbert plan: one sketch job, no range exchange") {
+    val t = sortFixture(2000, empties = false).addBbox()
+    val (sorted, jobs) = jobsDuring(t.sortHilbert())
+    assert(jobs == 1, s"sortHilbert ran $jobs jobs")
     val plan = sorted.df.queryExecution.executedPlan.toString.toLowerCase
     assert(!plan.contains("rangepartitioning"), plan)
     assert(plan.contains("shufflepartitionidpassthrough"), plan)
@@ -969,6 +974,212 @@ class GeoTableSpec extends AnyFunSuite {
       assert(g.primary.flatMap(_.coveringBbox).contains("bbox"))
       assert(g.primary.get.bbox == before(p.toString),
         s"per-file bbox of $p must survive the metadata-only rewrite")
+    }
+  }
+
+  // ---- read planning from one footer ------------------------------------
+
+  test("read planning runs no Spark job: local, hive quadkey and a " +
+      "non-local scheme; a listed dataset opens one footer") {
+    val local = tmpDir("plan_local")
+    GeoTable.fromDataFrame(pointsTable(400).df.repartition(4), "geometry")
+      .addBbox().write(local)
+    assert(Footer.partFiles(local).size > 1, "fixture needs several files")
+    val quadkey = tmpDir("plan_qk")
+    pointsTable(2000).addBbox().partitionByQuadkey(4, 1, quadkey)
+    assert(Footer.partFiles(quadkey).map(_.getParent).distinct.size > 1)
+    // a plain hive layout under the graftfs:// scheme, as in the
+    // non-local planning test above
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfs.impl",
+      classOf[GraftTestFileSystem].getName)
+    val base = tmpDir("plan_graftfs")
+    spark.range(0, 40).toDF("id")
+      .withColumn("cell", concat(lit("8a2a"), format_string("%x", col("id"))))
+      .withColumn("geometry", geo.st_point(col("id").cast("double"), lit(1.0)))
+      .write.partitionBy("cell").parquet(s"graftfs://$base/h3")
+    GeoTable.fromDataFrame(pointsTable(90).df.repartition(3), "geometry")
+      .addBbox().write(s"graftfs://$base/geo")
+    for (path <- Seq(local, quadkey, s"graftfs://$base/h3", s"graftfs://$base/geo")) {
+      assert(GeoTable.listedRead(spark, path, mergeSchema = false).isDefined, path)
+      val (t, jobs) = jobsDuring(GeoTable.read(spark, path))
+      assert(jobs == 0, s"read planning of $path ran $jobs Spark jobs")
+      assert(t.df.schema == spark.read.parquet(path).schema, path)
+    }
+    assert(GeoTable.read(spark, quadkey).partitioning.isDefined)
+    // one footer: the first part in path order, opened once
+    val geoDir = s"$base/geo"
+    val before = GraftTestFileSystem.opensUnder(geoDir).size
+    val t = GeoTable.read(spark, s"graftfs://$geoDir")
+    val opens = GraftTestFileSystem.opensUnder(geoDir).drop(before)
+    assert(opens == Seq(Footer.partFiles(geoDir).head.toUri.getPath), opens)
+    assert(t.meta.primary.flatMap(_.coveringBbox).contains("bbox"))
+    assert(t.df.count() == 90)
+    // mergeSchema keeps Spark's distributed merge
+    assert(jobsDuring(GeoTable.read(spark, local, mergeSchema = true))._2 > 0)
+  }
+
+  test("read planning: footer schema equals stock inference over a type " +
+      "zoo, per converter flag, with and without Spark's row metadata") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zoo")
+    def zoo(n: Int) = spark.range(0, n).toDF("id").selectExpr("id",
+      "cast(id as decimal(9,2)) as d9", "cast(id as decimal(18,4)) as d18",
+      "cast(id as decimal(38,10)) as d38",
+      "cast(cast(id as string) as binary) as bin",
+      "named_struct('a', id, 'b', named_struct('c', cast(id as string))) as st",
+      "array(id, id + 1) as arr", "map(cast(id as string), id) as m",
+      "timestamp_seconds(id) as ts",
+      "cast(timestamp_seconds(id) as timestamp_ntz) as ntz")
+    val sparkDir = dir.resolve("spark").toString
+    zoo(8).repartition(2).write.parquet(sparkDir)
+    val int96Dir = dir.resolve("int96").toString
+    withConf("spark.sql.parquet.outputTimestampType", "INT96")(
+      zoo(8).repartition(2).write.parquet(int96Dir))
+    // no Spark row metadata: only the Parquet schema speaks
+    val rawDir = dir.resolve("raw")
+    java.nio.file.Files.createDirectories(rawDir)
+    val rawSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message zoo {
+        |  required int64 id;
+        |  optional binary bin;
+        |  optional binary s (STRING);
+        |  optional int96 t96;
+        |  optional int64 ts_utc (TIMESTAMP(MICROS,true));
+        |  optional int64 ts_local (TIMESTAMP(MICROS,false));
+        |  optional int32 d9 (DECIMAL(9,2));
+        |  optional fixed_len_byte_array(16) d38 (DECIMAL(38,10));
+        |  optional group st { optional int32 a; optional group b { optional binary c (STRING); } }
+        |  optional group arr (LIST) { repeated group list { optional int64 element; } }
+        |  optional group m (MAP) { repeated group key_value { required binary key (STRING); optional int64 value; } }
+        |}""".stripMargin)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(rawDir.resolve("part-0.parquet").toUri))
+      .withType(rawSchema).build()
+    try {
+      val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(rawSchema)
+      (0L until 5L).foreach { i =>
+        writer.write(groups.newGroup().append("id", i).append("bin", s"b$i").append("s", s"s$i"))
+      }
+    } finally writer.close()
+    // two schemas in one directory: the first file in path order decides
+    val mixedDir = dir.resolve("mixed")
+    java.nio.file.Files.createDirectories(mixedDir)
+    Seq("part-a" -> spark.range(3).toDF("id"),
+        "part-b" -> spark.range(3).toDF("id").withColumn("x", lit(1.5))).foreach {
+      case (name, df) =>
+        val tmp = dir.resolve(name).toString
+        df.coalesce(1).write.parquet(tmp)
+        java.nio.file.Files.copy(java.nio.file.Paths.get(Footer.partFiles(tmp).head.toUri),
+          mixedDir.resolve(s"$name.parquet"))
+    }
+    // the defaults first, then each flag flipped on its own
+    val flips = Seq("spark.sql.parquet.binaryAsString" -> "false",
+      "spark.sql.parquet.binaryAsString" -> "true",
+      "spark.sql.parquet.int96AsTimestamp" -> "false",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+    for (path <- Seq(sparkDir, int96Dir, rawDir.toString, mixedDir.toString);
+         flags <- flips) withConf(flags._1, flags._2) {
+      val stock = scala.util.Try(spark.read.parquet(path).schema)
+      val fast = scala.util.Try(GeoTable.read(spark, path).df.schema)
+      stock match {
+        case scala.util.Success(s) =>
+          assert(GeoTable.listedRead(spark, path, mergeSchema = false).isDefined)
+          assert(fast == stock, s"$path $flags: ${fast.map(_.sql)} != ${s.sql}")
+        case scala.util.Failure(e) =>
+          // INT96 without int96AsTimestamp: the stock error, via the fallback
+          assert(fast.failed.toOption.map(_.getClass).contains(e.getClass),
+            s"$path $flags: $fast")
+      }
+    }
+    // the flags reached the converter: each one changes the raw file's schema
+    val raw = rawDir.toString
+    def rawType(flags: (String, String), c: String) =
+      withConf(flags._1, flags._2)(GeoTable.read(spark, raw).df.schema(c).dataType.typeName)
+    assert(rawType(flips(0), "bin") == "binary")
+    assert(rawType(flips(1), "bin") == "string")
+    assert(rawType(flips(0), "t96") == "timestamp")
+    assert(rawType(flips(0), "ts_local") == "timestamp_ntz")
+    assert(rawType(flips(3), "ts_local") == "timestamp")
+    assert(scala.util.Try(rawType(flips(2), "t96")).isFailure)
+    assert(GeoTable.read(spark, mixedDir.toString).df.columns.toSeq == Seq("id"))
+    assert(GeoTable.read(spark, raw).df.count() == 5)
+  }
+
+  test("writeGeoMetadata: one open per part, footers and rows equal to " +
+      "the three-reader pass it replaces") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    import scala.jdk.CollectionConverters._
+    val conf = new org.apache.hadoop.conf.Configuration()
+    /** The replaced pass, spelled out: a stats read for the bbox, a
+      * second reader for schema and key-values, and appendFile's own
+      * reader for the byte copy.
+      */
+    def threeReaderPass(p: Path, gm: GeoMeta, bboxCol: Option[String],
+        extra: Map[String, String]): Unit = {
+      val m = bboxCol.fold(gm) { b =>
+        val bb = Footer.bboxFromStats(p.toString, b, conf)
+        gm.copy(columns = gm.columns.map { case (n, c) => n -> c.copy(bbox = bb) })
+      }
+      val in = HadoopInputFile.fromPath(p, conf)
+      val r = ParquetFileReader.open(in)
+      val (schema, kv) =
+        try (r.getFooter.getFileMetaData.getSchema,
+          r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap)
+        finally r.close()
+      val tmp = new Path(p.getParent, s".${p.getName}.ref")
+      val w = new ParquetFileWriter(HadoopOutputFile.fromPath(tmp, conf), schema,
+        ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
+      w.start()
+      w.appendFile(in)
+      w.end((kv ++ extra + (GeoMeta.FooterKey -> GeoMeta.toJson(m))).asJava)
+      val fs = p.getFileSystem(conf)
+      fs.delete(p, false)
+      assert(fs.rename(tmp, p))
+    }
+    def schemaOf(p: Path) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    def bytesOf(p: Path) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.toUri))
+    val points = pointsTable(300).df.repartition(3)
+    val floatBbox = points.withColumn("bbox", struct(
+      (col("id") % 10).cast("float").as("xmin"), (col("id") % 5).cast("float").as("ymin"),
+      (col("id") % 10 + 1).cast("float").as("xmax"), (col("id") % 5 + 1).cast("float").as("ymax")))
+    val tables = Seq(
+      "covered" -> (GeoTable.fromDataFrame(points, "geometry").addBbox().df, Some("bbox")),
+      "float" -> (floatBbox, Some("bbox")),
+      "uncovered" -> (points, None))
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfs.impl",
+      classOf[GraftTestFileSystem].getName)
+    for ((name, (df, bboxCol)) <- tables) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_pass_$name")
+      val (mine, ref) = (dir.resolve("mine").toString, dir.resolve("ref").toString)
+      // through the scheme: no checksum sidecars to go stale on rewrite
+      df.write.parquet(s"graftfs://$mine")
+      df.write.parquet(ref)
+      val gm = GeoMeta(primaryColumn = "geometry",
+        columns = Map("geometry" -> graft.meta.GeoColumnMeta(coveringBbox = bboxCol)))
+      val extra = Map("graft:test" -> name)
+      val before = GraftTestFileSystem.opensUnder(mine).size
+      Footer.writeGeoMetadata(s"graftfs://$mine", gm, bboxCol, conf, extra)
+      val mineParts = Footer.partFiles(mine)
+      assert(GraftTestFileSystem.opensUnder(mine).drop(before).sorted ==
+        mineParts.map(_.toUri.getPath), s"$name: each part opened once")
+      val refParts = Footer.partFiles(ref)
+      refParts.foreach(threeReaderPass(_, gm, bboxCol, extra))
+      assert(mineParts.size == refParts.size && mineParts.size > 1)
+      mineParts.zip(refParts).foreach { case (a, b) =>
+        val (fa, fb) = (Footer.read(a, conf), Footer.read(b, conf))
+        assert(fa.keyValueMeta == fb.keyValueMeta, name)
+        assert(fa.keyValueMeta("graft:test") == name)
+        assert(fa.geo.flatMap(_.primary).flatMap(_.bbox).isDefined == bboxCol.isDefined, name)
+        assert(schemaOf(a) == schemaOf(b), name)
+        assert(java.util.Arrays.equals(bytesOf(a), bytesOf(b)), s"$name: $a bytes")
+      }
+      val back = spark.read.parquet(mine)
+      assert(back.count() == df.count() && back.exceptAll(df).isEmpty &&
+        df.exceptAll(back).isEmpty, name)
     }
   }
 }

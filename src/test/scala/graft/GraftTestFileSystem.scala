@@ -40,8 +40,10 @@ class GraftTestFileSystem extends FileSystem {
       s.getPermission, s.getOwner, s.getGroup,
       new Path("graftfs", null, s.getPath.toUri.getPath))
 
-  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    GraftTestFileSystem.opened.add(f.toUri.getPath)
     local.open(toLocal(f), bufferSize)
+  }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
@@ -70,4 +72,16 @@ class GraftTestFileSystem extends FileSystem {
 
   override def getFileStatus(f: Path): FileStatus =
     fromLocal(local.getFileStatus(toLocal(f)))
+}
+
+object GraftTestFileSystem {
+  /** Local path of every file opened through the scheme, in call order;
+    * tests filter it by their own directory.
+    */
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def opensUnder(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    opened.asScala.toSeq.filter(_.startsWith(dir))
+  }
 }

@@ -216,6 +216,17 @@ class OpsSpec extends AnyFunSuite {
     assert(chain.values.toSet == Set(1L) && chain.size == 12)
   }
 
+  test("connected components raise instead of returning unconverged labels") {
+    // path 1-2-3-4: hash-to-min needs more than one round
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(path, maxIter = 1))
+    assert(e.getMessage.contains("maxIter = 1"), e.getMessage)
+    val labels = Dedup.connectedComponents(path)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+  }
+
   test("multimodal decode keeps schema and is partition-local") {
     val df = spark.range(100).toDF("media_id")
       .withColumn("payload", encode(concat(lit("data"), col("media_id")), "UTF-8"))
