@@ -311,7 +311,12 @@ object Bench {
         if (p.getType == java.lang.management.MemoryType.HEAP) out += p)
       out.toSeq
     }
-    val gcOf = scala.collection.mutable.Map[String, (Double, Double, Long)]()
+    // Classes Janino compiled in this JVM (planning and local-mode
+    // tasks), the codegen layer's count: a query that compiles on every
+    // run spells some per-run value into its generated source
+    def compilesNow(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val gcOf = scala.collection.mutable.Map[String, (Double, Double, Long, Long)]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_.contains(kv._1))).flatMap { case (name, fn) =>
       // a FAILED iteration must never become the reported time: a fast
@@ -323,6 +328,7 @@ object Bench {
         heapPools.foreach(p => try p.resetPeakUsage()
           catch { case _: Throwable => () })
         val gc0 = gcMsNow()
+        val compiles0 = compilesNow()
         val t0 = System.nanoTime()
         val ok =
           try { force(fn(sess, sfDir)); true }
@@ -332,6 +338,7 @@ object Bench {
           }
         val dt = (System.nanoTime() - t0) / 1e9
         val gcSec = (gcMsNow() - gc0) / 1e3
+        val compiles = compilesNow() - compiles0
         val peakMb = heapPools.map(p =>
           try p.getPeakUsage.getUsed catch { case _: Throwable => 0L })
           .sum / (1024L * 1024L)
@@ -342,14 +349,14 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         if (isolate) sess.sharedState.cacheManager.clearCache()
-        if (ok) Some((dt, gcSec, peakMb)) else None
+        if (ok) Some((dt, gcSec, peakMb, compiles)) else None
       }
       if (times.isEmpty) { failed += name; None }
       else {
         // forensics follow the WORST iteration — the spike being
         // diagnosed — while the reported time stays best-of-N
         val worst = times.maxBy(_._1)
-        gcOf(name) = (worst._1, worst._2, worst._3)
+        gcOf(name) = worst
         Some(name -> times.map(_._1).min)
       }
     }
@@ -486,11 +493,12 @@ object Bench {
     val loadSuspect = floor > 0.025
     val loadJson = f""","loadavg1_start":${loadavgStart.getOrElse(-1.0)}%.2f,"load_suspect":$loadSuspect"""
     // per-query GC/heap forensics (worst iteration) — the spike-rotation
-    // diagnosis channel; full artifact only, the stdout line stays lean
+    // diagnosis channel; full artifact only, the stdout line stays lean.
+    // [wall s, GC s, peak heap MB, codegen compiles]
     val gcJson = {
       val g = results.map { case (k, _) =>
-        val (wall, gcSec, peakMb) = gcOf.getOrElse(k, (0.0, 0.0, 0L))
-        f""""$k":[$wall%.3f,$gcSec%.3f,$peakMb]"""
+        val (wall, gcSec, peakMb, compiles) = gcOf.getOrElse(k, (0.0, 0.0, 0L, 0L))
+        f""""$k":[$wall%.3f,$gcSec%.3f,$peakMb,$compiles]"""
       }.mkString("{", ",", "}")
       s""","gc_heap_worst_iter":$g"""
     }

@@ -14,22 +14,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * the midpoint quadkey and Hilbert keys, the sort sketch, the bbox
   * filter) is built over [[StEnvelope]]; there is no second envelope
   * decoder.
+  *
+  * No data-dependent constant appears in generated source. A bbox
+  * window, key bounds read from the data or a precision grid travels in
+  * the generated class's `references` array ([[ParamLiteral.field]]),
+  * and the source names only the field that holds it. Spark's codegen
+  * cache is keyed by source text, so a request that differs from the
+  * last only in such values reuses its compiled class instead of paying
+  * a fresh compile, and NaN or ±∞ values need no Java spelling. Plan
+  * shape (a zoom level, an H3 resolution, a digit count) may stay
+  * inline: it is the same from request to request.
   */
 object GeoExpressions {
   private val E = "graft.functions.GeoEval"
 
-  /** Java source for the double constant `d`. NaN and the infinities
-    * have no Java literal, and bounds read from data can be NaN (an
-    * empty geometry's envelope), so they are spelled as `Double` fields.
+  /** Four fixed bounds as trailing Java call arguments: loads from one
+    * `double[]` field of the generated class, never the values' text.
     */
-  private def javaDouble(d: Double): String =
-    if (d.isNaN) "Double.NaN"
-    else if (d.isInfinite) (if (d > 0) "Double.POSITIVE_INFINITY" else "Double.NEGATIVE_INFINITY")
-    else s"${d}D"
-
-  /** Java source for four fixed key bounds, as trailing call arguments. */
-  private def boundsArgs(xmin: Double, ymin: Double, xmax: Double, ymax: Double): String =
-    Seq(xmin, ymin, xmax, ymax).map(javaDouble).mkString(", ")
+  private def boundsRefs(ctx: CodegenContext,
+      xmin: Double, ymin: Double, xmax: Double, ymax: Double): String = {
+    val b = ParamLiteral.field(ctx, "bounds", Array(xmin, ymin, xmax, ymax), "double[]")
+    s"$b[0], $b[1], $b[2], $b[3]"
+  }
 
   abstract class GeoUnary extends UnaryExpression with Serializable
       with ImplicitCastInputTypes {
@@ -97,9 +103,10 @@ object GeoExpressions {
     override def nullIntolerant: Boolean = true
     override protected def nullSafeEval(v: Any): Any =
       GeoEval.envelopeInBox(v.asInstanceOf[InternalRow], xmin, ymin, xmax, ymax)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"$E.envelopeInBox($c, ${boundsArgs(xmin, ymin, xmax, ymax)})")
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val bounds = boundsRefs(ctx, xmin, ymin, xmax, ymax)
+      defineCodeGen(ctx, ev, c => s"$E.envelopeInBox($c, $bounds)")
+    }
     override protected def withNewChildInternal(c: Expression): EnvelopeInBox =
       copy(child = c)
   }
@@ -210,8 +217,10 @@ object GeoExpressions {
     override def dataType: DataType = BinaryType
     override protected def nullSafeEval(v: Any): Any =
       GeoEval.stReducePrecision(v.asInstanceOf[Array[Byte]], grid)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$E.stReducePrecision($c, $grid)")
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val g = ParamLiteral.field(ctx, "grid", grid, "double")
+      defineCodeGen(ctx, ev, c => s"$E.stReducePrecision($c, $g)")
+    }
     override protected def withNewChildInternal(c: Expression): StReducePrecision =
       copy(child = c)
   }
@@ -352,9 +361,10 @@ object GeoExpressions {
     override protected def nullSafeEval(x: Any, y: Any): Any =
       GeoEval.hilbertXY(x.asInstanceOf[Double], y.asInstanceOf[Double],
         xmin, ymin, xmax, ymax)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (x, y) =>
-        s"$E.hilbertXY($x, $y, ${boundsArgs(xmin, ymin, xmax, ymax)})")
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val bounds = boundsRefs(ctx, xmin, ymin, xmax, ymax)
+      defineCodeGen(ctx, ev, (x, y) => s"$E.hilbertXY($x, $y, $bounds)")
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(l, r)
   }
@@ -369,9 +379,10 @@ object GeoExpressions {
     override protected def nullSafeEval(x: Any, y: Any): Any =
       GeoEval.mortonXY(x.asInstanceOf[Double], y.asInstanceOf[Double],
         xmin, ymin, xmax, ymax)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (x, y) =>
-        s"$E.mortonXY($x, $y, ${boundsArgs(xmin, ymin, xmax, ymax)})")
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val bounds = boundsRefs(ctx, xmin, ymin, xmax, ymax)
+      defineCodeGen(ctx, ev, (x, y) => s"$E.mortonXY($x, $y, $bounds)")
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(l, r)
   }

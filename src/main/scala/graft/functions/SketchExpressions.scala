@@ -411,22 +411,34 @@ object SketchEval {
     * Caller contract: both arrays sorted by array_sort over
     * struct(h, s) (signed-long h first, binary s on ties) and
     * duplicate-free in s. The declared input type admits null array
-    * elements / null `s` fields (lambda-built structs bind as nullable)
-    * but the merge loop reads them UNGUARDED — a caller whose arrays
-    * actually contain nulls gets a runtime NullPointerException, not an
-    * analysis-time error (ADVICE r17). Every current producer builds
-    * the arrays from non-null kernel output; keep it that way or add a
-    * null sweep before calling.
+    * elements and null fields (lambda-built structs bind as nullable),
+    * but the count has no meaning over them: the merge loop checks each
+    * element, `h` and `s` it reads and throws an
+    * IllegalArgumentException naming the function on a null.
     */
   def hashedIntersectCount(a: ArrayData, b: ArrayData): Long = {
+    def nullIn(what: String): Nothing = throw new IllegalArgumentException(
+      s"hashed_intersect_count: null $what; both arrays must hold " +
+        "non-null struct(h, s) elements with non-null fields")
+    def elem(arr: ArrayData, k: Int): InternalRow = {
+      if (arr.isNullAt(k)) nullIn("array element")
+      val r = arr.getStruct(k, 2)
+      if (r.isNullAt(0)) nullIn("h field")
+      r
+    }
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0L
+    // each element is read (and checked) once, when its index is reached
+    var ra: InternalRow = null; var rb: InternalRow = null
+    var ha = 0L; var hb = 0L
+    var ai = -1; var bj = -1
     while (i < na && j < nb) {
-      val ra = a.getStruct(i, 2); val rb = b.getStruct(j, 2)
-      val ha = ra.getLong(0); val hb = rb.getLong(0)
+      if (ai != i) { ra = elem(a, i); ha = ra.getLong(0); ai = i }
+      if (bj != j) { rb = elem(b, j); hb = rb.getLong(0); bj = j }
       if (ha < hb) i += 1
       else if (ha > hb) j += 1
       else {
+        if (ra.isNullAt(1) || rb.isNullAt(1)) nullIn("s field")
         val cmp = ra.getUTF8String(1).compareTo(rb.getUTF8String(1))
         if (cmp == 0) { c += 1; i += 1; j += 1 }
         else if (cmp < 0) i += 1
@@ -2043,7 +2055,8 @@ object SketchExpressions {
       extends BinaryExpression with ImplicitCastInputTypes {
     // fields declared nullable so lambda-built structs (typed nullable
     // by the analyzer) bind without a cast; the kernel contract is
-    // non-null elements (producers are transform over non-null sets)
+    // non-null elements (producers are transform over non-null sets),
+    // and the kernel throws on a null it reads
     private val elem = StructType(Seq(
       StructField("h", LongType, nullable = true),
       StructField("s", StringType, nullable = true)))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.StructType
 import graft.functions.GeoExpressions.StIntersects
+import graft.functions.ParamLiteral
 import graft.geom.Wkb
 import graft.meta.GeoMeta
 
@@ -21,7 +22,9 @@ import graft.meta.GeoMeta
   * row-group min/max pruning. This systematizes the reference's manual
   * bbox fast path (`core/extract.py:568-579`, the documented 10-100x
   * win) as a plan rewrite: users write the precise predicate, the
-  * optimizer gets the pruning.
+  * optimizer gets the pruning. The envelope values are [[ParamLiteral]]s,
+  * so a query with a new polygon still pushes the four comparisons and
+  * reuses the stage the last polygon compiled.
   */
 object BboxPushdownRule extends Rule[LogicalPlan] {
 
@@ -193,10 +196,10 @@ object BboxPushdownRule extends Rule[LogicalPlan] {
             })
             (x0, y0, x1, y1) <- literalEnvelope(c).orElse(literalEnvelope(a))
           } added ++= Seq(
-            GreaterThanOrEqual(field(b, "xmax"), Literal(x0)),
-            LessThanOrEqual(field(b, "xmin"), Literal(x1)),
-            GreaterThanOrEqual(field(b, "ymax"), Literal(y0)),
-            LessThanOrEqual(field(b, "ymin"), Literal(y1)))
+            GreaterThanOrEqual(field(b, "xmax"), ParamLiteral(x0)),
+            LessThanOrEqual(field(b, "xmin"), ParamLiteral(x1)),
+            GreaterThanOrEqual(field(b, "ymax"), ParamLiteral(y0)),
+            LessThanOrEqual(field(b, "ymin"), ParamLiteral(y1)))
         case _ => ()
       }
       if (added.isEmpty) f

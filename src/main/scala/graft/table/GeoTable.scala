@@ -3,7 +3,7 @@ package graft.table
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.geo
+import graft.functions.{geo, ParamLiteral}
 import graft.functions.GeoExpressions.{EnvelopeInBox, StEnvelope}
 import graft.geom.{GeoJson, Proj, Wkt}
 import graft.meta.{Footer, GeoColumnMeta, GeoMeta}
@@ -110,6 +110,13 @@ final case class GeoTable(
     * `st_envelope(geometry)`, one WKB decode per row. Both compare in
     * Spark's double order, so a null or empty (NaN-envelope) geometry
     * never matches on either path.
+    *
+    * The window never enters generated source, so every window on one
+    * layout shares one compiled stage. The covering comparisons take it
+    * as [[ParamLiteral]]s: a `Literal` subclass rather than a new leaf
+    * expression, because Spark builds the Parquet `PushedFilters` (and
+    * so row-group pruning) only from comparisons against a `Literal`.
+    * [[EnvelopeInBox]] reads it from a field of the generated class.
     */
   def filterBbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double): GeoTable = {
     // warn rather than fail, like the reference (`_warn_if_crs_mismatch`,
@@ -143,10 +150,11 @@ final case class GeoTable(
       .filter(df.columns.contains).filter(bboxShaped)
       .orElse(GeoMeta.BboxNameCandidates.find(c =>
         df.columns.contains(c) && bboxShaped(c)))
+    def param(d: Double): Column = GraftBridge.column(ParamLiteral(d))
     val pred = bboxCol match {
       case Some(b) =>
-        col(s"$b.xmax") >= xmin && col(s"$b.xmin") <= xmax &&
-          col(s"$b.ymax") >= ymin && col(s"$b.ymin") <= ymax
+        col(s"$b.xmax") >= param(xmin) && col(s"$b.xmin") <= param(xmax) &&
+          col(s"$b.ymax") >= param(ymin) && col(s"$b.ymin") <= param(ymax)
       case None =>
         GraftBridge.column(EnvelopeInBox(
           StEnvelope(GraftBridge.expression(col(geomCol))), xmin, ymin, xmax, ymax))

@@ -324,25 +324,31 @@ class GeoTableSpec extends AnyFunSuite {
         if (r.isNullAt(i)) None else Some(raw(r.getDouble(i))))).toSeq)
   }
 
-  /** Calls into `GeoEval` in the generated code of `df`'s physical plan,
-    * by method name; AQE off, so the plan holds its final codegen stages.
-    * Every stage must compile: a stage that does not runs interpreted,
-    * and its generated text would count calls that never run.
+  /** The Java source of each whole-stage codegen stage of `df`'s
+    * physical plan, the text Spark's codegen cache is keyed by; AQE off,
+    * so the plan holds its final stages. Every stage must compile: a
+    * stage that does not runs interpreted, and its text would show code
+    * that never runs.
     */
-  private def geoEvalCalls(df: => org.apache.spark.sql.DataFrame): Map[String, Int] =
+  private def generatedSources(df: => org.apache.spark.sql.DataFrame): Seq[String] =
     withConf("spark.sql.adaptive.enabled", "false") {
-      val plan = df.queryExecution.executedPlan
-      plan.foreach {
+      df.queryExecution.executedPlan.collect {
         case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-          org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-            .compile(w.doCodeGen()._2)
-        case _ =>
+          val code = w.doCodeGen()._2
+          org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compile(code)
+          code.body
       }
-      val code = org.apache.spark.sql.execution.debug.codegenString(plan)
-      assert(!code.contains("Wkb.read("), code)
-      "GeoEval\\.(\\w+)\\(".r.findAllMatchIn(code).map(_.group(1)).toSeq
-        .groupBy(identity).map { case (m, calls) => m -> calls.size }
     }
+
+  /** Calls into `GeoEval` in the generated code of `df`'s physical plan,
+    * by method name.
+    */
+  private def geoEvalCalls(df: => org.apache.spark.sql.DataFrame): Map[String, Int] = {
+    val code = generatedSources(df).mkString
+    assert(!code.contains("Wkb.read("), code)
+    "GeoEval\\.(\\w+)\\(".r.findAllMatchIn(code).map(_.group(1)).toSeq
+      .groupBy(identity).map { case (m, calls) => m -> calls.size }
+  }
 
   test("geo_etl chain, sort sketch and bbox filter decode each WKB once per row") {
     val in = tmpDir("one_decode")
@@ -360,6 +366,139 @@ class GeoTableSpec extends AnyFunSuite {
       val calls = geoEvalCalls(df())
       assert(calls.get("stEnvelope").contains(1), s"$name: $calls")
       assert((calls.keySet - "stEnvelope").subsetOf(decodeFree), s"$name: $calls")
+    }
+  }
+
+  /** The Parquet `PushedFilters` of each file scan in `df`'s plan. */
+  private def pushedFilters(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    withConf("spark.sql.adaptive.enabled", "false") {
+      df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.metadata.getOrElse("PushedFilters", "")
+      }
+    }
+
+  /** Two bbox windows whose digits are unlikely in generated Java. */
+  private val W1 = (-12.3456, -23.4567, 34.5678, 45.6789)
+  private val W2 = (-1.9876, -2.8765, 3.7654, 4.6543)
+
+  /** The four covering comparisons a window `w` pushes to Parquet. */
+  private def bboxPushed(w: (Double, Double, Double, Double)): Seq[String] =
+    Seq(s"GreaterThanOrEqual(bbox.xmax,${w._1})", s"LessThanOrEqual(bbox.xmin,${w._3})",
+      s"GreaterThanOrEqual(bbox.ymax,${w._2})", s"LessThanOrEqual(bbox.ymin,${w._4})")
+
+  test("filterBbox: a new window reuses the generated code; the covering " +
+      "comparisons still push down") {
+    val covered = tmpDir("param_covered")
+    pointsTable(2000).addBbox().write(covered)
+    val hive = tmpDir("param_hive")
+    pointsTable(2000).addBbox().partitionByQuadkey(4, 1, hive)
+    val uncovered = tmpDir("param_uncovered")
+    sortFixture(2000, empties = true).write(uncovered)
+    for ((name, path) <- Seq("covered" -> covered, "hive" -> hive,
+        "uncovered" -> uncovered)) {
+      val t = GeoTable.read(spark, path)
+      def filtered(w: (Double, Double, Double, Double)) =
+        t.filterBbox(w._1, w._2, w._3, w._4).df
+      val src1 = generatedSources(filtered(W1))
+      val src2 = generatedSources(filtered(W2))
+      assert(src1.nonEmpty, name)
+      assert(src1 == src2, s"$name: the window changed the generated code")
+      val digits = Seq(W1, W2).flatMap(_.productIterator)
+        .map(d => math.abs(d.asInstanceOf[Double]).toString)
+      for (d <- digits) assert(!src1.mkString.contains(d), s"$name: $d in the source")
+      if (name != "uncovered") {
+        val pushed = pushedFilters(filtered(W1))
+        assert(pushed.size == 1, s"$name: $pushed")
+        for (c <- bboxPushed(W1))
+          assert(pushed.head.contains(c), s"$name: $c not in ${pushed.head}")
+      }
+      // the rows follow the window, not the first compiled one
+      for (w <- Seq(W1, W2))
+        assert(filtered(w).count() == t.df.filter(
+          col("geometry").isNotNull &&
+            geo.st_xmax(col("geometry")) >= w._1 && geo.st_xmin(col("geometry")) <= w._3 &&
+            geo.st_ymax(col("geometry")) >= w._2 && geo.st_ymin(col("geometry")) <= w._4)
+          .count(), s"$name: $w")
+    }
+  }
+
+  test("BboxPushdownRule: an st_intersects query with a new polygon reuses " +
+      "the generated code and pushes the four comparisons") {
+    graft.plans.GraftExtensions.install(spark)
+    val covered = tmpDir("param_rule")
+    pointsTable(2000).addBbox().write(covered)
+    def query(w: (Double, Double, Double, Double)) = spark.read.parquet(covered)
+      .filter(geo.st_intersects(col("geometry"), geo.st_makeenvelope(w._1, w._2, w._3, w._4)))
+    val src1 = generatedSources(query(W1))
+    assert(src1.nonEmpty && src1 == generatedSources(query(W2)))
+    val pushed = pushedFilters(query(W1))
+    for (c <- bboxPushed(W1))
+      assert(pushed.exists(_.contains(c)), s"$c not in $pushed")
+    for (w <- Seq(W1, W2))
+      assert(query(w).count() == GeoTable.read(spark, covered).filterBbox(w._1, w._2, w._3, w._4)
+        .df.count(), s"$w")
+  }
+
+  test("filterBbox keeps the rows of plain-Literal comparisons on the edge " +
+      "table: closed edges, -0.0, NaN and infinite box edges, empty and null") {
+    val wkts = Seq(Some("POINT (10 10)"), Some("POINT (0 0)"), Some("POINT (-0.0 3)"),
+      Some("POINT (3 -0.0)"), Some("POINT (10.000001 5)"), Some("POINT (5 -1e-9)"),
+      Some("LINESTRING (11 0, 12 12)"), Some("LINESTRING (-3 -3, 0 0)"),
+      Some("POLYGON ((-5 -5, 20 -5, 20 20, -5 20, -5 -5))"),
+      Some("MULTIPOINT ((-1 -1), (11 11))"), Some("POINT EMPTY"),
+      Some("POLYGON EMPTY"), None)
+    val t = GeoTable.fromDataFrame(wkts.toDF("wkt")
+      .select(col("wkt"), geo.st_geomfromtext(col("wkt")).as("geometry")), "geometry")
+    // read back from Parquet, so the filters run in generated code rather
+    // than folded over a local relation
+    val covered = tmpDir("edge_covered")
+    t.addBbox().write(covered)
+    val uncovered = tmpDir("edge_uncovered")
+    t.write(uncovered)
+    val ref = GeoTable.read(spark, covered).df
+    val inf = Double.PositiveInfinity
+    for (w <- Seq((0.0, 0.0, 10.0, 10.0), (-0.0, -0.0, 10.0, 10.0), (0.0, 0.0, 0.0, 3.0),
+        (0.0, 0.0, Double.NaN, Double.NaN), (Double.NaN, Double.NaN, 10.0, 10.0),
+        (-inf, -inf, inf, inf), (inf, inf, -inf, -inf))) {
+      val want = ref.filter(col("bbox.xmax") >= lit(w._1) && col("bbox.xmin") <= lit(w._3) &&
+          col("bbox.ymax") >= lit(w._2) && col("bbox.ymin") <= lit(w._4))
+        .select("wkt").as[String].collect().toSeq.sorted
+      for (path <- Seq(covered, uncovered))
+        assert(GeoTable.read(spark, path).filterBbox(w._1, w._2, w._3, w._4).df
+          .select("wkt").as[String].collect().toSeq.sorted == want, s"$path $w")
+    }
+  }
+
+  test("key bounds and precision grids at NaN and ±Infinity stay in " +
+      "whole-stage codegen and equal eval") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.GeoExpressions.{HilbertIndexXY, MortonIndexXY, StReducePrecision}
+    val nan = Double.NaN; val inf = Double.PositiveInfinity
+    val xy = spark.range(60).select((col("id") * 7 % 23 - 11.5).as("x"),
+      (col("id") * 5 % 19 - 9.25).as("y"))
+    val pts = xy.collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    for (b <- Seq((nan, nan, nan, nan), (-inf, -inf, inf, inf), (0.0, nan, inf, 10.0),
+        (-10.0, -10.0, nan, -inf), (inf, inf, -inf, -inf))) {
+      for ((name, key, kernel) <- Seq(
+          ("hilbertXY", geo.hilbert_xy _,
+            (x: Double, y: Double) => HilbertIndexXY(Literal(x), Literal(y), b._1, b._2, b._3, b._4)),
+          ("mortonXY", geo.morton_xy _,
+            (x: Double, y: Double) => MortonIndexXY(Literal(x), Literal(y), b._1, b._2, b._3, b._4)))) {
+        val df = xy.select(key(col("x"), col("y"), b._1, b._2, b._3, b._4))
+        assert(generatedSources(df).mkString.contains(s"GeoEval.$name("), s"$name $b")
+        val got = df.collect().map(_.getLong(0)).toSeq
+        assert(got == pts.map { case (x, y) => kernel(x, y).eval() }.toSeq, s"$name $b")
+      }
+    }
+    val wkb = xy.select(geo.st_point(col("x"), col("y")).as("g"))
+    val geoms = wkb.collect().map(_.getAs[Array[Byte]](0))
+    for (grid <- Seq(nan, inf, -inf, 0.5)) {
+      val df = wkb.select(geo.st_reduceprecision(col("g"), grid))
+      assert(generatedSources(df).mkString.contains("GeoEval.stReducePrecision("), s"$grid")
+      val got = df.collect().map(_.getAs[Array[Byte]](0).toSeq).toSeq
+      assert(got == geoms.map(g => StReducePrecision(Literal(g), grid).eval()
+        .asInstanceOf[Array[Byte]].toSeq).toSeq, s"$grid")
     }
   }
 

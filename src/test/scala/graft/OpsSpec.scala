@@ -2722,4 +2722,32 @@ class OpsSpec extends AnyFunSuite {
       .head().getLong(0)
     assert(tied == 2L, s"tie path counted $tied, expected 2 (ab, zz)")
   }
+
+  test("hashed_intersect_count fails loudly, naming itself, on a null " +
+      "element, h or s") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.SketchEval
+    def elem(h: java.lang.Long, s: String): InternalRow =
+      InternalRow(h, if (s == null) null else UTF8String.fromString(s))
+    def arr(xs: InternalRow*) = new GenericArrayData(xs.toArray[Any])
+    val ok = arr(elem(1L, "a"), elem(2L, "b"))
+    for ((what, bad) <- Seq("array element" -> arr(elem(1L, "a"), null),
+        "h field" -> arr(elem(null, "a")),
+        "s field" -> arr(elem(1L, null)))) {
+      val e = intercept[IllegalArgumentException](SketchEval.hashedIntersectCount(ok, bad))
+      assert(e.getMessage.contains("hashed_intersect_count") &&
+        e.getMessage.contains(what), e.getMessage)
+    }
+    // the generated-code path: the task fails with the same cause
+    val df = spark.range(0, 4).select(expr("array(named_struct('h', id, 's', " +
+        "cast(id as string)))").as("a"),
+      expr("array(named_struct('h', id, 's', if(id = 2, null, cast(id as string))))").as("b"))
+      .select(graft.functions.SketchExpressions.hashed_intersect_count($"a", $"b"))
+    val e = intercept[Exception](df.collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("hashed_intersect_count: null s field")), causes)
+  }
 }
