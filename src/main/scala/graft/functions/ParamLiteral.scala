@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** A non-null primitive [[Literal]] whose generated code reads its value
   * from the compiled class's `references` array instead of spelling it in
@@ -31,6 +31,31 @@ class ParamLiteral(v: Any, t: DataType) extends Literal(v, t) {
 
 object ParamLiteral {
   def apply(d: Double): Literal = new ParamLiteral(d, DoubleType)
+
+  /** The bound `b` of `field >= b` that keeps the rows of
+    * `field >= lo` for a field of type `t`: `lo` itself, or, for a FLOAT
+    * field, the least float ≥ `lo`. A float field compared with a double
+    * is widened, and `UnwrapCastInBinaryComparison` then rewrites the
+    * comparison into a plain float `Literal` that is spelled into the
+    * generated Java; comparing in the field's own type keeps the bound a
+    * parameter. NaN and ±∞ map to themselves.
+    */
+  def atLeast(lo: Double, t: DataType): Literal = t match {
+    case FloatType =>
+      val f = lo.toFloat
+      new ParamLiteral(if (f < lo) Math.nextUp(f) else f, FloatType)
+    case _ => apply(lo)
+  }
+
+  /** As [[atLeast]] for `field <= hi`: for a FLOAT field, the greatest
+    * float ≤ `hi`.
+    */
+  def atMost(hi: Double, t: DataType): Literal = t match {
+    case FloatType =>
+      val f = hi.toFloat
+      new ParamLiteral(if (f > hi) Math.nextDown(f) else f, FloatType)
+    case _ => apply(hi)
+  }
 
   /** Name of a field of the generated class of Java type `javaType`
     * that holds `v`. The value travels in `references` and the field is

@@ -2876,7 +2876,8 @@ object SketchExpressions {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val dref = ctx.addReferenceObj("dotLut", dotLut, "double[][]")
       val nref = ctx.addReferenceObj("normLut", normLut, "double[][]")
-      defineCodeGen(ctx, ev, c => s"$E.pqAdcCosine($c, $dref, $nref, $qNorm)")
+      val qref = ParamLiteral.field(ctx, "qNorm", qNorm, "double")
+      defineCodeGen(ctx, ev, c => s"$E.pqAdcCosine($c, $dref, $nref, $qref)")
     }
     override protected def withNewChildInternal(newChild: Expression) =
       copy(child = newChild)

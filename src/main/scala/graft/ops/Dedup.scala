@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate,
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Deduplication operators for large-scale text pipelines (builder-prompt
   * surface). All shapes are shuffle-conscious:
@@ -812,12 +812,29 @@ object Dedup {
 
   /** Connected components over near-dup pairs: every document in a dup
     * cluster gets the cluster's minimum id as its label (the canonical
-    * "keeper"). Hash-to-min label propagation — each iteration is one
-    * join + one aggregate, both keyed on the id, and converges in
-    * O(cluster diameter) rounds; dup clusters are shallow in practice,
-    * so this is the standard corpus-scale formulation (no driver-side
-    * graph). Throws IllegalStateException when `maxIter` rounds do not
-    * converge.
+    * "keeper"). Returns (id, cluster_id), one row per id in a pair.
+    *
+    * The pair set is checkpointed once, then one of two paths runs:
+    *  - local: the ids are integral, no pair holds a null id, and the
+    *    label table (at most 2n rows of two longs, 32·n bytes for n
+    *    pairs) fits the session's `spark.sql.autoBroadcastJoinThreshold`,
+    *    the size below which Spark already moves a relation through the
+    *    driver to broadcast it. One job counts the pairs; only then are
+    *    they collected, with that bound declared to
+    *    [[graft.util.CollectCapped]]. A union-find on the driver, with
+    *    the smaller id always the root, labels them, and the labels come
+    *    back as a local relation with the distributed path's schema.
+    *    This path cannot fail to converge; `maxIter` does not apply.
+    *  - distributed, for every other pair set: hash-to-min label
+    *    propagation. Each round is one join + one aggregate, both keyed
+    *    on the id, and it converges in O(cluster diameter) rounds. Throws
+    *    IllegalStateException when `maxIter` rounds do not converge.
+    *    Pair sets above the bound (the ×100 tier's 31 M pHash pairs) can
+    *    only run here.
+    *
+    * After the checkpoint, the local path runs 2 Spark jobs (count,
+    * collect) where a small pair set's distributed rounds ran about 13,
+    * each dominated by job latency rather than pair volume.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 20): DataFrame = {
@@ -839,12 +856,66 @@ object Dedup {
     // halved the ×100 tier's CC time. Also doubles as the node set
     // (symmetric edges: every node appears as s), replacing the
     // separate distinct() pass.
-    var labels = edges.groupBy(col("s").as("id"))
+    val round1 = edges.groupBy(col("s").as("id"))
       .agg(min(col("t")).as("__nbr"))
       .select(col("id"),
         least(col("id"), col("__nbr")).as("cluster_id"),
         (col("__nbr") < col("id")).as("__chg"))
-      .localCheckpoint(false)
+    // the output schema comes from analysis alone (no job), so both
+    // paths return the same one
+    unionFindLabels(base, round1.drop("__chg").schema)
+      .getOrElse(hashToMin(edges, round1, maxIter))
+  }
+
+  /** The local path of [[connectedComponents]] over the checkpointed
+    * pairs `base` (`__a`, `__b`), or None when the pair set is not
+    * eligible for it.
+    */
+  private def unionFindLabels(base: DataFrame, schema: StructType): Option[DataFrame] = {
+    val box: Long => Any = schema("id").dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case LongType => v => v
+      case _ => return None
+    }
+    val sess = base.sparkSession
+    val maxPairs = sess.sessionState.conf.autoBroadcastJoinThreshold / 32
+    if (maxPairs <= 0) return None
+    // one job over the checkpointed blocks: pairs, and pairs with a null
+    // id (a null id takes the distributed path, whose labels define it)
+    val (n, withNull) = base.queryExecution.toRdd.mapPartitions { it =>
+      var n, z = 0L
+      it.foreach { r => n += 1; if (r.isNullAt(0) || r.isNullAt(1)) z += 1 }
+      Iterator((n, z))
+    }.fold((0L, 0L)) { case ((n1, z1), (n2, z2)) => (n1 + n2, z1 + z2) }
+    if (n > maxPairs || withNull > 0) return None
+    val got = graft.util.CollectCapped(base, maxPairs,
+      "connected-components pair set")
+    def id(v: Any): Long = v.asInstanceOf[Number].longValue
+    // dense node index in id order: the smaller index is the smaller id
+    val nodes = got.flatMap(r => Array(id(r.get(0)), id(r.get(1)))).distinct.sorted
+    val parent = Array.range(0, nodes.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (r <- got) {
+      val a = find(java.util.Arrays.binarySearch(nodes, id(r.get(0))))
+      val b = find(java.util.Arrays.binarySearch(nodes, id(r.get(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val rows = nodes.indices.map(i =>
+      org.apache.spark.sql.Row(box(nodes(i)), box(nodes(find(i)))))
+    Some(sess.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  /** The distributed path of [[connectedComponents]]: hash-to-min rounds
+    * from the first round's labels until no label changes.
+    */
+  private def hashToMin(edges: DataFrame, round1: DataFrame, maxIter: Int): DataFrame = {
+    var labels = round1.localCheckpoint(false)
     var converged = !graft.util.CollectCapped(
       labels.agg(coalesce(max(col("__chg")), lit(false))), 1,
       "connected-components convergence flag")(0).getBoolean(0)

@@ -1656,7 +1656,9 @@ object Multimodal {
   }
 
   /** Keep-one video dedup over the near-dup pair graph: pairs →
-    * hash-to-min connected components (transitive closure), then every
+    * minimum-id connected components (transitive closure; a driver
+    * union-find when the pair set is small, see
+    * [[Dedup.connectedComponents]]), then every
     * document left-joins its component label — unpaired documents are
     * their own cluster. Output (doc_id, cluster_id, is_dup), the q20
     * contract with a decoded-video key.

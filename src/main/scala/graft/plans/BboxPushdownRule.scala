@@ -157,6 +157,13 @@ object BboxPushdownRule extends Rule[LogicalPlan] {
   private def field(b: Attribute, name: String): Expression =
     GetStructField(b, b.dataType.asInstanceOf[StructType].fieldIndex(name), Some(name))
 
+  // the bound in the covering field's own type: the plan is analyzed, so
+  // a double bound on a FLOAT field would not be widened for it
+  private def atLeast(f: Expression, lo: Double): Expression =
+    GreaterThanOrEqual(f, ParamLiteral.atLeast(lo, f.dataType))
+  private def atMost(f: Expression, hi: Double): Expression =
+    LessThanOrEqual(f, ParamLiteral.atMost(hi, f.dataType))
+
   /** already has a bbox conjunct? (idempotence guard) */
   private def touchesBbox(cond: Expression, b: Attribute): Boolean =
     cond.exists {
@@ -196,10 +203,8 @@ object BboxPushdownRule extends Rule[LogicalPlan] {
             })
             (x0, y0, x1, y1) <- literalEnvelope(c).orElse(literalEnvelope(a))
           } added ++= Seq(
-            GreaterThanOrEqual(field(b, "xmax"), ParamLiteral(x0)),
-            LessThanOrEqual(field(b, "xmin"), ParamLiteral(x1)),
-            GreaterThanOrEqual(field(b, "ymax"), ParamLiteral(y0)),
-            LessThanOrEqual(field(b, "ymin"), ParamLiteral(y1)))
+            atLeast(field(b, "xmax"), x0), atMost(field(b, "xmin"), x1),
+            atLeast(field(b, "ymax"), y0), atMost(field(b, "ymin"), y1))
         case _ => ()
       }
       if (added.isEmpty) f

@@ -208,7 +208,9 @@ object OpsQueries {
         ORDER BY sim DESC, vec_id LIMIT 10""")),
 
     // ---- near-dup cluster resolution (pairs -> canonical keeper) -------
-    // Connected components by distributed hash-to-min propagation; the
+    // Connected components (`Dedup.connectedComponents`: a driver
+    // union-find for a pair set within the broadcast threshold, as here,
+    // else distributed hash-to-min rounds; both label by minimum id); the
     // oracle recomputes the same clusters with a recursive transitive
     // closure over the brute-force Jaccard pair set.
     QueryDef(
@@ -434,7 +436,7 @@ object OpsQueries {
     // ---- perceptual-dup cluster resolution (q175 pairs → q39 CC) -------
     // Closes the multimodal dedup family the way q39 closes minhash:
     // the Hamming≤3 pair graph resolves to keep-one clusters via the
-    // same iterative hash-to-min connectedComponents, and the oracle
+    // same connectedComponents (minimum-id labels), and the oracle
     // replays pairs from the pixel formula plus the recursive reach
     // closure — certifying that the decoded-pixel path and the formula
     // path agree not just pairwise but transitively.
@@ -665,7 +667,7 @@ object OpsQueries {
     // prefix-filtered frame-hash inverted index + exact-count join-back
     // (round-17 `videoNearDups` — lossless here: no bucket near the
     // cap, every video ≤ 8 frames so the proportional bar reduces to
-    // the absolute rule), resolved to keep-one clusters by hash-to-min
+    // the absolute rule), resolved to keep-one clusters by minimum-id
     // connected components. The oracle replays pixels → aHash bits →
     // pair counts → recursive closure, so the cross-engine hash match
     // certifies container decode, the frame key, and the clustering.

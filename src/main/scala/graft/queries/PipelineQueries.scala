@@ -7,7 +7,7 @@ import QueryDef.table
   * [[graft.ops.Pipeline.curate]] replayed relationally by the oracle —
   * quality gate, PII scrub, exact dedup, brute-force Jaccard near-dup
   * pairs + recursive transitive closure (certifying the banded-LSH +
-  * hash-to-min formulation end to end), shingle decontamination, and
+  * connected-components formulation end to end), shingle decontamination, and
   * the global prefix-sum packing. The oracle reuses the exact CTE
   * fragments already certified one-by-one in q48/q49/q20/q28/q39/q50/
   * q52, chained on each stage's survivor set.

@@ -116,7 +116,10 @@ final case class GeoTable(
     * as [[ParamLiteral]]s: a `Literal` subclass rather than a new leaf
     * expression, because Spark builds the Parquet `PushedFilters` (and
     * so row-group pruning) only from comparisons against a `Literal`.
-    * [[EnvelopeInBox]] reads it from a field of the generated class.
+    * Each bound takes its covering field's type ([[ParamLiteral.atLeast]]),
+    * so a FLOAT covering is not widened into a spelled float literal.
+    * [[EnvelopeInBox]] reads the window from a field of the generated
+    * class.
     */
   def filterBbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double): GeoTable = {
     // warn rather than fail, like the reference (`_warn_if_crs_mismatch`,
@@ -150,11 +153,16 @@ final case class GeoTable(
       .filter(df.columns.contains).filter(bboxShaped)
       .orElse(GeoMeta.BboxNameCandidates.find(c =>
         df.columns.contains(c) && bboxShaped(c)))
-    def param(d: Double): Column = GraftBridge.column(ParamLiteral(d))
     val pred = bboxCol match {
       case Some(b) =>
-        col(s"$b.xmax") >= param(xmin) && col(s"$b.xmin") <= param(xmax) &&
-          col(s"$b.ymax") >= param(ymin) && col(s"$b.ymin") <= param(ymax)
+        // each bound in its field's own type (a FLOAT covering is legal)
+        val fields = df.schema(b).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+        def atLeast(f: String, lo: Double): Column = col(s"$b.$f") >=
+          GraftBridge.column(ParamLiteral.atLeast(lo, fields(f).dataType))
+        def atMost(f: String, hi: Double): Column = col(s"$b.$f") <=
+          GraftBridge.column(ParamLiteral.atMost(hi, fields(f).dataType))
+        atLeast("xmax", xmin) && atMost("xmin", xmax) &&
+          atLeast("ymax", ymin) && atMost("ymin", ymax)
       case None =>
         GraftBridge.column(EnvelopeInBox(
           StEnvelope(GraftBridge.expression(col(geomCol))), xmin, ymin, xmax, ymax))

@@ -16,6 +16,33 @@ class BenchToolingSpec extends AnyFunSuite {
       p.waitFor(20, java.util.concurrent.TimeUnit.SECONDS) && p.exitValue() == 0
     } catch { case _: Throwable => false }
 
+  test("Prof timeline: driver gaps between jobs, stages that ran, call site " +
+      "outside graft.util") {
+    import graft.tools.Prof
+    val details = "org.apache.spark.sql.Dataset.collect(Dataset.scala:1)\n" +
+      "graft.util.CollectCapped$.apply(CollectCapped.scala:27)\n" +
+      "graft.ops.Dedup$.unionFindLabels(Dedup.scala:880)\n" +
+      "graft.ops.Dedup$.connectedComponents(Dedup.scala:860)"
+    assert(Prof.callSite(details, "", "collect at CollectCapped.scala:27") ==
+      "graft.ops.Dedup$.unionFindLabels(Dedup.scala:880)")
+    // an AQE job's stage: the SQL execution's call site, else the name
+    val aqe = "java.util.concurrent.CompletableFuture.run(CompletableFuture.java:1768)"
+    assert(Prof.callSite(aqe, details, "x") ==
+      "graft.ops.Dedup$.unionFindLabels(Dedup.scala:880)")
+    assert(Prof.callSite(aqe, "", "count at X:1") == "count at X:1")
+    val jobs = Seq(
+      Prof.Job(7, 1010, 1030, Seq(Prof.Stage(3, 4, "a"), Prof.Stage(4, 2, "b"))),
+      Prof.Job(8, 1050, 1060, Seq(Prof.Stage(5, 1, "c"))))
+    val out = Prof.render("q", jobs, 1000, 1075).linesIterator.toSeq
+    // gaps 10 + 20 before the jobs, 15 after the last: 45 of 75 ms
+    assert(out.head == "q: wall 75 ms, 2 jobs, job time 30 ms, driver gap 45 ms " +
+      "(after the last job 15 ms)", out.head)
+    assert(out(2).split("\\s+").filter(_.nonEmpty).toSeq ==
+      Seq("7", "10", "10", "20", "2", "6", "b"), out(2))
+    assert(out(3).split("\\s+").filter(_.nonEmpty).toSeq ==
+      Seq("8", "50", "20", "10", "1", "1", "c"), out(3))
+  }
+
   test("timeOracleSameWindow times a real query against the sf tables") {
     assume(duckdbAvailable, "python3+duckdb not in this image")
     val t = Bench.timeOracleSameWindow("/root/testdata/sf0.001",

@@ -6,6 +6,7 @@ import graft.functions.geo
 import graft.meta.{Footer, GeoMeta}
 import graft.table.GeoTable
 import graft.checks.Checks
+import graft.SparkTestSession.{generatedSources, jobsDuring, withConf}
 
 class GeoTableSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -131,13 +132,6 @@ class GeoTableSpec extends AnyFunSuite {
     b.productIterator.map(v =>
       java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])).toSeq
 
-  /** `body` with session conf `key` set to `value`, restored after. */
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try body finally spark.conf.set(key, old)
-  }
-
   /** `body` with AQE's shuffle-partition coalescing set to `on`. */
   private def coalescing[T](on: Boolean)(body: => T): T =
     withConf("spark.sql.adaptive.coalescePartitions.enabled", on.toString)(body)
@@ -205,23 +199,6 @@ class GeoTableSpec extends AnyFunSuite {
     assert(g.dataBounds.map(bits).contains(bits(aggBounds(g))))
     assert(sortFixture(100, empties = false).filterWhere("id % 13 = 0")
       .dataBounds.isEmpty)
-  }
-
-  /** `f`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("sortHilbert plan: one sketch job, no range exchange") {
@@ -324,22 +301,6 @@ class GeoTableSpec extends AnyFunSuite {
         if (r.isNullAt(i)) None else Some(raw(r.getDouble(i))))).toSeq)
   }
 
-  /** The Java source of each whole-stage codegen stage of `df`'s
-    * physical plan, the text Spark's codegen cache is keyed by; AQE off,
-    * so the plan holds its final stages. Every stage must compile: a
-    * stage that does not runs interpreted, and its text would show code
-    * that never runs.
-    */
-  private def generatedSources(df: => org.apache.spark.sql.DataFrame): Seq[String] =
-    withConf("spark.sql.adaptive.enabled", "false") {
-      df.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-          val code = w.doCodeGen()._2
-          org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compile(code)
-          code.body
-      }
-    }
-
   /** Calls into `GeoEval` in the generated code of `df`'s physical plan,
     * by method name.
     */
@@ -440,16 +401,33 @@ class GeoTableSpec extends AnyFunSuite {
         .df.count(), s"$w")
   }
 
-  test("filterBbox keeps the rows of plain-Literal comparisons on the edge " +
-      "table: closed edges, -0.0, NaN and infinite box edges, empty and null") {
+  /** Closed edges, -0.0, coordinates just off the box, empty and null. */
+  private def edgeTable: GeoTable = {
     val wkts = Seq(Some("POINT (10 10)"), Some("POINT (0 0)"), Some("POINT (-0.0 3)"),
       Some("POINT (3 -0.0)"), Some("POINT (10.000001 5)"), Some("POINT (5 -1e-9)"),
       Some("LINESTRING (11 0, 12 12)"), Some("LINESTRING (-3 -3, 0 0)"),
       Some("POLYGON ((-5 -5, 20 -5, 20 20, -5 20, -5 -5))"),
       Some("MULTIPOINT ((-1 -1), (11 11))"), Some("POINT EMPTY"),
       Some("POLYGON EMPTY"), None)
-    val t = GeoTable.fromDataFrame(wkts.toDF("wkt")
+    GeoTable.fromDataFrame(wkts.toDF("wkt")
       .select(col("wkt"), geo.st_geomfromtext(col("wkt")).as("geometry")), "geometry")
+  }
+
+  /** `t` with its covering written as FLOAT fields (spec-legal; other
+    * writers produce it) under a fresh directory.
+    */
+  private def writeFloatCovered(t: GeoTable, name: String): String = {
+    val path = tmpDir(name)
+    val c = t.addBbox()
+    c.copy(df = c.df.withColumn("bbox", col("bbox")
+      .cast("struct<xmin:float,ymin:float,xmax:float,ymax:float>")
+      .as("bbox", c.df.schema("bbox").metadata))).write(path)
+    path
+  }
+
+  test("filterBbox keeps the rows of plain-Literal comparisons on the edge " +
+      "table: closed edges, -0.0, NaN and infinite box edges, empty and null") {
+    val t = edgeTable
     // read back from Parquet, so the filters run in generated code rather
     // than folded over a local relation
     val covered = tmpDir("edge_covered")
@@ -468,6 +446,69 @@ class GeoTableSpec extends AnyFunSuite {
         assert(GeoTable.read(spark, path).filterBbox(w._1, w._2, w._3, w._4).df
           .select("wkt").as[String].collect().toSeq.sorted == want, s"$path $w")
     }
+  }
+
+  test("filterBbox on a FLOAT covering: a new window reuses the generated " +
+      "code; the four comparisons still push down") {
+    val path = writeFloatCovered(pointsTable(2000), "float_param")
+    val t = GeoTable.read(spark, path)
+    assert(t.df.schema("bbox").dataType.sql ==
+      "STRUCT<xmin: FLOAT, ymin: FLOAT, xmax: FLOAT, ymax: FLOAT>")
+    def filtered(w: (Double, Double, Double, Double)) =
+      t.filterBbox(w._1, w._2, w._3, w._4).df
+    val src1 = generatedSources(filtered(W1))
+    assert(src1.nonEmpty && src1 == generatedSources(filtered(W2)),
+      "the window changed the generated code")
+    for (d <- Seq(W1, W2).flatMap(_.productIterator).map(_.asInstanceOf[Double]);
+        s <- Seq(math.abs(d).toString, math.abs(d.toFloat).toString))
+      assert(!src1.mkString.contains(s), s"$s in the source")
+    val pushed = pushedFilters(filtered(W1))
+    assert(pushed.size == 1, pushed)
+    def f(l: org.apache.spark.sql.catalyst.expressions.Literal) = l.value.toString
+    import graft.functions.ParamLiteral.{atLeast, atMost}
+    import org.apache.spark.sql.types.FloatType
+    for (c <- Seq(s"GreaterThanOrEqual(bbox.xmax,${f(atLeast(W1._1, FloatType))})",
+        s"LessThanOrEqual(bbox.xmin,${f(atMost(W1._3, FloatType))})",
+        s"GreaterThanOrEqual(bbox.ymax,${f(atLeast(W1._2, FloatType))})",
+        s"LessThanOrEqual(bbox.ymin,${f(atMost(W1._4, FloatType))})"))
+      assert(pushed.head.contains(c), s"$c not in ${pushed.head}")
+    // the st_intersects rule compares in the field's type as well
+    graft.plans.GraftExtensions.install(spark)
+    def query(w: (Double, Double, Double, Double)) = spark.read.parquet(path)
+      .filter(geo.st_intersects(col("geometry"), geo.st_makeenvelope(w._1, w._2, w._3, w._4)))
+    val rule1 = generatedSources(query(W1))
+    assert(rule1.nonEmpty && rule1 == generatedSources(query(W2)))
+    assert(pushedFilters(query(W1)).exists(_.contains("GreaterThanOrEqual(bbox.xmax,")))
+    for (w <- Seq(W1, W2))
+      assert(query(w).count() == filtered(w).count(), s"$w")
+  }
+
+  test("filterBbox on a FLOAT covering keeps the rows of the plain double " +
+      "comparison: window edges a float cannot hold, -0.0, NaN and ±∞") {
+    val path = writeFloatCovered(edgeTable, "float_edge")
+    // the reference: the widened double comparison evaluated as written
+    // (the rule that would narrow it to float literals excluded)
+    def want(w: (Double, Double, Double, Double)): Seq[String] =
+      withConf("spark.sql.optimizer.excludedRules",
+          "org.apache.spark.sql.catalyst.optimizer.UnwrapCastInBinaryComparison") {
+        spark.read.parquet(path).filter(
+          col("bbox.xmax").cast("double") >= lit(w._1) &&
+            col("bbox.xmin").cast("double") <= lit(w._3) &&
+            col("bbox.ymax").cast("double") >= lit(w._2) &&
+            col("bbox.ymin").cast("double") <= lit(w._4))
+          .select("wkt").as[String].collect().toSeq.sorted
+      }
+    val inf = Double.PositiveInfinity
+    val windows = Seq((0.1, 0.1, 9.9999999, 9.9999999), (10.0000001, -1e-50, 20.0, 20.0),
+      (0.0, 0.0, 10.0000009, 10.0), (-1e-50, -1e-50, 1e-50, 3.0000001),
+      (-0.0, -0.0, 10.0, 10.0), (0.0, 0.0, Double.NaN, Double.NaN),
+      (Double.NaN, Double.NaN, 10.0, 10.0), (-inf, -inf, inf, inf), (inf, inf, -inf, -inf),
+      (-1e300, -1e300, 1e300, 1e300), (1e300, 1e300, -1e300, -1e300))
+    // the windows must cut through float rounding, not only whole rows
+    assert(windows.map(want).distinct.size > 5)
+    for (w <- windows)
+      assert(GeoTable.read(spark, path).filterBbox(w._1, w._2, w._3, w._4).df
+        .select("wkt").as[String].collect().toSeq.sorted == want(w), s"$w")
   }
 
   test("key bounds and precision grids at NaN and ±Infinity stay in " +

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{Ann, Dedup, Hashing, KdTree, Multimodal, SpatialJoin}
+import graft.SparkTestSession.{generatedSources, jobsDuring, withConf}
 
 class OpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -216,15 +217,93 @@ class OpsSpec extends AnyFunSuite {
     assert(chain.values.toSet == Set(1L) && chain.size == 12)
   }
 
+  /** `body` with connected components forced onto the distributed path. */
+  private def distributedCc[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  /** Whether `labels` came back as the local path's local relation. */
+  private def isLocal(labels: org.apache.spark.sql.DataFrame): Boolean =
+    labels.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
   test("connected components raise instead of returning unconverged labels") {
-    // path 1-2-3-4: hash-to-min needs more than one round
+    // path 1-2-3-4: hash-to-min needs more than one round; only the
+    // distributed path iterates, so only it can fail to converge
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-    val e = intercept[IllegalStateException](
-      Dedup.connectedComponents(path, maxIter = 1))
-    assert(e.getMessage.contains("maxIter = 1"), e.getMessage)
-    val labels = Dedup.connectedComponents(path)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    distributedCc {
+      val e = intercept[IllegalStateException](
+        Dedup.connectedComponents(path, maxIter = 1))
+      assert(e.getMessage.contains("maxIter = 1"), e.getMessage)
+      val labels = Dedup.connectedComponents(path)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    }
+    // the local union-find has no rounds: exact min ids at maxIter = 1
+    val local = Dedup.connectedComponents(path, maxIter = 1)
+    assert(isLocal(local))
+    assert(local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+  }
+
+  test("connected components: the local union-find and the distributed " +
+      "hash-to-min loop give identical rows and schema") {
+    // one seeded graph: a chain longer than 20 hops, a star, self-pairs,
+    // duplicate and reversed pairs, and random sparse edges, over
+    // shuffled ids so the minimum sits anywhere in each component
+    def graph(seed: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1L to 400L).toVector).map(_ * 7 + seed)
+      val chain = (0 until 24 + rnd.nextInt(8)).map(i => (ids(i), ids(i + 1)))
+      val star = (41 until 41 + 5 + rnd.nextInt(10)).map(i => (ids(40), ids(i)))
+      val selfs = (60 until 64).map(i => (ids(i), ids(i)))
+      val loose = Seq.fill(40)((ids(100 + rnd.nextInt(200)), ids(100 + rnd.nextInt(200))))
+      val all = chain ++ star ++ selfs ++ loose
+      val dups = Seq.fill(8)(all(rnd.nextInt(all.size)))
+      val flipped = Seq.fill(8)(all(rnd.nextInt(all.size))).map(_.swap)
+      rnd.shuffle(all ++ dups ++ flipped)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for (seed <- 1 to 4) {
+      val g = graph(seed)
+      val asInt = seed % 2 == 1
+      val pairs = if (asInt) g.map { case (a, b) => (a.toInt, b.toInt) }.toDF("id_a", "id_b")
+        else g.toDF("id_a", "id_b")
+      val local = Dedup.connectedComponents(pairs, maxIter = 64)
+      val dist = distributedCc(Dedup.connectedComponents(pairs, maxIter = 64))
+      assert(isLocal(local) && !isLocal(dist), s"seed $seed int $asInt")
+      assert(local.schema == dist.schema, s"seed $seed int $asInt")
+      assert(rows(local) == rows(dist), s"seed $seed int $asInt")
+      // and both are the component minimum
+      val byLabel = local.collect().groupBy(_.get(1)).map { case (k, rs) =>
+        k.asInstanceOf[Number].longValue -> rs.map(_.get(0).asInstanceOf[Number].longValue) }
+      byLabel.foreach { case (k, members) => assert(members.min == k, s"seed $seed") }
+    }
+  }
+
+  test("connected components: null ids and string ids keep the distributed " +
+      "path's rows") {
+    val withNull = Seq[(Option[Long], Option[Long])]((Some(5L), None), (Some(3L), Some(5L)),
+      (None, Some(9L)), (Some(9L), Some(8L)), (None, None)).toDF("id_a", "id_b")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val viaDefault = Dedup.connectedComponents(withNull)
+    val viaLoop = distributedCc(Dedup.connectedComponents(withNull))
+    assert(viaDefault.schema == viaLoop.schema)
+    assert(rows(viaDefault) == rows(viaLoop))
+    // string ids are not integral: the distributed loop, still min labels
+    val strs = Seq(("b", "c"), ("c", "d"), ("x", "y"), ("a", "a")).toDF("id_a", "id_b")
+    val labels = Dedup.connectedComponents(strs)
+    assert(!isLocal(labels))
+    assert(labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "b", "c" -> "b", "d" -> "b", "x" -> "x", "y" -> "x"))
+  }
+
+  test("connected components on a small pair set run at most 4 Spark jobs") {
+    val pairs = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (labels, jobs) = jobsDuring(Dedup.connectedComponents(pairs).collect())
+    assert(jobs <= 4, s"connectedComponents ran $jobs jobs")
+    assert(labels.length == 30 && labels.forall(_.getLong(1) == 1L))
   }
 
   test("multimodal decode keeps schema and is partition-local") {
@@ -1102,6 +1181,33 @@ class OpsSpec extends AnyFunSuite {
       .groupBy(_.getInt(1)).view.mapValues(_.map(_.getLong(0)).toSet).toMap
     assert(byCluster.values.toSet ==
       Set((0L until 20L).toSet, (20L until 40L).toSet))
+  }
+
+  test("pq_adc_cosine: a new query norm reuses the generated code; NaN and " +
+      "±Infinity norms stay in whole-stage codegen and equal eval") {
+    import graft.functions.SketchExpressions
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+    val dotLut = Array(Array(0.5, -0.25), Array(1.0, 0.125))
+    val normLut = Array(Array(1.0, 2.0), Array(0.5, 4.0))
+    val codes = spark.range(16).select(
+      array((col("id") % 2).cast("int"), (col("id") / 2 % 2).cast("int")).as("c"))
+    def adc(qNorm: Double) =
+      codes.select(SketchExpressions.pq_adc_cosine(col("c"), dotLut, normLut, qNorm))
+    val src = generatedSources(adc(1.2345678))
+    assert(src.nonEmpty && src == generatedSources(adc(8.7654321)),
+      "the query norm changed the generated code")
+    assert(!src.mkString.contains("1.2345678"))
+    val rows = codes.collect().map(r =>
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(r.getSeq[Int](0).toArray))
+    for (q <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 3.5)) {
+      assert(generatedSources(adc(q)).mkString.contains("SketchEval.pqAdcCosine("), s"$q")
+      val got = adc(q).collect().map(r => java.lang.Double.doubleToLongBits(r.getDouble(0)))
+      val want = rows.map(c => java.lang.Double.doubleToLongBits(
+        SketchExpressions.PqAdcCosine(Literal(c, ArrayType(IntegerType, containsNull = false)),
+          dotLut, normLut, q).eval().asInstanceOf[Double]))
+      assert(got.toSeq == want.toSeq, s"$q")
+    }
   }
 
   test("pq: codebook training, encode/adc contracts, empty-code fallback") {
