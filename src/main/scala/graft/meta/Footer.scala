@@ -1,7 +1,7 @@
 package graft.meta
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -85,210 +85,157 @@ object Footer {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
-  /** NIO part-file listing WITH stat data (length, mtime) in one pass —
-    * the listing Spark's InMemoryFileIndex needs, produced at NIO walk
-    * speed (0.26 s at 3×10⁴ dirs where Spark's no-native-hadoop local
-    * listing pays an `ls` per file, 17-19 s — DirScale r15). Local
-    * scheme only; None tells the caller to use Spark's own listing.
-    * walkFileTree supplies BasicFileAttributes to the visitor, so size
-    * and mtime cost no extra stat; FOLLOW_LINKS + its built-in cycle
-    * detection mirror the partFiles walk.
+  /** A child the walk reaches, by name. Its status (symlinks followed)
+    * and a key naming what it resolves to, for the cycle guard, are read
+    * on first use, so a walk that stops early stats only what it visits.
+    * `stat` is None for a child that vanished, dangles or is neither a
+    * directory nor a regular file: the walk skips it, as Spark's listing
+    * skips it.
+    */
+  private final class Node(val name: String,
+      read: () => Option[(FileStatus, AnyRef)]) {
+    lazy val stat: Option[(FileStatus, AnyRef)] = read()
+    def isDir: Boolean = stat.exists(_._1.isDirectory)
+  }
+
+  /** One file the walk yields: a part, or a foreign file. */
+  private final case class Found(status: FileStatus, part: Boolean)
+
+  /** `path`'s own node and the walk's one backend call, a directory's
+    * children: the only part of the walk that differs by backend.
+    *  - Local paths list through NIO: without the native-hadoop library,
+    *    Hadoop's local listing forks an `ls` per file for its permissions
+    *    (17-19 s at 3×10⁴ directories where NIO takes 0.26 s, DirScale
+    *    r15). One stat per child gives its kind, size and mtime.
+    *  - Any other scheme lists through the path's own Hadoop FileSystem,
+    *    so every store with a connector jar is walked the same way.
+    */
+  private def backend(path: String, conf: Configuration): (Node, Path => Seq[Node]) = {
+    val p = new Path(path)
+    val scheme = p.toUri.getScheme
+    if (scheme == null || scheme == "file") {
+      def nio(d: Path) = java.nio.file.Paths.get(d.toUri.getPath)
+      def node(f: java.nio.file.Path) = new Node(String.valueOf(f.getFileName), () =>
+        try {
+          val a = java.nio.file.Files.readAttributes(f,
+            classOf[java.nio.file.attribute.BasicFileAttributes])
+          if (!a.isDirectory && !a.isRegularFile) None
+          else Some((new FileStatus(a.size, a.isDirectory, 1, 128L * 1024 * 1024,
+              a.lastModifiedTime.toMillis, new Path("file", null, f.toString)),
+            Option(a.fileKey).getOrElse(f.toRealPath())))
+        } catch { case _: java.io.IOException => None })
+      (node(nio(p).toAbsolutePath), d => {
+        val s = java.nio.file.Files.newDirectoryStream(nio(d))
+        try s.asScala.map(node).toVector finally s.close()
+      })
+    } else {
+      val fs = p.getFileSystem(conf)
+      def node(s: FileStatus) = new Node(s.getPath.getName, () => Some((s, s.getPath)))
+      (new Node(p.getName, () =>
+          try node(fs.getFileStatus(p)).stat
+          catch { case _: java.io.FileNotFoundException => None }),
+        d => fs.listStatus(d).toSeq.map(node))
+    }
+  }
+
+  /** The files of `n`'s subtree, listed lazily on the caller's thread
+    * (`up` holds the keys of `n`'s ancestors, empty at the root). This is
+    * the ONE walk that decides which files make up a dataset;
+    * [[partFiles]], [[partFileStatuses]] and [[firstPartFile]] are views
+    * of it and share its rules.
+    *  - Hidden names ([[hiddenName]], Spark's rule) are pruned whole:
+    *    `_temporary` and `.hive-staging*` subtrees are never listed.
+    *  - Every other regular file is a part ([[isPartFileName]]) or
+    *    foreign: Spark's stock listing reads it, though it is no `.parquet`
+    *    part (Hive writes parts without the suffix).
+    *  - Order is full-path string order (see [[children]]), so the
+    *    depth-first walk needs no final sort.
+    *  - Symlinks are followed. The cycle guard cuts only a directory that
+    *    resolves to one of its own ancestors; one reached by two routes is
+    *    walked twice, as Spark's listing does, so a listed read stays
+    *    row-for-row equal to the stock reader.
+    *  - An explicit file path is itself, a part whatever its name.
+    */
+  private def walk(ls: Path => Seq[Node], n: Node,
+      up: List[AnyRef]): Iterator[Found] = n.stat match {
+    case Some((s, _)) if !s.isDirectory =>
+      Iterator.single(Found(s, up.isEmpty || isPartFileName(n.name)))
+    case Some((s, key)) if !up.contains(key) =>
+      children(ls, s.getPath).iterator.flatMap(walk(ls, _, key :: up))
+    case _ => Iterator.empty
+  }
+
+  /** `dir`'s visible children in full-path string order: a directory
+    * sorts under `name + "/"`, a file under `name` (plain name order
+    * would visit `k=a/` before `k=a.b/`, though `.` sorts before `/`).
+    * The two keys differ only against a sibling that extends the name,
+    * so only such a name is statted to sort it.
+    */
+  private def children(ls: Path => Seq[Node], dir: Path): Seq[Node] =
+    ls(dir).filterNot(c => hiddenName(c.name)).sortWith { (a, b) =>
+      def key(n: Node, other: Node) =
+        if (other.name.startsWith(n.name) && n.isDir) n.name + "/" else n.name
+      key(a, b) < key(b, a)
+    }
+
+  /** The whole walk of `path`, None when it does not exist. Wide hive
+    * layouts (10⁴-10⁵ key=value directories) are stat-bound, so each
+    * first-level directory is walked on the bounded pool; a slow remote
+    * listing then costs wall/32. With `stopAtForeign`, every walk stops
+    * once any of them has met a foreign file.
+    */
+  private def listing(path: String, conf: Configuration,
+      stopAtForeign: Boolean): Option[Seq[Found]] = {
+    val (root, ls) = backend(path, conf)
+    root.stat.map { case (rs, rkey) =>
+      val foreign = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def drain(it: Iterator[Found]): Seq[Found] =
+        it.takeWhile(_ => !(stopAtForeign && foreign.get))
+          .tapEach(f => if (!f.part) foreign.set(true)).toVector
+      if (!rs.isDirectory) drain(walk(ls, root, Nil))
+      else {
+        val top = children(ls, rs.getPath)
+        val up = List(rkey)
+        val subtrees = fanOut(top.filter(_.isDir), serialUpTo = 4)(d =>
+          drain(walk(ls, d, up))).iterator
+        top.flatMap(n => if (n.isDir) subtrees.next() else drain(walk(ls, n, up)))
+      }
+    }
+  }
+
+  /** The walk's part files, for read planning: with stat data (length,
+    * mtime), the listing Spark's InMemoryFileIndex needs. None when the
+    * path is missing, unlistable or holds a foreign file (a partial
+    * listing would drop that file's rows), so the caller falls back to
+    * the stock reader, which raises the stock errors.
     */
   private[graft] def partFileStatuses(path: String,
-      conf: Configuration = newConf()): Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
-    val p = new Path(path)
-    val uri = p.toUri
-    // non-local schemes (round-17, VERDICT r16 #6): the same
-    // per-first-level-directory parallel walk through the path's OWN
-    // Hadoop FileSystem — any scheme with a connector jar present gets
-    // the prefilled-index read planning; failures/missing paths return
-    // None so the stock reader keeps raising canonical errors
-    if (uri.getScheme != null && uri.getScheme != "file")
-      return try fsPartFileStatuses(p, conf)
-        catch { case _: Throwable => None }
-    val base = java.nio.file.Paths.get(uri.getPath)
-    if (!java.nio.file.Files.exists(base)) return None
-    // an explicit FILE path is read as-is (the partFiles contract —
-    // name filtering applies only to directory walks)
-    if (java.nio.file.Files.isRegularFile(base))
-      return Some(Seq(new org.apache.hadoop.fs.FileStatus(
-        java.nio.file.Files.size(base), false, 1, 128L * 1024 * 1024,
-        java.nio.file.Files.getLastModifiedTime(base).toMillis,
-        new Path(base.toUri))))
-    // Equivalence guard (ADVICE r16): Spark's stock listing includes
-    // every non-hidden file REGARDLESS of extension (Hive writes valid
-    // parquet parts without a .parquet suffix), so a tree containing a
-    // non-hidden file that fails isPartFileName must NOT take the fast
-    // path — a partial listing would silently drop those rows. Any such
-    // "foreign" file aborts the walk and returns None (stock reader).
-    // Hidden subtrees (`_`/`.`-prefixed dirs: _temporary staging,
-    // .hive-staging) are pruned whole — stock discovery skips them too,
-    // and their contents must neither be listed nor count as foreign.
-    val foreign = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def walkOne(root: java.nio.file.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      java.nio.file.Files.walkFileTree(root,
-        java.util.EnumSet.of(java.nio.file.FileVisitOption.FOLLOW_LINKS),
-        Integer.MAX_VALUE,
-        new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
-          override def preVisitDirectory(d: java.nio.file.Path,
-              attrs: java.nio.file.attribute.BasicFileAttributes)
-              : java.nio.file.FileVisitResult =
-            if (d != root && hiddenName(d.getFileName.toString))
-              java.nio.file.FileVisitResult.SKIP_SUBTREE
-            else if (foreign.get()) java.nio.file.FileVisitResult.TERMINATE
-            else java.nio.file.FileVisitResult.CONTINUE
-          override def visitFile(f: java.nio.file.Path,
-              attrs: java.nio.file.attribute.BasicFileAttributes)
-              : java.nio.file.FileVisitResult = {
-            val name = f.getFileName.toString
-            if (attrs.isRegularFile && isPartFileName(name)) {
-              out += new org.apache.hadoop.fs.FileStatus(attrs.size(), false,
-                1, 128L * 1024 * 1024, attrs.lastModifiedTime().toMillis,
-                new Path(f.toUri))
-              java.nio.file.FileVisitResult.CONTINUE
-            } else if (attrs.isRegularFile && !hiddenName(name)) {
-              foreign.set(true)
-              java.nio.file.FileVisitResult.TERMINATE
-            } else java.nio.file.FileVisitResult.CONTINUE
-          }
-          override def visitFileFailed(f: java.nio.file.Path,
-              e: java.io.IOException): java.nio.file.FileVisitResult =
-            java.nio.file.FileVisitResult.CONTINUE
-        })
-      out.result()
-    }
-    // wide hive layouts (10⁴-10⁵ key=value dirs) are stat-bound, not
-    // CPU-bound: fan the per-subdirectory walks over a bounded pool
-    // (same 32-thread discipline as writeGeoMetadata). The top level is
-    // listed once; each first-level DIRECTORY walks independently;
-    // first-level files are kept directly.
-    val firstLevel = {
-      val s = java.nio.file.Files.list(base)
-      try {
-        val it = s.iterator()
-        val b = Seq.newBuilder[java.nio.file.Path]
-        while (it.hasNext) b += it.next()
-        b.result()
-      } finally s.close()
-    }
-    val (dirs0, files) = firstLevel.partition(p =>
-      java.nio.file.Files.isDirectory(p))
-    val dirs = dirs0.filterNot(d => hiddenName(d.getFileName.toString))
-    val fromDirs = fanOut(dirs, serialUpTo = 4)(walkOne).flatten
-    val fromFiles = files.flatMap { f =>
-      val name = f.getFileName.toString
-      if (isPartFileName(name) && java.nio.file.Files.isRegularFile(f))
-        Some(new org.apache.hadoop.fs.FileStatus(java.nio.file.Files.size(f),
-          false, 1, 128L * 1024 * 1024,
-          java.nio.file.Files.getLastModifiedTime(f).toMillis,
-          new Path(f.toUri)))
-      else {
-        if (!hiddenName(name) && java.nio.file.Files.isRegularFile(f))
-          foreign.set(true)
-        None
-      }
-    }
-    if (foreign.get()) None
-    else Some((fromDirs ++ fromFiles).sortBy(_.getPath.toString))
-  }
+      conf: Configuration = newConf()): Option[Seq[FileStatus]] =
+    try listing(path, conf, stopAtForeign = true)
+        .filter(_.forall(_.part)).map(_.map(_.status))
+    catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[partFileStatuses]] for non-local schemes: the identical listing
-    * discipline (foreign non-hidden file ⇒ None, hidden subtrees
-    * pruned, first-level directories fanned over the bounded pool) but
-    * through the path's Hadoop FileSystem instead of NIO — a slow
-    * per-status remote listing then costs wall/32, mirroring the local
-    * win without assuming a walkable local mount.
+  /** All parquet part files under a path (single file or directory), in
+    * walk order; foreign files are skipped. Hive layouts reuse basenames
+    * across key=value directories, so callers key per-file state by full
+    * path. A missing path raises FileNotFoundException.
     */
-  private def fsPartFileStatuses(p: Path,
-      conf: Configuration): Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
-    val fs = p.getFileSystem(conf)
-    val root =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    if (root.isFile) return Some(Seq(root))
-    val foreign = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def walkOne(d: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      val stack = scala.collection.mutable.Stack[Path](d)
-      while (stack.nonEmpty && !foreign.get()) {
-        fs.listStatus(stack.pop()).foreach { s =>
-          val name = s.getPath.getName
-          if (s.isDirectory) {
-            if (!hiddenName(name)) stack.push(s.getPath)
-          } else if (isPartFileName(name)) out += s
-          else if (!hiddenName(name)) foreign.set(true)
-        }
-      }
-      out.result()
-    }
-    val first = fs.listStatus(p)
-    val (dirs0, files) = first.partition(_.isDirectory)
-    val dirs = dirs0.filterNot(d => hiddenName(d.getPath.getName)).toSeq
-    val fromDirs = fanOut(dirs, serialUpTo = 4)(d => walkOne(d.getPath)).flatten
-    val fromFiles = files.toSeq.filter { s =>
-      val name = s.getPath.getName
-      val part = isPartFileName(name)
-      if (!part && !hiddenName(name)) foreign.set(true)
-      part
-    }
-    if (foreign.get()) None
-    else Some((fromDirs ++ fromFiles).sortBy(_.getPath.toString))
-  }
+  def partFiles(path: String, conf: Configuration = newConf()): Seq[Path] =
+    listing(path, conf, stopAtForeign = false)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"File $path does not exist"))
+      .collect { case f if f.part => f.status.getPath }
 
-  /** All parquet part-files under a path (single file or directory). */
-  def partFiles(path: String, conf: Configuration = newConf()): Seq[Path] = {
-    val p = new Path(path)
-    // local-FS fast path via NIO: without the native-hadoop library
-    // (this image, most dev machines) Hadoop's local listLocatedStatus
-    // loads per-file permissions through an `ls` SUBPROCESS — ~18 ms per
-    // file, which turned reading a 328-directory hive layout into a 6 s
-    // driver stall ON EVERY GeoTable.read. NIO walks the same tree in
-    // milliseconds; remote schemes keep the Hadoop listing.
-    val uri = p.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val base = java.nio.file.Paths.get(uri.getPath)
-      if (java.nio.file.Files.exists(base)) {
-        if (java.nio.file.Files.isRegularFile(base)) return Seq(p)
-        val out = Seq.newBuilder[Path]
-        // FOLLOW_LINKS: the Hadoop listing this replaces traverses
-        // symlinked partition directories (RawLocalFileSystem resolves
-        // through File.listFiles); walk's own loop detection bounds
-        // cycle risk
-        val stream = java.nio.file.Files.walk(base,
-          java.nio.file.FileVisitOption.FOLLOW_LINKS)
-        try {
-          stream.forEach { f =>
-            val name = f.getFileName.toString
-            if (name.endsWith(".parquet") && !name.startsWith("_") &&
-                !name.startsWith(".") &&
-                java.nio.file.Files.isRegularFile(f))
-              out += new Path(f.toUri)
-          }
-        } finally stream.close()
-        // recursive: hive layouts nest parts under key=value directories
-        // (and basenames REUSE across them — callers must key per-file
-        // state by full path, never by basename)
-        return out.result().sortBy(_.toString)
-      }
-      // missing local path: fall through so the Hadoop FS raises the
-      // canonical FileNotFoundException callers already handle
-    }
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    if (st.isFile) Seq(p)
-    else {
-      val out = Seq.newBuilder[Path]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val name = s.getPath.getName
-        if (s.isFile && name.endsWith(".parquet") &&
-            !name.startsWith("_") && !name.startsWith("."))
-          out += s.getPath
-      }
-      out.result().sortBy(_.toString)
-    }
+  /** The walk's first part file, exactly `partFiles(path).headOption`,
+    * without listing the whole tree: read planning and inspect need ONE
+    * footer (every part of a dataset carries the same graft footer). The
+    * lazy walk lists only the directories on the way to that part and
+    * stats only the children it visits, so the cost is O(depth), not
+    * O(files). None when the path does not exist.
+    */
+  def firstPartFile(path: String, conf: Configuration = newConf()): Option[Path] = {
+    val (root, ls) = backend(path, conf)
+    walk(ls, root, Nil).find(_.part).map(_.status.getPath)
   }
 
   private def isPartFileName(name: String): Boolean =
@@ -298,78 +245,11 @@ object Footer {
     * hidden; `_`-prefixed hidden UNLESS the name contains `=` —
     * `_temporary`/`.hive-staging` are staging, but `__h3=84…` is a
     * partition directory (graft's own spatial partition writers use the
-    * `__`-prefixed key form) and must be walked. One definition for the
-    * NIO and FS walks, pinned by the `__h3=` parity test.
+    * `__`-prefixed key form) and must be walked. Pinned by the `__h3=`
+    * parity test.
     */
   private def hiddenName(name: String): Boolean =
     name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-
-  /** First part file in sorted-descent order, WITHOUT listing the whole
-    * tree: read-planning consumers (`GeoTable.read`, inspect heads) only
-    * need ONE footer for geo metadata + the `graft:partitioning` key —
-    * walking a 100k-directory hive layout to take `.headOption` pays
-    * O(files) twice (Spark's own FileIndex already lists once). This
-    * descends directories in name-sorted order and stops at the first
-    * match, so planning cost is O(depth × fanout-at-each-level), not
-    * O(files). All part files of one dataset carry the same graft
-    * footer, so ANY part is equivalent; sorted descent keeps the pick
-    * deterministic (it matches `partFiles(...).headOption` except in
-    * pathological names where '.' and '/' sort across a directory
-    * boundary).
-    */
-  def firstPartFile(path: String, conf: Configuration = newConf()): Option[Path] = {
-    val p = new Path(path)
-    val uri = p.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val base = java.nio.file.Paths.get(uri.getPath)
-      if (java.nio.file.Files.exists(base)) {
-        if (java.nio.file.Files.isRegularFile(base)) return Some(p)
-        // cycle guard: the descent follows symlinks (parity with the
-        // FOLLOW_LINKS walk in partFiles), so a link cycle must be cut
-        // by real-path dedup — Files.walk has this built in; a bare
-        // recursion would overflow the stack instead of erroring
-        val seen = scala.collection.mutable.HashSet[java.nio.file.Path]()
-        def descend(d: java.nio.file.Path): Option[Path] = {
-          val real =
-            try d.toRealPath()
-            catch { case _: java.io.IOException => d.toAbsolutePath }
-          if (!seen.add(real)) return None
-          val entries = {
-            val s = java.nio.file.Files.list(d)
-            try s.iterator().asScala.toArray.sortBy(_.getFileName.toString)
-            finally s.close()
-          }
-          entries.iterator.flatMap { e =>
-            // FOLLOW_LINKS parity with the partFiles walk: isDirectory/
-            // isRegularFile resolve symlinks by default
-            if (java.nio.file.Files.isDirectory(e)) descend(e)
-            else if (isPartFileName(e.getFileName.toString) &&
-                java.nio.file.Files.isRegularFile(e)) Some(new Path(e.toUri))
-            else None
-          }.nextOption()
-        }
-        return descend(base)
-      }
-      return None
-    }
-    val fs = p.getFileSystem(conf)
-    val st =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    if (st.isFile) Some(p)
-    else {
-      def descend(d: Path): Option[Path] = {
-        val entries = fs.listStatus(d).sortBy(_.getPath.getName)
-        entries.iterator.flatMap { s =>
-          if (s.isDirectory) descend(s.getPath)
-          else if (s.isFile && isPartFileName(s.getPath.getName))
-            Some(s.getPath)
-          else None
-        }.nextOption()
-      }
-      descend(p)
-    }
-  }
 
   def read(path: Path, conf: Configuration = newConf()): FooterInfo = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))

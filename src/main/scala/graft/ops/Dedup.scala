@@ -783,15 +783,11 @@ object Dedup {
     // single-row final agg; adaptive staging only adds per-exchange job
     // scheduling on a shape it can never improve (the LogReg iteration
     // rationale, ops/LogReg.scala:196-203)
-    val sess = digests.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try digests
+    graft.util.AqeOff(digests.sparkSession)(digests
       .select(GraftBridge.column(BloomBitmapAgg(
         GraftBridge.expression(col(digestCol)), mBits, k)
         .toAggregateExpression()).as("bm"))
-      .first().getAs[scala.collection.Seq[Long]](0).toArray
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
+      .first().getAs[scala.collection.Seq[Long]](0).toArray)
   }
 
   /** Codegen Bloom membership test: all k positions set in the bitmap.
@@ -812,10 +808,13 @@ object Dedup {
 
   /** Connected components over near-dup pairs: every document in a dup
     * cluster gets the cluster's minimum id as its label (the canonical
-    * "keeper"). Returns (id, cluster_id), one row per id in a pair.
+    * "keeper"). Returns (id, cluster_id), one row per non-null id in a
+    * pair. A null id is never a node: a pair with one null id stands for
+    * its other id alone ((7, null) alone gives (7, 7)), and a pair of two
+    * nulls is dropped.
     *
     * The pair set is checkpointed once, then one of two paths runs:
-    *  - local: the ids are integral, no pair holds a null id, and the
+    *  - local: the ids are integral, and the
     *    label table (at most 2n rows of two longs, 32·n bytes for n
     *    pairs) fits the session's `spark.sql.autoBroadcastJoinThreshold`,
     *    the size below which Spark already moves a relation through the
@@ -844,7 +843,10 @@ object Dedup {
     // instead stored 2x the rows — the dominant cost on dense pair
     // graphs (31M-pair pHash clusters: 37 s of the 80 s total, round-13
     // ×100 multimodal tier).
-    val base = pairs.select(col(idA).as("__a"), col(idB).as("__b"))
+    val base = pairs
+      .select(coalesce(col(idA), col(idB)).as("__a"),
+        coalesce(col(idB), col(idA)).as("__b"))
+      .where(col("__a").isNotNull)
       .localCheckpoint(true)
     val edges = base.select(col("__a").as("s"), col("__b").as("t"))
       .union(base.select(col("__b").as("s"), col("__a").as("t")))
@@ -882,14 +884,8 @@ object Dedup {
     val sess = base.sparkSession
     val maxPairs = sess.sessionState.conf.autoBroadcastJoinThreshold / 32
     if (maxPairs <= 0) return None
-    // one job over the checkpointed blocks: pairs, and pairs with a null
-    // id (a null id takes the distributed path, whose labels define it)
-    val (n, withNull) = base.queryExecution.toRdd.mapPartitions { it =>
-      var n, z = 0L
-      it.foreach { r => n += 1; if (r.isNullAt(0) || r.isNullAt(1)) z += 1 }
-      Iterator((n, z))
-    }.fold((0L, 0L)) { case ((n1, z1), (n2, z2)) => (n1 + n2, z1 + z2) }
-    if (n > maxPairs || withNull > 0) return None
+    // one job over the checkpointed blocks counts the pairs
+    if (base.queryExecution.toRdd.count() > maxPairs) return None
     val got = graft.util.CollectCapped(base, maxPairs,
       "connected-components pair set")
     def id(v: Any): Long = v.asInstanceOf[Number].longValue

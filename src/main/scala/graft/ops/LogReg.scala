@@ -186,10 +186,7 @@ object LogReg {
     // AQE's two-phase stage materialization doubles the job count for a
     // shuffle it can never improve — measured ~0.2 s of pure scheduler
     // overhead over 3 iterations at sf0.1.
-    val sess = docs.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try for (_ <- 1 to iters) {
+    graft.util.AqeOff(docs.sparkSession)(for (_ <- 1 to iters) {
       // weights.clone(): the reference object must not see this
       // iteration's driver-side updates
       val dm = SketchExpressions.dot_micro(col("fs"), weights.clone())
@@ -209,7 +206,7 @@ object LogReg {
           math.floor(out(f).toDouble / (2.0 * n)).toLong
         f += 1
       }
-    } finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
+    })
     (prep, weights)
   }
 

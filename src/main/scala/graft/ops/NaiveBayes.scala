@@ -73,17 +73,13 @@ object NaiveBayes {
     // per-class sums (map-side combinable — at most dims+1 keys cross
     // the shuffle per task). AQE off: fixed scan → agg shape (the
     // LogReg iteration rationale).
-    val sess = docs.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    val counts =
-      try graft.util.CollectCapped(
+    val counts = graft.util.AqeOff(docs.sparkSession)(
+      graft.util.CollectCapped(
         prep.select(explode(col("__fs")).as("e"), col("__y"))
           .groupBy(col("e.f").as("f"))
           .agg(sum(when(col("__y") === 1.0, col("e.x")).otherwise(0L)).as("c1"),
             sum(when(col("__y") =!= 1.0, col("e.x")).otherwise(0L)).as("c0")),
-        dims.toLong + 1, "naive-Bayes per-feature counts")
-      finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
+        dims.toLong + 1, "naive-Bayes per-feature counts"))
     val c1 = new Array[Long](dims + 1)
     val c0 = new Array[Long](dims + 1)
     counts.foreach { r =>

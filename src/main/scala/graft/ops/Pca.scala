@@ -173,15 +173,11 @@ object Pca {
     require(dims >= 2, s"dims must be >= 2: $dims")
     // AQE off for the collect: fixed scan -> partial agg -> single-row
     // final agg (the bloomBitmap / LogReg rationale)
-    val sess = df.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    val raw =
-      try df.select(GraftBridge.column(
+    val raw = graft.util.AqeOff(df.sparkSession)(
+      df.select(GraftBridge.column(
           CovMomentsAgg(GraftBridge.expression(col(vecCol)), dims)
             .toAggregateExpression()).as("m"))
-        .first().getAs[scala.collection.Seq[Long]](0)
-      finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
+        .first().getAs[scala.collection.Seq[Long]](0))
     val mask = (BigInt(1) << 64) - 1
     (0 until raw.length / 2).map(i =>
       (BigInt(raw(2 * i)) << 64) + (BigInt(raw(2 * i + 1)) & mask))

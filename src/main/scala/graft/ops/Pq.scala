@@ -47,16 +47,13 @@ object Pq {
   def trainCodebooks(df: DataFrame, vecCol: String, idCol: String,
       m: Int, k: Int, dims: Int): Array[Array[Array[Double]]] = {
     require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
-    val sess = df.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
     // AQE off for the two training collects: stride-init and the single
     // refinement aggregation are fixed scan→agg shapes over a bounded
     // model — adaptive staging only adds per-exchange job scheduling it
     // can never improve (the LogReg iteration rationale,
     // ops/LogReg.scala:196-203)
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try trainCodebooksCore(df, vecCol, idCol, m, k, dims)
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
+    graft.util.AqeOff(df.sparkSession)(
+      trainCodebooksCore(df, vecCol, idCol, m, k, dims))
   }
 
   private def trainCodebooksCore(df: DataFrame, vecCol: String,

@@ -463,13 +463,9 @@ object VectorQueries {
         // AQE off for the tiny query-vector fetch too (same rationale as
         // the training collects): a one-row filter scan gains nothing
         // from adaptive staging
-        val aqePrev = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        val qraw =
-          try graft.util.CollectCapped(
+        val qraw = graft.util.AqeOff(s)(graft.util.CollectCapped(
             emb.filter($"vec_id" === 4).select($"embedding"), 1,
-            "single query vector")(0).getSeq[Float](0).toArray
-          finally s.conf.set("spark.sql.adaptive.enabled", aqePrev)
+            "single query vector")(0).getSeq[Float](0).toArray)
         val top = emb.filter($"vec_id" =!= 4)
           .select($"vec_id",
             round(graft.ops.Pq.adcCosine(

@@ -1278,11 +1278,6 @@ object GeoTable {
       }
     } catch { case _: Throwable => None }
 
-  /** [[listedRead]]'s DataFrame alone. */
-  private[graft] def fastLocalParquetDf(spark: SparkSession, path: String,
-      mergeSchema: Boolean): Option[DataFrame] =
-    listedRead(spark, path, mergeSchema).map(_.df)
-
   /** Pre-built partition spec for hive layouts whose every partition
     * value is PROVABLY a string under Spark's own inference rules —
     * Spark's `parsePartitions` discovers a value's type by try-cast
@@ -1355,9 +1350,9 @@ object GeoTable {
     val listed = listedRead(spark, path, mergeSchema)
     val df0 = listed.map(_.df).getOrElse(
       spark.read.option("mergeSchema", mergeSchema.toString).parquet(path))
-    // without our listing, firstPartFile, not partFiles().headOption: its
-    // early-exit descent keeps read planning O(depth), not O(files), on
-    // wide hive layouts.
+    // without our listing, firstPartFile: the same walk's first part as
+    // partFiles().headOption, but it stops there, so read planning stays
+    // O(depth), not O(files), on wide hive layouts.
     // Degradation contract: one footer assumes every part
     // carries identical graft footers — true for completed writes,
     // violated by a previously-FAILED partial writeGeoMetadata pass. If

@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
   * directory dimension grows to 10³/10⁴/3×10⁴ — the shape of a year of
   * daily spatial partitions. Reported phases:
   *
-  *  - partFiles: the full recursive listing (NIO fast path);
-  *  - firstPartFile: the early-exit descent `GeoTable.read` uses for
-  *    its footer when the listing declines — must stay ~flat as
-  *    directories grow;
+  *  - partFiles: the whole of `Footer`'s one listing walk (NIO for
+  *    local paths, first-level directories on the bounded pool);
+  *  - firstPartFile: the same walk stopped at its first part, which
+  *    `GeoTable.read` uses for its footer when the listing declines —
+  *    must stay ~flat as directories grow;
   *  - read: full `GeoTable.read` planning (one listing, one footer, the
   *    Spark FileIndex over that listing);
   *  - prune+count: `filterBbox` over a small box on the spatially

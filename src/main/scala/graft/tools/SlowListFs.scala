@@ -13,8 +13,8 @@ import org.apache.hadoop.util.Progressable
   * into every `listStatus`/`getFileStatus` call — the cost shape of a
   * remote object-store listing (per-request round trip) without needing
   * network egress. `graft.slowfs.list.ms` (Hadoop conf) sets the
-  * per-call sleep; 0 disables. The per-first-level-directory fan-out in
-  * `Footer.partFileStatuses` should turn an O(dirs × latency) serial
+  * per-call sleep; 0 disables. The per-first-level-directory fan-out of
+  * `Footer`'s listing walk should turn an O(dirs × latency) serial
   * stall into ~O(dirs × latency / 32).
   */
 class SlowListFs extends FileSystem {

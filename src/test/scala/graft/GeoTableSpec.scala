@@ -52,6 +52,60 @@ class GeoTableSpec extends AnyFunSuite {
     assert(Footer.firstPartFile(dir) == all.headOption)
   }
 
+  test("one walk: partFiles, partFileStatuses and firstPartFile agree in " +
+      "full-path order and never list staging parts") {
+    import java.nio.file.{Files, Paths}
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfs.impl",
+      classOf[GraftTestFileSystem].getName)
+    val root = Files.createTempDirectory("graft_walk")
+    val rows = spark.range(0, 5).toDF("id").withColumn("v", col("id") * 2)
+    rows.coalesce(1).write.parquet(root.resolve("src").toString)
+    val src = Paths.get(Footer.partFiles(root.resolve("src").toString).head.toUri)
+    def put(tree: java.nio.file.Path, rel: String): Unit = {
+      val t = tree.resolve(rel)
+      Files.createDirectories(t.getParent)
+      Files.copy(src, t)
+    }
+    // name order would visit `k=a/` first; full-path order puts
+    // `k=a.b/y` first, because '.' sorts before '/'
+    val probe = root.resolve("probe")
+    Seq("k=a/x.parquet", "k=a.b/y.parquet", "k=b/part-0.parquet").foreach(put(probe, _))
+    val hive = root.resolve("hive")
+    rows.withColumn("k", col("id") % 3).write.partitionBy("k").parquet(hive.toString)
+    val h3 = root.resolve("h3")
+    rows.withColumn("__h3", concat(lit("84"), col("id") % 2))
+      .write.partitionBy("__h3").parquet(h3.toString)
+    // staging parts, which Spark's listing never reads
+    Seq(probe, hive, h3).foreach { t =>
+      put(t, "_temporary/0/task_1/part-9.parquet")
+      put(t, ".hive-staging_x/part-8.parquet")
+    }
+    val conf = spark.sessionState.newHadoopConf()
+    for (t <- Seq(probe, hive, h3).map(_.toString) :+ s"graftfs://$h3") {
+      val all = Footer.partFiles(t, conf)
+      val names = all.map(_.toString)
+      assert(all.nonEmpty && names == names.sorted, s"$t: $names")
+      assert(!names.exists(n => n.contains("/_temporary/") || n.contains("/.hive-staging")),
+        s"$t: $names")
+      assert(Footer.partFileStatuses(t, conf).map(_.map(_.getPath)).contains(all), t)
+      assert(Footer.firstPartFile(t, conf) == all.headOption, t)
+      assert(Footer.rowCount(t, conf) == spark.read.parquet(t).count(), t)
+    }
+    assert(Footer.partFiles(probe.toString, conf)
+      .map(p => probe.relativize(Paths.get(p.toUri)).toString) ==
+      Seq("k=a.b/y.parquet", "k=a/x.parquet", "k=b/part-0.parquet"))
+    // symlinks: a directory reached by two routes is walked twice, as
+    // Spark's listing walks it; a link back to an ancestor is cut
+    Files.createSymbolicLink(probe.resolve("k=c"), probe.resolve("k=b"))
+    assert(Footer.partFiles(probe.toString, conf).size == 4)
+    assert(GeoTable.listedRead(spark, probe.toString, mergeSchema = false)
+      .map(_.df.count()).contains(spark.read.parquet(probe.toString).count()))
+    Files.createSymbolicLink(probe.resolve("k=b/loop"), probe)
+    assert(Footer.partFiles(probe.toString, conf).size == 4)
+    assert(Footer.partFileStatuses(probe.toString, conf).map(_.size).contains(4))
+    assert(Footer.firstPartFile(probe.toString, conf).isDefined)
+  }
+
   test("writeGeoMetadata parallel pool: per-file failure propagates " +
       "loudly, never a silent partial footer pass") {
     val dir = tmpDir("parfooter")
@@ -814,8 +868,8 @@ class GeoTableSpec extends AnyFunSuite {
     assert(st.exists(_.nonEmpty), "FS-backed listing must fire")
     assert(st.get.forall(_.getPath.toUri.getScheme == "graftfs"))
     // end-to-end: fast read == stock read (schema, rows, pruning value)
-    val fast = GeoTable.fastLocalParquetDf(spark, s"graftfs://$base/h3",
-      mergeSchema = false)
+    val fast = GeoTable.listedRead(spark, s"graftfs://$base/h3",
+      mergeSchema = false).map(_.df)
     assert(fast.isDefined, "fast path must build the prefilled index")
     val stock = spark.read.parquet(s"graftfs://$base/h3")
     assert(fast.get.schema == stock.schema,
@@ -982,7 +1036,7 @@ class GeoTableSpec extends AnyFunSuite {
         col("id").cast("double"), lit(1.0)))
     df.write.partitionBy("cell").parquet(s"$dir/h3")
     // lettered hex values: fast path fires AND matches the stock reader
-    val fast = GeoTable.fastLocalParquetDf(spark, s"$dir/h3", false).get
+    val fast = GeoTable.listedRead(spark, s"$dir/h3", false).map(_.df).get
     val stock = spark.read.parquet(s"$dir/h3")
     assert(fast.schema == stock.schema,
       s"fast ${fast.schema.sql} != stock ${stock.schema.sql}")
@@ -1003,7 +1057,7 @@ class GeoTableSpec extends AnyFunSuite {
       root.getFileSystem(conf).makeQualified(s.getPath))).toArray
     assert(GeoTable.certainlyStringPartitionSpec(q, qualified).isEmpty)
     // and the full fast read still agrees with stock (int-typed qk)
-    val fastQ = GeoTable.fastLocalParquetDf(spark, s"$dir/qk", false).get
+    val fastQ = GeoTable.listedRead(spark, s"$dir/qk", false).map(_.df).get
     assert(fastQ.schema == spark.read.parquet(s"$dir/qk").schema)
     // escaped KEY name (ADVICE r16): stock parsePartitions unescapes
     // 'a%20b' to column 'a b'; the fast spec must decline rather than
@@ -1024,7 +1078,7 @@ class GeoTableSpec extends AnyFunSuite {
     assert(GeoTable.certainlyStringPartitionSpec(escQ, escStatuses).isEmpty,
       "escaped key names must defer to stock inference")
     // and end-to-end the fast read still matches stock ('a b' column)
-    val fastE = GeoTable.fastLocalParquetDf(spark, escDir.toString, false).get
+    val fastE = GeoTable.listedRead(spark, escDir.toString, false).map(_.df).get
     assert(fastE.schema == spark.read.parquet(escDir.toString).schema)
   }
 
@@ -1079,7 +1133,7 @@ class GeoTableSpec extends AnyFunSuite {
     val hst = Footer.partFileStatuses(hdir.toString)
     assert(hst.exists(_.nonEmpty),
       "__h3= partition dirs must be walked, not pruned as hidden")
-    val fastH = GeoTable.fastLocalParquetDf(spark, hdir.toString, false)
+    val fastH = GeoTable.listedRead(spark, hdir.toString, false).map(_.df)
     assert(fastH.isDefined &&
       fastH.get.schema == spark.read.parquet(hdir.toString).schema &&
       fastH.get.count() == 7)

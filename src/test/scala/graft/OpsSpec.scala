@@ -289,8 +289,17 @@ class OpsSpec extends AnyFunSuite {
       df.collect().map(_.toString).toSeq.sorted
     val viaDefault = Dedup.connectedComponents(withNull)
     val viaLoop = distributedCc(Dedup.connectedComponents(withNull))
+    assert(isLocal(viaDefault) && !isLocal(viaLoop))
     assert(viaDefault.schema == viaLoop.schema)
-    assert(rows(viaDefault) == rows(viaLoop))
+    // a null id is never a node: no (null, 5) row, whose label would be
+    // no component's minimum
+    val want = Seq("[3,3]", "[5,3]", "[8,8]", "[9,8]")
+    assert(rows(viaDefault) == want && rows(viaLoop) == want,
+      s"${rows(viaDefault)} / ${rows(viaLoop)}")
+    // a one-null pair alone still gives its id its own row
+    val lone = Seq[(Option[Long], Option[Long])]((Some(7L), None)).toDF("id_a", "id_b")
+    assert(rows(Dedup.connectedComponents(lone)) == Seq("[7,7]"))
+    assert(rows(distributedCc(Dedup.connectedComponents(lone))) == Seq("[7,7]"))
     // string ids are not integral: the distributed loop, still min labels
     val strs = Seq(("b", "c"), ("c", "d"), ("x", "y"), ("a", "a")).toDF("id_a", "id_b")
     val labels = Dedup.connectedComponents(strs)
