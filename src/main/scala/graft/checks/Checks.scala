@@ -159,8 +159,7 @@ object Checks {
   private def nativeGeoFindings(info: Footer.FooterInfo,
       partInfos: Seq[Footer.FooterInfo]): Seq[Finding] = {
     val out = scala.collection.mutable.ArrayBuffer[Finding]()
-    info.schemaInfo.filter(_.logicalType.exists(n =>
-      n.contains("Geometry") || n.contains("Geography"))).foreach { f =>
+    info.schemaInfo.filter(_.nativeGeo).foreach { f =>
       val boxes = partInfos.flatMap(_.rowGroups
         .flatMap(_.columns.get(f.name).flatMap(_.geoBbox)))
       if (boxes.isEmpty)
@@ -384,8 +383,7 @@ object Checks {
           // reference's CheckStatus.SKIPPED-on-exception contract)
           try {
             val t = GeoTable.readNativeGeo(spark, path)
-            info.schemaInfo.find(_.logicalType.exists(n =>
-              n.contains("Geometry") || n.contains("Geography")))
+            info.schemaInfo.find(_.nativeGeo)
               .map(_.name).foreach { gcName =>
                 val gc = col(gcName)
                 val r = t.df.agg(

@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-level evaluation helpers for the geo expressions. Kept as an
+/** Row-level evaluation kernels of the geo functions. Kept as an
   * `object` so codegen can call them as static methods
-  * (`graft.functions.GeoEval.stX(...)`).
+  * (`graft.functions.GeoEval.stX(...)`); [[Kernel.kernel]] builds the
+  * call. Parameters and results are Catalyst's internal types.
   */
 object GeoEval {
 
@@ -133,7 +134,7 @@ object GeoEval {
   /** true/false when the geometry is polygonal (all exterior rings CCW /
     * not), null otherwise — validate's orientation-vs-data probe.
     */
-  def exteriorsCcw(wkb: Array[Byte]): Any =
+  def exteriorsCcw(wkb: Array[Byte]): java.lang.Boolean =
     Orientation.exteriorsCcw(Wkb.read(wkb)) match {
       case Some(b) => java.lang.Boolean.valueOf(b)
       case None => null

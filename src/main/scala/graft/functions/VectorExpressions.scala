@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import Kernel.{kernel, ref, refType}
 
 /** Codegen'd float-vector kernels for the embedding operators. Spark's
   * `zip_with`/`aggregate` higher-order functions evaluate their lambda
@@ -73,53 +72,28 @@ object VectorEval {
   }
 }
 
+/** Column wrappers of the [[VectorEval]] kernels, each one
+  * [[Kernel.kernel]] call (see [[SketchExpressions]] for how a kernel is
+  * declared). No expression class remains here.
+  */
 object VectorExpressions {
-  private val E = "graft.functions.VectorEval"
+  import GraftBridge.{column => col, expression => ex}
 
-  case class DotProductFloat(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def nullIntolerant: Boolean = true
-    // declared input types matter: getFloat over a double-backed array
-    // would silently read garbage — the analyzer must cast or reject
-    // (covariant narrowing: AbstractDataType is private[sql])
-    override def inputTypes: Seq[DataType] =
-      Seq(ArrayType(FloatType), ArrayType(FloatType))
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      VectorEval.dotFF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$E.dotFF($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(l, r)
-  }
+  // declared input types matter: getFloat over a double-backed array
+  // would silently read garbage — the analyzer must cast or reject
+  private val floats = ArrayType(FloatType)
 
   /** Column API: dot product of two float-array columns (double result). */
   def dot_f(a: Column, b: Column): Column =
-    GraftBridge.column(DotProductFloat(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
+    col(kernel(VectorEval, "dotFF", DoubleType, Seq(ex(a), ex(b)),
+      Seq(floats, floats)))
 
   /** Per-prefix cosines in one element pass (see [[VectorEval.prefixCosines]]). */
-  case class PrefixCosines(left: Expression, right: Expression,
-      dims: Array[Int])
-      extends BinaryExpression with ImplicitCastInputTypes {
-    require(dims.nonEmpty && dims.sameElements(dims.sorted),
+  def prefix_cosines(a: Column, b: Column, dims: Seq[Int]): Column = {
+    require(dims.nonEmpty && dims == dims.sorted,
       "prefix_cosines dims must be ascending")
-    override def nullIntolerant: Boolean = true
-    override def inputTypes: Seq[DataType] =
-      Seq(ArrayType(FloatType), ArrayType(FloatType))
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      VectorEval.prefixCosines(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData], dims)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ds = ctx.addReferenceObj("prefixDims", dims, "int[]")
-      defineCodeGen(ctx, ev, (a, b) => s"$E.prefixCosines($a, $b, $ds)")
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
+    val ds = dims.toArray
+    col(kernel(VectorEval, "prefixCosines", ArrayType(DoubleType, containsNull = false),
+      Seq(ex(a), ex(b), ref(ds)), Seq(floats, floats, refType(ds))))
   }
-
-  def prefix_cosines(a: Column, b: Column, dims: Seq[Int]): Column =
-    GraftBridge.column(PrefixCosines(GraftBridge.expression(a),
-      GraftBridge.expression(b), dims.toArray))
 }

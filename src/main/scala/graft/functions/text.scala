@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
 import graft.functions.SketchExpressions._
 
 /** SQL registration for the text/sketch kernel surface — the corpus
@@ -9,47 +8,47 @@ import graft.functions.SketchExpressions._
   * per-document kernel the DataFrame operators use is callable from
   * `spark.sql` (`SELECT simhash64(text), term_counts(text) ...`), so a
   * SQL-only consumer gets the same codegen path (no UDF wrapping, no
-  * serialization) the fluent API gets.
+  * serialization) the fluent API gets. Each name is its Column wrapper
+  * in [[SketchExpressions]], arguments in the same order.
   */
 object text {
 
   def register(spark: SparkSession): Unit = {
+    import GraftBridge.{column => col, expression => ex}
     val reg = spark.sessionState.functionRegistry
-    def one(name: String, b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    def intArg(es: Seq[Expression], i: Int): Int =
-      es(i).eval().asInstanceOf[Number].intValue
+    def one(name: String, b: Seq[Column] => Column): Unit =
+      reg.createOrReplaceTempFunction(name, es => ex(b(es.map(col))), "built-in")
+    def intArg(cs: Seq[Column], i: Int): Int =
+      ex(cs(i)).eval().asInstanceOf[Number].intValue
 
-    one("norm_text", es => NormText(es.head))
-    one("term_counts", es => TermCounts(es.head))
-    one("bigram_counts", es => BigramCounts(es.head))
-    one("topgram_stats", es => TopgramStats(es.head))
-    one("rep_stats", es => RepStats(es.head))
-    one("char_entropy", es => CharEntropy(es.head))
-    one("nfc_normalize", es => NfcNormalize(es.head))
-    one("pii_redact", es => PiiRedact(es.head))
-    one("simhash64", es => Simhash64(es.head))
-    one("sorted_pairs", es => SortedPairs(es.head))
-    one("word_shingles", es => WordShingles(es.head, intArg(es, 1)))
-    one("gram_hash_seq", es => GramHashSeq(es.head, intArg(es, 1)))
-    one("char_ngrams", es => CharNgrams(es.head, intArg(es, 1)))
-    one("char_ngram_codes", es => CharNgramCodes(es.head, intArg(es, 1)))
-    one("token_blocks", es => TokenBlocks(es.head, intArg(es, 1)))
-    one("window_digests", es => WindowDigests(es.head, intArg(es, 1)))
-    one("lsh_signature", es => LshSignature(es.head, intArg(es, 1)))
-    one("rand_project", es => RandProject(es.head, intArg(es, 1)))
-    one("token_hash_counts", es => TokenHashCounts(es.head, intArg(es, 1)))
-    one("minhash_signature", es =>
-      MinhashSignature(es.head, intArg(es, 1), intArg(es, 2)))
-    one("jaccard_sim", es => JaccardSim(es(0), es(1), intArg(es, 2)))
-    // same argument order as the Scala builder — span_stats(starts, k,
-    // nTokens) — so a transliterated call works in both surfaces
-    one("span_stats", es => SpanStats(es(0), es(2), intArg(es, 1)))
-    one("scrub_spans", es => ScrubSpans(es(0), es(1), intArg(es, 2)))
-    one("winnow", es => Winnow(es.head, intArg(es, 1), intArg(es, 2)))
-    one("md5_minhash_sigs", es => Md5MinhashSigs(es.head, intArg(es, 1)))
-    one("array_match_count", es => ArrayMatchCount(es(0), es(1)))
-    one("sorted_intersect_count", es => SortedIntersectCount(es(0), es(1)))
-    one("lsh_probes", es => LshProbes(es(0), intArg(es, 1)))
+    one("norm_text", c => norm_text(c.head))
+    one("term_counts", c => term_counts(c.head))
+    one("bigram_counts", c => bigram_counts(c.head))
+    one("topgram_stats", c => topgram_stats(c.head))
+    one("rep_stats", c => rep_stats(c.head))
+    one("char_entropy", c => char_entropy(c.head))
+    one("nfc_normalize", c => nfc_normalize(c.head))
+    one("pii_redact", c => pii_redact(c.head))
+    one("simhash64", c => simhash64(c.head))
+    one("sorted_pairs", c => sorted_pairs(c.head))
+    one("word_shingles", c => word_shingles(c.head, intArg(c, 1)))
+    one("gram_hash_seq", c => gram_hash_seq(c.head, intArg(c, 1)))
+    one("char_ngrams", c => char_ngrams(c.head, intArg(c, 1)))
+    one("char_ngram_codes", c => char_ngram_codes(c.head, intArg(c, 1)))
+    one("token_blocks", c => token_blocks(c.head, intArg(c, 1)))
+    one("window_digests", c => window_digests(c.head, intArg(c, 1)))
+    one("lsh_signature", c => lsh_sig(c.head, intArg(c, 1)))
+    one("rand_project", c => rand_project(c.head, intArg(c, 1)))
+    one("token_hash_counts", c => token_hash_counts(c.head, intArg(c, 1)))
+    one("minhash_signature", c =>
+      minhash_sig(c.head, intArg(c, 1), intArg(c, 2)))
+    one("jaccard_sim", c => jaccard_sim(c(0), c(1), intArg(c, 2)))
+    one("span_stats", c => span_stats(c(0), intArg(c, 1), c(2)))
+    one("scrub_spans", c => scrub_spans(c(0), c(1), intArg(c, 2)))
+    one("winnow", c => winnow(c.head, intArg(c, 1), intArg(c, 2)))
+    one("md5_minhash_sigs", c => md5_minhash_sigs(c.head, intArg(c, 1)))
+    one("array_match_count", c => array_match_count(c(0), c(1)))
+    one("sorted_intersect_count", c => sorted_intersect_count(c(0), c(1)))
+    one("lsh_probes", c => lsh_probes(c(0), intArg(c, 1)))
   }
 }

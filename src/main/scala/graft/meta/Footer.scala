@@ -60,7 +60,9 @@ object Footer {
       /** Edge algorithm of a GEOGRAPHY logical type (reference
         * `core/validate.py:1833-1877` check V2-5).
         */
-      geoAlgorithm: Option[String] = None)
+      geoAlgorithm: Option[String] = None,
+      /** Natively typed GEOMETRY or GEOGRAPHY ([[isNativeGeo]]). */
+      nativeGeo: Boolean = false)
 
   final case class FooterInfo(
       rowCount: Long,
@@ -305,6 +307,7 @@ object Footer {
             Option(g.getAlgorithm).map(_.name().toLowerCase)
               .getOrElse("spherical")
         },
+        nativeGeo = isNativeGeo(f),
         groupFields =
           if (prim) Seq.empty
           else f.asGroupType().getFields.asScala.toSeq.map { c =>
@@ -370,13 +373,7 @@ object Footer {
     try {
       val fm = reader.getFooter.getFileMetaData
       val hasGeoKey = fm.getKeyValueMetaData.containsKey(GeoMeta.FooterKey)
-      val hasNativeGeo = fm.getSchema.getFields.asScala.exists { f =>
-        f.isPrimitive && Option(f.asPrimitiveType().getLogicalTypeAnnotation)
-          .exists { lt =>
-            val n = lt.getClass.getSimpleName
-            n.contains("Geometry") || n.contains("Geography")
-          }
-      }
+      val hasNativeGeo = fm.getSchema.getFields.asScala.exists(isNativeGeo)
       (hasGeoKey, hasNativeGeo) match {
         case (true, true) => "geoparquet2"
         case (true, false) => "geoparquet"
@@ -386,130 +383,138 @@ object Footer {
     } finally reader.close()
   }
 
+  /** Whether a top-level field is natively typed GEOMETRY or GEOGRAPHY
+    * (a Parquet logical type annotation, GeoParquet 2): the one test
+    * behind [[detectFileType]], [[withoutNativeGeo]] and
+    * [[FieldInfo.nativeGeo]].
+    */
+  def isNativeGeo(t: org.apache.parquet.schema.Type): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{GeographyLogicalTypeAnnotation, GeometryLogicalTypeAnnotation}
+    t.isPrimitive && (t.getLogicalTypeAnnotation match {
+      case _: GeometryLogicalTypeAnnotation | _: GeographyLogicalTypeAnnotation => true
+      case _ => false
+    })
+  }
+
   /** Rewrite a parquet file in place, merging `extra` into its key-value
-    * footer metadata. Row groups are byte-copied (appendFile), never
+    * footer metadata. Row groups are byte-copied ([[rewrite]]), never
     * decoded — the disk-rewrite strategy of the reference without the
     * page decode.
     */
   def withKeyValueMetadata(path: Path, extra: Map[String, String],
       conf: Configuration = newConf()): Unit =
-    mergeKeyValues(path, conf)(_ => extra)
-
-  /** Rewrite `path` in place under its own schema, with `extra` (derived
-    * from the same footer) merged into its key-value metadata: one
-    * [[rewrite]] into a hidden temp file, then a delete-and-rename swap
-    * (reference base.py temp+rename).
-    */
-  private def mergeKeyValues(path: Path, conf: Configuration)(
-      extra: ParquetMetadata => Map[String, String]): Unit = {
-    val tmp = new Path(path.getParent, s".${path.getName}.kvtmp")
-    rewrite(path, tmp, conf) { footer =>
+    rewriteInPlace(path, conf) { footer =>
       val fm = footer.getFileMetaData
-      (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap ++ extra(footer))
+      (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap ++ extra)
     }
+
+  /** Rewrite `path` in place under the schema and whole key-value
+    * metadata `plan` derives from its footer: one [[rewrite]] into a
+    * hidden temp file, then a delete-and-rename swap (reference base.py
+    * temp+rename). The only in-place swap: a change of both schema and
+    * key-value metadata is one plan, so the file is copied once.
+    */
+  private[graft] def rewriteInPlace(path: Path, conf: Configuration)(
+      plan: ParquetMetadata => (MessageType, Map[String, String])): Unit = {
+    val tmp = new Path(path.getParent, s".${path.getName}.kvtmp")
+    rewrite(path, tmp, conf)(plan)
     val fs = path.getFileSystem(conf)
     fs.delete(path, false)
     if (!fs.rename(tmp, path))
       throw new java.io.IOException(s"rename $tmp -> $path failed")
   }
 
-  /** Make a GeoParquet-2 / parquet-geo-only file readable by Spark:
-    * Spark's parquet reader rejects the GEOMETRY/GEOGRAPHY logical type
-    * (`PARQUET_TYPE_ILLEGAL`), but the physical pages are ordinary
-    * BINARY WKB — so byte-copy the row groups under a schema with the
-    * annotation stripped and keep all key-value metadata. The reference
-    * downgrades versions through GDAL/DuckDB rewrites
-    * (`core/convert.py` geoparquet-version); this is the footer-only
-    * equivalent.
+  /** `schema` with the native GEOMETRY/GEOGRAPHY annotation removed
+    * from every field that has one. Spark's parquet reader rejects the
+    * logical type (`PARQUET_TYPE_ILLEGAL`), but the physical pages are
+    * ordinary BINARY WKB.
     */
-  def stripNativeGeoTypes(in: Path, out: Path,
-      conf: Configuration = newConf()): Unit = {
+  private[graft] def withoutNativeGeo(schema: MessageType): MessageType = {
     import org.apache.parquet.schema.{PrimitiveType, Type}
-    rewrite(in, out, conf) { footer =>
-      val fm = footer.getFileMetaData
-      val schema = fm.getSchema
-      val fields: java.util.List[Type] = schema.getFields
-      val stripped = new MessageType(schema.getName,
-        fields.asScala.map {
-          case p: PrimitiveType if Option(p.getLogicalTypeAnnotation).exists { lt =>
-              val n = lt.getClass.getSimpleName
-              n.contains("Geometry") || n.contains("Geography")
-            } =>
-            new PrimitiveType(p.getRepetition, p.getPrimitiveTypeName, p.getName)
-          case t => t
-        }.asJava)
-      (stripped, fm.getKeyValueMetaData.asScala.toMap)
-    }
+    val fields: java.util.List[Type] = schema.getFields
+    new MessageType(schema.getName,
+      fields.asScala.map {
+        case p: PrimitiveType if isNativeGeo(p) =>
+          new PrimitiveType(p.getRepetition, p.getPrimitiveTypeName, p.getName)
+        case t => t
+      }.asJava)
   }
 
-  /** Inverse of [[stripNativeGeoTypes]] — upgrade a WKB GeoParquet file
-    * to GeoParquet 2.0 / parquet-geo-only (reference `convert
-    * --geoparquet-version`, `core/convert.py:552-683` +
-    * `GEOPARQUET_VERSIONS` in `core/common.py:56-66`): byte-copy the
-    * row groups under a schema where `geomCol`'s BINARY column carries
-    * the native Parquet GEOMETRY (or GEOGRAPHY) logical type. The pages
-    * are untouched — WKB is exactly what the native annotation
-    * describes, which is why the reference's own 2.0 fixtures still
-    * declare `encoding: "WKB"`.
+  /** `schema` with `geomCol`'s BINARY column annotated as native Parquet
+    * GEOMETRY, or GEOGRAPHY under `geographyAlgorithm` — the GeoParquet
+    * 2.0 / parquet-geo-only schema (reference `convert
+    * --geoparquet-version`, `core/convert.py:552-683`). The pages stay
+    * as they are: WKB is exactly what the native annotation describes,
+    * which is why the reference's own 2.0 fixtures still declare
+    * `encoding: "WKB"`. `crs` inlines a CRS string (PROJJSON or
+    * "EPSG:nnnn") into the Parquet type — required by spec when the
+    * metadata CRS is non-default (validate check V2-2).
     *
-    * `crs` inlines a CRS string (PROJJSON or "EPSG:nnnn") into the
-    * Parquet type — required by spec when the metadata CRS is
-    * non-default (validate check V2-2). `kv` REPLACES the key-value
-    * metadata wholesale (unlike [[withKeyValueMetadata]]'s union), so
-    * the parquet-geo-only flavor can drop the `geo` key entirely.
-    *
-    * Native GeospatialStatistics are NOT synthesized: appendFile
-    * copies the source chunks' metadata verbatim, and fabricating
+    * Native GeospatialStatistics are NOT synthesized: a footer rewrite
+    * keeps the source chunks' metadata verbatim, and fabricating
     * per-chunk stats would require re-encoding every page. Readers fall
     * back to the `geo` bbox / a data probe (our validate marks the
     * native-stats checks SKIPPED, like the reference on GDAL-written
     * files without them).
     */
-  def addNativeGeoTypes(in: Path, out: Path, geomCol: String,
-      kv: Map[String, String],
-      crs: Option[String] = None,
-      geographyAlgorithm: Option[String] = None,
-      conf: Configuration = newConf()): Unit = {
+  private[graft] def withNativeGeo(schema: MessageType, geomCol: String,
+      crs: Option[String], geographyAlgorithm: Option[String]): MessageType = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
-    rewrite(in, out, conf) { footer =>
-      val schema = footer.getFileMetaData.getSchema
-      val fields: java.util.List[Type] = schema.getFields
-      var found = false
-      val upgraded = new MessageType(schema.getName,
-        fields.asScala.map {
-          case p: PrimitiveType if p.getName == geomCol =>
-            require(p.getPrimitiveTypeName ==
-                PrimitiveType.PrimitiveTypeName.BINARY,
-              s"geometry column $geomCol must be BINARY WKB, found " +
-                p.getPrimitiveTypeName)
-            found = true
-            val ann = geographyAlgorithm match {
-              case Some(alg) => LogicalTypeAnnotation.geographyType(
-                crs.orNull,
-                org.apache.parquet.column.schema.EdgeInterpolationAlgorithm
-                  .valueOf(alg.toUpperCase))
-              case None => LogicalTypeAnnotation.geometryType(crs.orNull)
-            }
-            org.apache.parquet.schema.Types
-              .primitive(p.getPrimitiveTypeName, p.getRepetition)
-              .as(ann).named(p.getName)
-          case t => t
-        }.asJava)
-      require(found, s"geometry column $geomCol not found in schema")
-      (upgraded, kv)
-    }
+    val fields: java.util.List[Type] = schema.getFields
+    var found = false
+    val upgraded = new MessageType(schema.getName,
+      fields.asScala.map {
+        case p: PrimitiveType if p.getName == geomCol =>
+          require(p.getPrimitiveTypeName ==
+              PrimitiveType.PrimitiveTypeName.BINARY,
+            s"geometry column $geomCol must be BINARY WKB, found " +
+              p.getPrimitiveTypeName)
+          found = true
+          val ann = geographyAlgorithm match {
+            case Some(alg) => LogicalTypeAnnotation.geographyType(
+              crs.orNull,
+              org.apache.parquet.column.schema.EdgeInterpolationAlgorithm
+                .valueOf(alg.toUpperCase))
+            case None => LogicalTypeAnnotation.geometryType(crs.orNull)
+          }
+          org.apache.parquet.schema.Types
+            .primitive(p.getPrimitiveTypeName, p.getRepetition)
+            .as(ann).named(p.getName)
+        case t => t
+      }.asJava)
+    require(found, s"geometry column $geomCol not found in schema")
+    upgraded
   }
+
+  /** Make a GeoParquet-2 / parquet-geo-only file readable by Spark:
+    * byte-copy the row groups under [[withoutNativeGeo]] of its schema
+    * and keep all key-value metadata. The reference downgrades versions
+    * through GDAL/DuckDB rewrites (`core/convert.py`
+    * geoparquet-version); this is the footer-only equivalent.
+    */
+  def stripNativeGeoTypes(in: Path, out: Path,
+      conf: Configuration = newConf()): Unit =
+    rewrite(in, out, conf) { footer =>
+      val fm = footer.getFileMetaData
+      (withoutNativeGeo(fm.getSchema), fm.getKeyValueMetaData.asScala.toMap)
+    }
 
   /** Write `out` (replacing it) as the row groups of `in`, byte-copied
     * (never decoded), under the schema and whole key-value metadata
     * `plan` derives from `in`'s footer: the one copy behind
-    * [[withKeyValueMetadata]], [[writeGeoMetadata]],
-    * [[stripNativeGeoTypes]] and [[addNativeGeoTypes]]. One reader
-    * supplies both the footer and the row groups, so `in` is opened once.
+    * [[rewriteInPlace]] and [[stripNativeGeoTypes]]. Each column chunk is copied with its bloom
+    * filter, column index and offset index, so the page-level pruning
+    * the writer set up survives (a whole-file append drops the page
+    * indexes).
     */
   private def rewrite(in: Path, out: Path, conf: Configuration)(
       plan: ParquetMetadata => (MessageType, Map[String, String])): Unit = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(in, conf))
+    // one stream feeds the reader's footer and index reads and the
+    // chunk copies, so `in` is opened once
+    val input = HadoopInputFile.fromPath(in, conf)
+    val stream = input.newStream()
+    val reader = ParquetFileReader.open(input,
+      org.apache.parquet.ParquetReadOptions.builder().build(), stream)
     try {
       val (schema, kv) = plan(reader.getFooter)
       val fs = out.getFileSystem(conf)
@@ -518,7 +523,16 @@ object Footer {
         HadoopOutputFile.fromPath(out, conf), schema,
         ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
       writer.start()
-      reader.appendTo(writer)
+      reader.getRowGroups.asScala.foreach { block =>
+        writer.startBlock(block.getRowCount)
+        block.getColumns.asScala.foreach { chunk =>
+          writer.appendColumnChunk(
+            schema.getColumnDescription(chunk.getPath.toArray), stream, chunk,
+            reader.readBloomFilter(chunk), reader.readColumnIndex(chunk),
+            reader.readOffsetIndex(chunk))
+        }
+        writer.endBlock()
+      }
       writer.end(kv.asJava)
     } finally reader.close()
   }
@@ -571,7 +585,7 @@ object Footer {
       extra: Map[String, String] = Map.empty): Unit = {
     // one reader per part: its footer's row-group stats give the
     // per-file bbox, and the same reader feeds the byte copy
-    def one(p: Path): Unit = mergeKeyValues(p, conf) { footer =>
+    def one(p: Path): Unit = rewriteInPlace(p, conf) { footer =>
       val m = perFileBboxCol match {
         case Some(bcol) =>
           val bb = statsBbox(info(footer).rowGroups, bcol)
@@ -580,7 +594,9 @@ object Footer {
           })
         case None => geo
       }
-      extra + (GeoMeta.FooterKey -> GeoMeta.toJson(m))
+      val fm = footer.getFileMetaData
+      (fm.getSchema, fm.getKeyValueMetaData.asScala.toMap ++ extra +
+        (GeoMeta.FooterKey -> GeoMeta.toJson(m)))
     }
     // dedupe by REAL path before fanning out: partFiles follows symlinks,
     // so one physical file reachable through two linked directories is

@@ -792,7 +792,7 @@ object Dedup {
 
   /** Codegen Bloom membership test: all k positions set in the bitmap.
     * The bitmap rides as a generated-code REFERENCE OBJECT (see
-    * SketchExpressions.BloomHit) — not a typedLit array: a 4096-long
+    * SketchExpressions.bloom_hit) — not a typedLit array: a 4096-long
     * literal repeated at every probe site made each AQE replan walk and
     * canonicalize ~32 KB of plan tree per copy, ~0.7 s of pure plan
     * processing per delivery at mBits=2^18. Bit math is identical to

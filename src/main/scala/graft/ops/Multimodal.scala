@@ -300,16 +300,22 @@ object Multimodal {
     * can certify the real decoder's output (q46).
     */
   def withSyntheticPng(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol)(id =>
+      encodePng((1 + id % 13).toInt, (1 + id % 7).toInt, id))
+
+  /** `df` plus a synthesized binary payload column `payloadCol`, the
+    * payload of each row a pure function of its long `idCol` — the one
+    * shape of the `withSynthetic*` fixture generators: [[Par.spread]],
+    * then one partition-local pass appending each row's payload.
+    */
+  private def withSyntheticPayload(df: DataFrame, idCol: String,
+      payloadCol: String)(payload: Long => Array[Byte]): DataFrame = {
     val schema = df.schema.add(payloadCol, BinaryType)
     val enc = org.apache.spark.sql.Encoders.row(schema)
     val iIdx = df.schema.fieldIndex(idCol)
     Par.spread(df, col(idCol)).mapPartitions { it =>
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        Row.fromSeq(row.toSeq :+
-          encodePng((1 + id % 13).toInt, (1 + id % 7).toInt, id))
-      }
+      it.map(row => Row.fromSeq(row.toSeq :+ payload(row.getLong(iIdx))))
     }(enc)
   }
 
@@ -340,24 +346,17 @@ object Multimodal {
     * real encode→decode→hash round-trip.
     */
   def withSyntheticClassPng(df: DataFrame, idCol: String, classes: Int,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add(payloadCol, BinaryType)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val iIdx = df.schema.fieldIndex(idCol)
-    Par.spread(df, col(idCol)).mapPartitions { it =>
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol) { id =>
       val lums = new Array[Int](64)
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        var p = 0
-        while (p < 64) {
-          val base = classLum(id % classes, p)
-          lums(p) = if (p == (id % 64).toInt) base ^ 1 else base
-          p += 1
-        }
-        Row.fromSeq(row.toSeq :+ encodeGrayPng(lums, 8, 8))
+      var p = 0
+      while (p < 64) {
+        val base = classLum(id % classes, p)
+        lums(p) = if (p == (id % 64).toInt) base ^ 1 else base
+        p += 1
       }
-    }(enc)
-  }
+      encodeGrayPng(lums, 8, 8)
+    }
 
   /** Average-hash (aHash) of a decoded image payload — (hi, lo) 32-bit
     * halves, or None when the bytes don't decode. Decode is the REAL
@@ -742,18 +741,9 @@ object Multimodal {
     * (partition-local): [[syntheticSamples]] through the RIFF writer.
     */
   def withSyntheticWav(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add(payloadCol, BinaryType)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val iIdx = df.schema.fieldIndex(idCol)
-    Par.spread(df, col(idCol)).mapPartitions { it =>
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        Row.fromSeq(row.toSeq :+
-          encodeWavPcm16(syntheticSamples(id), syntheticWavRate))
-      }
-    }(enc)
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol)(id =>
+      encodeWavPcm16(syntheticSamples(id), syntheticWavRate))
 
   /** Integer-exact features of a decoded clip: n_samples, peak = max|s|,
     * sum_sq = Σs², zero_cross = #{t ≥ 1 : sign(s[t-1] ≥ 0) ≠ sign(s[t] ≥ 0)}.
@@ -1112,19 +1102,11 @@ object Multimodal {
     * multi-frame decode (q181).
     */
   def withSyntheticGif(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add(payloadCol, BinaryType)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val iIdx = df.schema.fieldIndex(idCol)
-    Par.spread(df, col(idCol)).mapPartitions { it =>
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        val nf = (4 + id % 5).toInt
-        val frames = Array.tabulate(nf)(f => vidFrameLums(id, f))
-        Row.fromSeq(row.toSeq :+ encodeGrayGif(frames, 8, 8))
-      }
-    }(enc)
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol) { id =>
+      val nf = (4 + id % 5).toInt
+      encodeGrayGif(Array.tabulate(nf)(f => vidFrameLums(id, f)), 8, 8)
+    }
 
   /** REAL frame sampling: decode the GIF container partition-locally,
     * keep every `everyN`-th frame, and reduce each kept frame to its
@@ -1157,29 +1139,22 @@ object Multimodal {
     * not byte-duplicates. Pure integer formula ⇒ a SQL oracle replays it.
     */
   def withSyntheticClassWav(df: DataFrame, idCol: String, classes: Int,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add(payloadCol, BinaryType)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val iIdx = df.schema.fieldIndex(idCol)
-    Par.spread(df, col(idCol)).mapPartitions { it =>
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        val c = id % classes
-        val n = (1600 + (c % 16) * 16).toInt
-        val amp = 900 + (c % 4) * 300
-        val m = 2 * amp + 1
-        val t0 = (id % n).toInt
-        val out = new Array[Short](n)
-        var t = 0
-        while (t < n) {
-          val base = (c * 104729 + t * 7919L) % m - amp
-          out(t) = (if (t == t0) base ^ 1L else base).toShort
-          t += 1
-        }
-        Row.fromSeq(row.toSeq :+ encodeWavPcm16(out, syntheticWavRate))
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol) { id =>
+      val c = id % classes
+      val n = (1600 + (c % 16) * 16).toInt
+      val amp = 900 + (c % 4) * 300
+      val m = 2 * amp + 1
+      val t0 = (id % n).toInt
+      val out = new Array[Short](n)
+      var t = 0
+      while (t < n) {
+        val base = (c * 104729 + t * 7919L) % m - amp
+        out(t) = (if (t == t0) base ^ 1L else base).toShort
+        t += 1
       }
-    }(enc)
-  }
+      encodeWavPcm16(out, syntheticWavRate)
+    }
 
   /** Quantized 8-block energy-envelope fingerprint of a decoded clip —
     * the acoustic near-dup key: block of sample t is (t·8)/n, each
@@ -1333,21 +1308,13 @@ object Multimodal {
     * a SQL oracle replays the whole construction.
     */
   def withSyntheticClassGif(df: DataFrame, idCol: String, classes: Int,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add(payloadCol, BinaryType)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val iIdx = df.schema.fieldIndex(idCol)
-    Par.spread(df, col(idCol)).mapPartitions { it =>
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        val c = id % classes
-        val nf = (4 + c % 5).toInt
-        val frames = Array.tabulate(nf)(f =>
-          if (f < nf - 1) classFrameLums(c, f) else noiseFrameLums(id))
-        Row.fromSeq(row.toSeq :+ encodeGrayGif(frames, 8, 8))
-      }
-    }(enc)
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol) { id =>
+      val c = id % classes
+      val nf = (4 + c % 5).toInt
+      encodeGrayGif(Array.tabulate(nf)(f =>
+        if (f < nf - 1) classFrameLums(c, f) else noiseFrameLums(id)), 8, 8)
+    }
 
   /** Decode a container and reduce it to its DISTINCT per-frame aHash
     * set (insertion order) plus the frame count — the single definition
@@ -1686,13 +1653,10 @@ object Multimodal {
     * Pure integer formulas ⇒ a SQL oracle replays pixels AND deltas.
     */
   def withSyntheticSceneGif(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add(payloadCol, BinaryType)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val iIdx = df.schema.fieldIndex(idCol)
-    Par.spread(df, col(idCol)).mapPartitions { it =>
+      payloadCol: String = "payload"): DataFrame =
+    withSyntheticPayload(df, idCol, payloadCol) { id =>
       val md = md5Local.get()
-      def base(prefix: String, id: Long): Array[Int] = {
+      def base(prefix: String): Array[Int] = {
         val out = new Array[Int](64)
         var blk = 0
         while (blk < 4) {
@@ -1704,19 +1668,14 @@ object Multimodal {
         }
         out
       }
-      it.map { row =>
-        val id = row.getLong(iIdx)
-        val nf = (6 + id % 3).toInt
-        val k = (2 + id % 3).toInt
-        val ba = base("sa", id); val bb = base("sb", id)
-        val frames = Array.tabulate(nf) { f =>
-          val b = if (f < k) ba else bb
-          Array.tabulate(64)(p => b(p) + 2 * f)
-        }
-        Row.fromSeq(row.toSeq :+ encodeGrayGif(frames, 8, 8))
-      }
-    }(enc)
-  }
+      val nf = (6 + id % 3).toInt
+      val k = (2 + id % 3).toInt
+      val ba = base("sa"); val bb = base("sb")
+      encodeGrayGif(Array.tabulate(nf) { f =>
+        val b = if (f < k) ba else bb
+        Array.tabulate(64)(p => b(p) + 2 * f)
+      }, 8, 8)
+    }
 
   /** REAL scene-change detection: decode the container partition-
     * locally, compute Σ|lum_f(p) − lum_{f−1}(p)| for every consecutive

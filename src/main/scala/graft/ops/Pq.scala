@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Scale shape mirrors [[KMeans]]:
   *  - codebook init: the deterministic stride sample ([[Ann.ivfCentroids]]),
   *    sliced into subvectors — one scan, k×dims floats to the driver;
-  *  - refinement: codegen [[graft.functions.SketchExpressions.PqEncode]]
+  *  - refinement: codegen [[graft.functions.SketchExpressions.pq_encode]]
   *    assignment + ONE exact fixed-point mean update per subspace, all
   *    subspaces in the same aggregation (the shuffle carries m×k×subDim
   *    partial sums per task, never vectors);

@@ -464,7 +464,7 @@ object CurationQueries {
     // byte-level dedup/fingerprints silently miss equivalent text. The
     // fixture injects combining marks deterministically (both engines
     // build the same decomposed string from `documents.text`), the Spark
-    // side normalizes through the codegen NfcNormalize kernel
+    // side normalizes through the codegen nfc_normalize kernel
     // (java.text.Normalizer), the oracle through DuckDB's utf8proc
     // `nfc_normalize` — two independent Unicode implementations, and the
     // md5-of-normalized-text column makes the hash compare certify exact

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{geo, ParamLiteral}
-import graft.functions.GeoExpressions.{EnvelopeInBox, StEnvelope}
+import graft.functions.GeoExpressions.StEnvelope
 import graft.geom.{GeoJson, Proj, Wkt}
 import graft.meta.{Footer, GeoColumnMeta, GeoMeta}
 
@@ -106,8 +106,8 @@ final case class GeoTable(
   /** bbox spatial filter (`core/extract.py:568-579`): an overlap test
     * of each row's envelope against the closed box. With a covering it
     * is four plain comparisons on the struct's fields, so Parquet min/max
-    * pruning applies; without one it is [[EnvelopeInBox]] over
-    * `st_envelope(geometry)`, one WKB decode per row. Both compare in
+    * pruning applies; without one it is `geo.envelope_in_box` over
+    * the geometry's envelope, one WKB decode per row. Both compare in
     * Spark's double order, so a null or empty (NaN-envelope) geometry
     * never matches on either path.
     *
@@ -118,8 +118,8 @@ final case class GeoTable(
     * so row-group pruning) only from comparisons against a `Literal`.
     * Each bound takes its covering field's type ([[ParamLiteral.atLeast]]),
     * so a FLOAT covering is not widened into a spelled float literal.
-    * [[EnvelopeInBox]] reads the window from a field of the generated
-    * class.
+    * `geo.envelope_in_box` takes it as [[ParamLiteral]] arguments too,
+    * read from fields of the generated class.
     */
   def filterBbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double): GeoTable = {
     // warn rather than fail, like the reference (`_warn_if_crs_mismatch`,
@@ -164,8 +164,7 @@ final case class GeoTable(
         atLeast("xmax", xmin) && atMost("xmin", xmax) &&
           atLeast("ymax", ymin) && atMost("ymin", ymax)
       case None =>
-        GraftBridge.column(EnvelopeInBox(
-          StEnvelope(GraftBridge.expression(col(geomCol))), xmin, ymin, xmax, ymax))
+        geo.envelope_in_box(col(geomCol), xmin, ymin, xmax, ymax)
     }
     // Hive dataset written by our spatial partitioners: AND in the
     // partition-column covering conjunct so the scan gets
@@ -1083,7 +1082,7 @@ object GeoTable {
     * rewrite: row-group pages are byte-copied, never re-encoded, so the
     * cost is O(footer), not O(data).
     *
-    *  - "1.0" / "1.1": strip any native geo logical type (Spark can
+    *  - "1.0" / "1.1": strip every native geo logical type (Spark can
     *    then read the file directly) and stamp `geo.version`.
     *  - "2.0": annotate the primary geometry column with the native
     *    Parquet GEOMETRY (or GEOGRAPHY, when `geo.edges` = spherical)
@@ -1104,28 +1103,18 @@ object GeoTable {
         s"unknown geoparquet version '$other' " +
           "(expected 1.0, 1.1, 2.0 or parquet-geo-only)")
     }
-    parts.foreach { p =>
-      val info = Footer.read(p, conf)
-      val geoMeta = info.geo.getOrElse(
+    import scala.jdk.CollectionConverters._
+    // one in-place copy per file: its plan sets both the schema and the
+    // key-value metadata of the target version
+    parts.foreach(p => Footer.rewriteInPlace(p, conf) { footer =>
+      val fm = footer.getFileMetaData
+      val kv = fm.getKeyValueMetaData.asScala.toMap
+      val geoMeta = kv.get(GeoMeta.FooterKey).map(GeoMeta.fromJson).getOrElse(
         throw new IllegalArgumentException(s"$p has no `geo` metadata"))
-      val fs = p.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, s".${p.getName}.vtmp")
-      def swap(): Unit = {
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"rename $tmp -> $p failed")
-      }
+      val stamped = GeoMeta.FooterKey ->
+        GeoMeta.toJson(geoMeta.copy(version = metaVersion))
       version match {
-        case "1.0" | "1.1" =>
-          val hasNative = info.schemaInfo.exists(f =>
-            f.name == geoMeta.primaryColumn && f.geoCrs.isDefined ||
-              f.logicalType.exists(lt =>
-                f.name == geoMeta.primaryColumn &&
-                  (lt.contains("Geometry") || lt.contains("Geography"))))
-          if (hasNative) { Footer.stripNativeGeoTypes(p, tmp, conf); swap() }
-          Footer.withKeyValueMetadata(p, Map(GeoMeta.FooterKey ->
-            GeoMeta.toJson(geoMeta.copy(version = metaVersion))), conf)
+        case "1.0" | "1.1" => (Footer.withoutNativeGeo(fm.getSchema), kv + stamped)
         case "2.0" | "parquet-geo-only" =>
           val pc = geoMeta.primary.getOrElse(
             throw new IllegalArgumentException(
@@ -1133,17 +1122,10 @@ object GeoTable {
                 "from `geo` metadata"))
           val crs = pc.crs.filterNot(_.isNull).map(_.toString)
           val alg = pc.edges.filter(_ == "spherical").map(_ => "SPHERICAL")
-          val kv = info.keyValueMeta -
-            GeoMeta.FooterKey ++
-            (if (version == "2.0")
-              Map(GeoMeta.FooterKey ->
-                GeoMeta.toJson(geoMeta.copy(version = metaVersion)))
-            else Map.empty)
-          Footer.addNativeGeoTypes(p, tmp, geoMeta.primaryColumn, kv,
-            crs, alg, conf)
-          swap()
+          (Footer.withNativeGeo(fm.getSchema, geoMeta.primaryColumn, crs, alg),
+            if (version == "2.0") kv + stamped else kv - GeoMeta.FooterKey)
       }
-    }
+    })
   }
 
   def addBboxMetadata(path: String): String = {

@@ -567,8 +567,12 @@ class GeoTableSpec extends AnyFunSuite {
 
   test("key bounds and precision grids at NaN and ±Infinity stay in " +
       "whole-stage codegen and equal eval") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.GraftBridge.{column, expression}
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import graft.functions.GeoExpressions.{HilbertIndexXY, MortonIndexXY, StReducePrecision}
+    // the kernel over literal inputs, evaluated without codegen
+    def evalLit(f: Seq[Column] => Column, vs: Any*): Any =
+      expression(f(vs.map(v => column(Literal(v))))).eval()
     val nan = Double.NaN; val inf = Double.PositiveInfinity
     val xy = spark.range(60).select((col("id") * 7 % 23 - 11.5).as("x"),
       (col("id") * 5 % 19 - 9.25).as("y"))
@@ -576,14 +580,14 @@ class GeoTableSpec extends AnyFunSuite {
     for (b <- Seq((nan, nan, nan, nan), (-inf, -inf, inf, inf), (0.0, nan, inf, 10.0),
         (-10.0, -10.0, nan, -inf), (inf, inf, -inf, -inf))) {
       for ((name, key, kernel) <- Seq(
-          ("hilbertXY", geo.hilbert_xy _,
-            (x: Double, y: Double) => HilbertIndexXY(Literal(x), Literal(y), b._1, b._2, b._3, b._4)),
-          ("mortonXY", geo.morton_xy _,
-            (x: Double, y: Double) => MortonIndexXY(Literal(x), Literal(y), b._1, b._2, b._3, b._4)))) {
+          ("hilbertXY", geo.hilbert_xy _, (x: Double, y: Double) => evalLit(
+            c => geo.hilbert_xy(c(0), c(1), b._1, b._2, b._3, b._4), x, y)),
+          ("mortonXY", geo.morton_xy _, (x: Double, y: Double) => evalLit(
+            c => geo.morton_xy(c(0), c(1), b._1, b._2, b._3, b._4), x, y)))) {
         val df = xy.select(key(col("x"), col("y"), b._1, b._2, b._3, b._4))
         assert(generatedSources(df).mkString.contains(s"GeoEval.$name("), s"$name $b")
         val got = df.collect().map(_.getLong(0)).toSeq
-        assert(got == pts.map { case (x, y) => kernel(x, y).eval() }.toSeq, s"$name $b")
+        assert(got == pts.map { case (x, y) => kernel(x, y) }.toSeq, s"$name $b")
       }
     }
     val wkb = xy.select(geo.st_point(col("x"), col("y")).as("g"))
@@ -592,7 +596,7 @@ class GeoTableSpec extends AnyFunSuite {
       val df = wkb.select(geo.st_reduceprecision(col("g"), grid))
       assert(generatedSources(df).mkString.contains("GeoEval.stReducePrecision("), s"$grid")
       val got = df.collect().map(_.getAs[Array[Byte]](0).toSeq).toSeq
-      assert(got == geoms.map(g => StReducePrecision(Literal(g), grid).eval()
+      assert(got == geoms.map(g => evalLit(c => geo.st_reduceprecision(c(0), grid), g)
         .asInstanceOf[Array[Byte]].toSeq).toSeq, s"$grid")
     }
   }
@@ -1346,8 +1350,9 @@ class GeoTableSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val conf = new org.apache.hadoop.conf.Configuration()
     /** The replaced pass, spelled out: a stats read for the bbox, a
-      * second reader for schema and key-values, and appendFile's own
-      * reader for the byte copy.
+      * second reader for schema and key-values, and a third for the
+      * chunk-by-chunk byte copy with each chunk's bloom filter and page
+      * indexes.
       */
     def threeReaderPass(p: Path, gm: GeoMeta, bboxCol: Option[String],
         extra: Map[String, String]): Unit = {
@@ -1365,7 +1370,15 @@ class GeoTableSpec extends AnyFunSuite {
       val w = new ParquetFileWriter(HadoopOutputFile.fromPath(tmp, conf), schema,
         ParquetFileWriter.Mode.CREATE, 128L * 1024 * 1024, 8 * 1024 * 1024)
       w.start()
-      w.appendFile(in)
+      val c = ParquetFileReader.open(in)
+      val stream = in.newStream()
+      try c.getRowGroups.asScala.foreach { b =>
+        w.startBlock(b.getRowCount)
+        b.getColumns.asScala.foreach(ch => w.appendColumnChunk(
+          schema.getColumnDescription(ch.getPath.toArray), stream, ch,
+          c.readBloomFilter(ch), c.readColumnIndex(ch), c.readOffsetIndex(ch)))
+        w.endBlock()
+      } finally { stream.close(); c.close() }
       w.end((kv ++ extra + (GeoMeta.FooterKey -> GeoMeta.toJson(m))).asJava)
       val fs = p.getFileSystem(conf)
       fs.delete(p, false)
@@ -1414,6 +1427,57 @@ class GeoTableSpec extends AnyFunSuite {
       val back = spark.read.parquet(mine)
       assert(back.count() == df.count() && back.exceptAll(df).isEmpty &&
         df.exceptAll(back).isEmpty, name)
+    }
+  }
+
+  test("footer rewrites keep every chunk's column and offset indexes") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = new org.apache.hadoop.conf.Configuration()
+    // per chunk of every part: column index?, offset index?, page count
+    def indexes(path: String): Seq[(Boolean, Boolean, Int)] =
+      Footer.partFiles(path, conf).flatMap { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        try r.getRowGroups.asScala.toSeq.flatMap(_.getColumns.asScala.map { c =>
+          val oi = r.readOffsetIndex(c)
+          (r.readColumnIndex(c) != null, oi != null,
+            if (oi == null) 0 else oi.getPageCount)
+        }) finally r.close()
+      }
+    def kv(path: String) = Footer.partFiles(path, conf)
+      .map(Footer.read(_, conf).keyValueMeta)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("id", "name", "geometry").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq))
+      .sortBy(_._1).toSeq
+    val t = pointsTable(2000).addBbox()
+    withConf("parquet.page.row.count.limit", "200") {
+      val stock = tmpDir("idx_stock")
+      t.df.write.mode("overwrite").parquet(stock)
+      val want = indexes(stock)
+      assert(want.nonEmpty && want.forall { case (ci, oi, n) => ci && oi && n > 1 },
+        s"the stock write has page indexes: $want")
+
+      val written = tmpDir("idx_write")
+      t.write(written)
+      assert(indexes(written) == want)
+      assert(rows(spark.read.parquet(written)) == rows(t.df))
+      val stockKv = kv(stock)
+      assert(kv(written).zip(stockKv).forall { case (w, s) =>
+        w - GeoMeta.FooterKey == s && w.contains(GeoMeta.FooterKey) })
+
+      val parts = tmpDir("idx_quadkey")
+      t.partitionByQuadkey(4, 1, parts, force = true)
+      val partIdx = indexes(parts)
+      assert(partIdx.nonEmpty && partIdx.forall { case (ci, oi, _) => ci && oi }, partIdx)
+      assert(rows(spark.read.parquet(parts)) == rows(t.df))
+
+      val before = kv(written)
+      GeoTable.setGeoParquetVersion(written, "2.0")
+      assert(indexes(written) == want)
+      assert(kv(written).zip(before).forall { case (a, b) =>
+        a - GeoMeta.FooterKey == b - GeoMeta.FooterKey &&
+          GeoMeta.fromJson(a(GeoMeta.FooterKey)).version == "2.0.0" })
     }
   }
 }

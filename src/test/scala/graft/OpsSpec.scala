@@ -1195,6 +1195,7 @@ class OpsSpec extends AnyFunSuite {
   test("pq_adc_cosine: a new query norm reuses the generated code; NaN and " +
       "±Infinity norms stay in whole-stage codegen and equal eval") {
     import graft.functions.SketchExpressions
+    import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, IntegerType}
     val dotLut = Array(Array(0.5, -0.25), Array(1.0, 0.125))
@@ -1213,8 +1214,9 @@ class OpsSpec extends AnyFunSuite {
       assert(generatedSources(adc(q)).mkString.contains("SketchEval.pqAdcCosine("), s"$q")
       val got = adc(q).collect().map(r => java.lang.Double.doubleToLongBits(r.getDouble(0)))
       val want = rows.map(c => java.lang.Double.doubleToLongBits(
-        SketchExpressions.PqAdcCosine(Literal(c, ArrayType(IntegerType, containsNull = false)),
-          dotLut, normLut, q).eval().asInstanceOf[Double]))
+        GraftBridge.expression(SketchExpressions.pq_adc_cosine(GraftBridge.column(
+          Literal(c, ArrayType(IntegerType, containsNull = false))),
+          dotLut, normLut, q)).eval().asInstanceOf[Double]))
       assert(got.toSeq == want.toSeq, s"$q")
     }
   }

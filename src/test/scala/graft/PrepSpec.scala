@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{SketchEval, SketchExpressions}
+import graft.SparkTestSession.withConf
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Training-prep surface: winnowing/random-projection kernel contracts
@@ -263,5 +264,88 @@ class PrepSpec extends AnyFunSuite {
           .cast("long"))
       .select($"id", $"r")
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
+  }
+
+  test("every SQL-registered kernel returns the same rows with and " +
+      "without codegen") {
+    import spark.implicits._
+    graft.functions.text.register(spark)
+    graft.functions.geo.register(spark)
+    val g = "st_geomfromtext(wkt)"
+    val calls = Seq(
+      // text.register
+      "norm_text(t)", "term_counts(t)", "bigram_counts(t)", "topgram_stats(t)",
+      "rep_stats(t)", "char_entropy(t)", "nfc_normalize(t)", "pii_redact(t)",
+      "simhash64(t)", "sorted_pairs(ids)", "word_shingles(t, 2)",
+      "gram_hash_seq(t, 2)", "char_ngrams(t, 3)", "char_ngram_codes(t, 3)",
+      "token_blocks(t, 2)", "window_digests(t, 2)", "lsh_signature(v, 8)",
+      "rand_project(v, 4)", "token_hash_counts(t, 16)",
+      "minhash_signature(t, 8, 2)", "jaccard_sim(t, t2, 2)",
+      "span_stats(starts, 2, n)", "scrub_spans(t, starts, 2)",
+      "winnow(t, 2, 3)", "md5_minhash_sigs(word_shingles(t, 2), 4)",
+      "array_match_count(minhash_signature(t, 8, 2), minhash_signature(t2, 8, 2))",
+      "sorted_intersect_count(sort_array(word_shingles(t, 1)), " +
+        "sort_array(word_shingles(t2, 1)))",
+      "lsh_probes(lsh_signature(v, 4), 4)",
+      // geo.register
+      "st_point(x, y)", s"st_x($g)", s"st_y($g)", s"st_xmin($g)", s"st_ymin($g)",
+      s"st_xmax($g)", s"st_ymax($g)", s"st_centroid($g)", s"st_astext($g)",
+      "st_geomfromgeojson(json)", s"st_asgeojson($g)", s"st_asgeojson($g, 3)",
+      s"st_geometrytype($g)", s"st_isvalid($g)", s"st_isempty($g)",
+      s"st_npoints($g)", "st_makeenvelope(x, y, x + 1, y + 1)",
+      s"st_distance($g, st_point(x, y))", s"st_intersects($g, st_point(x, y))",
+      s"st_contains($g, st_point(x, y))", "h3_latlng_to_cell_string(y, x, 5)")
+    // the sweep calls every registered name: a new registration must
+    // join it
+    val registered = Seq("text", "geo").flatMap { f =>
+      "one\\(\"([a-z0-9_]+)\"".r.findAllMatchIn(new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+          s"src/main/scala/graft/functions/$f.scala")), "UTF-8")).map(_.group(1))
+    }.toSet
+    val called = registered.filter(n => calls.exists(_.contains(n + "(")))
+    assert(registered.size > 40 && called == registered,
+      s"not called: ${registered -- called}")
+
+    // a null row, an edge row (empty text, id list and span list, zero
+    // vector, empty geometry) and an ordinary row, read from Parquet so
+    // the optimizer cannot fold the calls into the plan
+    val dir = java.nio.file.Files.createTempDirectory("kernel-parity")
+      .resolve("t").toString
+    Seq(
+      (None, None, None, None, None, None, None, None, None, None),
+      (Some(""), Some(""), Some(Seq(0f, 0f, 0f, 0f)), Some(Seq.empty[Long]),
+        Some(Seq.empty[Int]), Some(0), Some("POINT EMPTY"),
+        Some("""{"type":"Point","coordinates":[0,0]}"""), Some(0.0), Some(0.0)),
+      (Some("The quick brown fox, x@y.com; the quick dog"),
+        Some("the quick brown cat"), Some(Seq(0.5f, -1f, 2f, 0.25f)),
+        Some(Seq(7L, 3L, 11L)), Some(Seq(1, 3)), Some(8),
+        Some("POLYGON ((0 0, 4 0, 4 3, 0 3, 0 0))"),
+        Some("""{"type":"LineString","coordinates":[[1,2],[3,4]]}"""),
+        Some(1.5), Some(2.5))
+    ).toDF("t", "t2", "v", "ids", "starts", "n", "wkt", "json", "x", "y")
+      .write.parquet(dir)
+    // bit-exact, NaN-safe, byte arrays by content
+    def norm(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case b: Array[Byte] => b.toSeq
+      case s: scala.collection.Seq[_] => s.map(norm)
+      case r: org.apache.spark.sql.Row => r.toSeq.map(norm)
+      case o => o
+    }
+    def rows(call: String) =
+      spark.read.parquet(dir).selectExpr("x", call).orderBy("x").collect()
+        .map(r => norm(r.get(1))).toSeq
+    for (call <- calls) {
+      val df = spark.read.parquet(dir).selectExpr(call)
+      assert(!df.queryExecution.executedPlan.toString.contains("ScalaUDF"), call)
+      assert(SparkTestSession.generatedSources(df).exists(_.contains("Eval.")),
+        s"$call: no kernel call in generated code")
+      val codegen = rows(call)
+      val interpreted = withConf("spark.sql.codegen.wholeStage", "false") {
+        withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN")(rows(call))
+      }
+      assert(codegen == interpreted, call)
+      assert(codegen.head == null, s"$call: null row")
+    }
   }
 }
