@@ -105,6 +105,9 @@ object Main {
   }
 
   private[graft] def run(spark: SparkSession, args0: Seq[String]): Unit = {
+    // BboxPushdownRule turns `extract --intersects` into covering
+    // comparisons the Parquet scan can prune on (idempotent)
+    graft.plans.GraftExtensions.install(spark)
     // --explain (reference CHANGELOG Unreleased: `--show-sql` on every
     // DuckDB-backed command): the Spark analogue prints the FORMATTED
     // optimized/physical plan of every action the command executes —

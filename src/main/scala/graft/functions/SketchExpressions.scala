@@ -483,35 +483,12 @@ object SketchEval {
     * lowercase-hex chars (big-endian first 8 bytes, shifted right 4).
     */
   private def md5Long60(s: String): Long = {
-    val d = md5Local.get().digest(
+    val d = graft.ops.Hashing.md5(
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     var v = 0L
     var i = 0
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v >>> 4
-  }
-
-  // MessageDigest is stateful and not thread-safe; one per task thread
-  // (the graft.ops.Dedup convention)
-  private val md5Local =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  /** First 16 lowercase-hex chars of md5 — parity with SQL
-    * `substr(md5(x), 1, 16)` in both Spark and DuckDB.
-    */
-  private def md5Hex16(s: String): String = {
-    val d = md5Local.get().digest(
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val out = new Array[Char](16)
-    var i = 0
-    while (i < 8) {
-      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
   }
 
   /** Winnowing fingerprints (Schleimer et al. 2003, MOSS): hash every
@@ -532,7 +509,7 @@ object SketchEval {
     var i = 0
     while (i < m) {
       joinGram(sb, toks, i, k)
-      hs(i) = md5Hex16(sb.toString); i += 1
+      hs(i) = graft.ops.Hashing.md5Hex(sb.toString, 16); i += 1
     }
     val sel = new java.util.TreeSet[String]()
     val nWin = math.max(1, m - w + 1)
@@ -629,11 +606,10 @@ object SketchEval {
   def tokenHashCounts(s: UTF8String, dims: Int): ArrayData = {
     val toks = tokenize(s)
     val counts = new Array[Long](dims)
-    val md = md5Local.get()
     var nz = 0
     var i = 0
     while (i < toks.length) {
-      val d = md.digest(
+      val d = graft.ops.Hashing.md5(
         toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val f = ((((d(0) & 0xffL) << 16) | ((d(1) & 0xffL) << 8) |
         (d(2) & 0xffL)) % dims).toInt
@@ -1038,7 +1014,7 @@ object SketchEval {
         if (j > i) sb.append(' ')
         sb.append(toks(j)); j += 1
       }
-      out(i) = UTF8String.fromString(md5Hex16(sb.toString))
+      out(i) = UTF8String.fromString(graft.ops.Hashing.md5Hex(sb.toString, 16))
       i += 1
     }
     new GenericArrayData(out)

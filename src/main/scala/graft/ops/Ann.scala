@@ -31,9 +31,8 @@ object Ann {
   private def planes(bits: Int, dims: Int): Array[Array[Double]] =
     planeCache.computeIfAbsent((bits, dims), { _ =>
       Array.tabulate(bits) { p =>
-        val md = java.security.MessageDigest.getInstance("MD5")
         Array.tabulate(dims) { j =>
-          val d = md.digest(s"${p}_$j".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val d = Hashing.md5(s"${p}_$j".getBytes(java.nio.charset.StandardCharsets.UTF_8))
           if (((d(0) >> 4) & 0xf) >= 8) -1.0 else 1.0
         }
       }

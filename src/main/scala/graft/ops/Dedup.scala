@@ -1,13 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType, StructType}
 
 /** Deduplication operators for large-scale text pipelines (builder-prompt
   * surface). All shapes are shuffle-conscious:
@@ -718,62 +713,20 @@ object Dedup {
     * is SketchEval.bloomSet ≡ [[bloomPos]] (the oracle rebuilds it
     * hex-for-hex).
     */
-  case class BloomBitmapAgg(
-      child: Expression,
-      mBits: Int,
-      k: Int,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+  case class BloomBitmap(mBits: Int, k: Int) extends LongFold {
+    def width: Int = mBits / 64
+    def prettyName: String = "bloom_bitmap"
 
-    override def createAggregationBuffer(): Array[Long] =
-      new Array[Long](mBits / 64)
+    def update(buf: Array[Long], inputs: Array[Any]): Unit =
+      graft.functions.SketchEval.bloomSet(
+        inputs(0).asInstanceOf[org.apache.spark.unsafe.types.UTF8String], buf, k)
 
-    override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-      val v = child.eval(input)
-      if (v != null)
-        graft.functions.SketchEval.bloomSet(
-          v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], buf, k)
-      buf
-    }
-
-    override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < buf.length) { buf(i) |= other(i); i += 1 }
-      buf
-    }
-
-    override def eval(buf: Array[Long]): Any =
-      new GenericArrayData(buf.clone())
-
-    override def serialize(buf: Array[Long]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-      var i = 0
-      while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-      bb.array()
-    }
-
-    override def deserialize(storage: Array[Byte]): Array[Long] = {
-      val bb = java.nio.ByteBuffer.wrap(storage)
-      val buf = createAggregationBuffer()
-      var i = 0
-      while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-      buf
-    }
-
-    override def nullable: Boolean = false
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def withNewMutableAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildInternal(newChild: Expression): BloomBitmapAgg =
-      copy(child = newChild)
-    override def prettyName: String = "bloom_bitmap"
+    def merge(buf: Array[Long], other: Array[Long]): Unit =
+      LongVectorAgg.orInto(buf, other)
   }
 
   /** Build the m-bit Bloom bitmap over a digest column in ONE map-side
-    * combinable aggregation job (see [[BloomBitmapAgg]]).
+    * combinable aggregation job (see [[BloomBitmap]]).
     */
   def bloomBitmap(digests: DataFrame, digestCol: String, mBits: Int,
       k: Int): Array[Long] = {
@@ -782,11 +735,9 @@ object Dedup {
     // AQE off for the collect: the plan is a fixed scan → partial-agg →
     // single-row final agg; adaptive staging only adds per-exchange job
     // scheduling on a shape it can never improve (the LogReg iteration
-    // rationale, ops/LogReg.scala:196-203)
+    // rationale, LogReg.trainCore)
     graft.util.AqeOff(digests.sparkSession)(digests
-      .select(GraftBridge.column(BloomBitmapAgg(
-        GraftBridge.expression(col(digestCol)), mBits, k)
-        .toAggregateExpression()).as("bm"))
+      .select(LongVectorAgg.column(BloomBitmap(mBits, k), col(digestCol)).as("bm"))
       .first().getAs[scala.collection.Seq[Long]](0).toArray)
   }
 
@@ -959,20 +910,13 @@ object Dedup {
     * SQL oracle can recompute the identical fingerprints from hex-nibble
     * arithmetic (q29).
     */
-  // MessageDigest is stateful and not thread-safe; one per task thread,
-  // not one per row (digest() resets it between tokens)
-  private val md5Local =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
   def simhash64(text: String): Long = {
     val counts = new Array[Int](64)
     val toks = text.split("\\s+")
-    val md = md5Local.get()
     var t = 0
     while (t < toks.length) {
       if (toks(t).nonEmpty) {
-        val d = md.digest(toks(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val d = Hashing.md5(toks(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         var h = 0L
         var b = 0
         while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }

@@ -1,15 +1,8 @@
 package graft.ops
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.SketchExpressions
@@ -26,7 +19,7 @@ import graft.functions.SketchExpressions
   *  - each GD iteration is ONE job with no exploded rows: a codegen
   *    sparse-dot (dot_micro, weights as a generated-code reference
   *    object — the plan source is identical every iteration, so codegen
-  *    compiles once) produces the residual, and [[GradArrayAgg]]
+  *    compiles once) produces the residual, and [[GradArray]]
   *    accumulates the whole (dims+2)-long gradient array map-side —
   *    each partition ships ONE array row, the final merge is
   *    elementwise adds, and the collect is a single row;
@@ -58,78 +51,31 @@ object LogReg {
     * corpus size; nothing is exploded and nothing feature-keyed ever
     * crosses a shuffle.
     */
-  case class GradArrayAgg(
-      fs: Expression,
-      resid: Expression,
-      dims: Int,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with BinaryLike[Expression] {
+  case class GradArray(dims: Int) extends LongFold {
+    def width: Int = dims + 2
+    def prettyName: String = "grad_array"
 
-    override def left: Expression = fs
-    override def right: Expression = resid
-
-    override def createAggregationBuffer(): Array[Long] =
-      new Array[Long](dims + 2)
-
-    override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-      val a = fs.eval(input)
-      val r = resid.eval(input)
-      if (a != null && r != null) {
-        val arr = a.asInstanceOf[ArrayData]
-        val rv = r.asInstanceOf[Double]
-        val n = arr.numElements()
-        var i = 0
-        while (i < n) {
-          val s = arr.getStruct(i, 2)
-          buf(s.getLong(0).toInt) +=
-            math.floor(rv * s.getLong(1).toDouble * 1e6).toLong
-          i += 1
-        }
-        buf(dims + 1) += 1L
+    /** inputs: the sparse (f, x) feature row and the residual r. */
+    def update(buf: Array[Long], inputs: Array[Any]): Unit = {
+      val arr = inputs(0).asInstanceOf[ArrayData]
+      val rv = inputs(1).asInstanceOf[Double]
+      val n = arr.numElements()
+      var i = 0
+      while (i < n) {
+        val s = arr.getStruct(i, 2)
+        buf(s.getLong(0).toInt) +=
+          math.floor(rv * s.getLong(1).toDouble * 1e6).toLong
+        i += 1
       }
-      buf
+      buf(dims + 1) += 1L
     }
 
-    override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < buf.length) { buf(i) += other(i); i += 1 }
-      buf
-    }
-
-    override def eval(buf: Array[Long]): Any =
-      new GenericArrayData(buf.clone())
-
-    override def serialize(buf: Array[Long]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(8 * buf.length)
-      var i = 0
-      while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-      bb.array()
-    }
-
-    override def deserialize(storage: Array[Byte]): Array[Long] = {
-      val bb = ByteBuffer.wrap(storage)
-      val buf = createAggregationBuffer()
-      var i = 0
-      while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-      buf
-    }
-
-    override def nullable: Boolean = false
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def withNewMutableAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): GradArrayAgg =
-      copy(fs = newLeft, resid = newRight)
-    override def prettyName: String = "grad_array"
+    def merge(buf: Array[Long], other: Array[Long]): Unit =
+      LongVectorAgg.sumInto(buf, other)
   }
 
   private def gradArray(fs: Column, resid: Column, dims: Int): Column =
-    GraftBridge.column(GradArrayAgg(GraftBridge.expression(fs),
-      GraftBridge.expression(resid), dims).toAggregateExpression())
+    LongVectorAgg.column(GradArray(dims), fs, resid)
 
   /** Train `iters` full-batch GD steps; returns (f, weight_micro) for
     * f ∈ [0, dims] — index dims is the bias. `label` must evaluate to

@@ -323,15 +323,8 @@ object Multimodal {
     * the first hex byte of md5("cls:p"), the same formula a SQL oracle
     * replays with its own md5 (the q102/q151 hex-arithmetic trick).
     */
-  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  def classLum(cls: Long, p: Int): Int = {
-    val md = md5Local.get(); md.reset()
-    (md.digest(s"$cls:$p".getBytes("UTF-8"))(0)) & 0xff
-  }
+  def classLum(cls: Long, p: Int): Int =
+    Hashing.md5(s"$cls:$p".getBytes("UTF-8"))(0) & 0xff
 
   /** Grayscale face of [[encodeRgbPng]]: all three channels = lum. */
   def encodeGrayPng(lums: Array[Int], width: Int, height: Int): Array[Byte] =
@@ -1083,11 +1076,9 @@ object Multimodal {
     */
   def vidFrameLums(id: Long, f: Int): Array[Int] = {
     val out = new Array[Int](64)
-    val md = md5Local.get()
     var blk = 0
     while (blk < 4) {
-      md.reset()
-      val d = md.digest(s"$id:$f:$blk".getBytes("UTF-8"))
+      val d = Hashing.md5(s"$id:$f:$blk".getBytes("UTF-8"))
       var i = 0
       while (i < 16) { out(blk * 16 + i) = d(i) & 0xff; i += 1 }
       blk += 1
@@ -1271,11 +1262,9 @@ object Multimodal {
     */
   def classFrameLums(cls: Long, f: Int): Array[Int] = {
     val out = new Array[Int](64)
-    val md = md5Local.get()
     var blk = 0
     while (blk < 4) {
-      md.reset()
-      val d = md.digest(s"v$cls:$f:$blk".getBytes("UTF-8"))
+      val d = Hashing.md5(s"v$cls:$f:$blk".getBytes("UTF-8"))
       var i = 0
       while (i < 16) { out(blk * 16 + i) = d(i) & 0xff; i += 1 }
       blk += 1
@@ -1286,11 +1275,9 @@ object Multimodal {
   /** Document-specific noise frame: md5("n<id>:<blk>") pixels. */
   def noiseFrameLums(id: Long): Array[Int] = {
     val out = new Array[Int](64)
-    val md = md5Local.get()
     var blk = 0
     while (blk < 4) {
-      md.reset()
-      val d = md.digest(s"n$id:$blk".getBytes("UTF-8"))
+      val d = Hashing.md5(s"n$id:$blk".getBytes("UTF-8"))
       var i = 0
       while (i < 16) { out(blk * 16 + i) = d(i) & 0xff; i += 1 }
       blk += 1
@@ -1655,13 +1642,11 @@ object Multimodal {
   def withSyntheticSceneGif(df: DataFrame, idCol: String,
       payloadCol: String = "payload"): DataFrame =
     withSyntheticPayload(df, idCol, payloadCol) { id =>
-      val md = md5Local.get()
       def base(prefix: String): Array[Int] = {
         val out = new Array[Int](64)
         var blk = 0
         while (blk < 4) {
-          md.reset()
-          val d = md.digest(s"$prefix$id:$blk".getBytes("UTF-8"))
+          val d = Hashing.md5(s"$prefix$id:$blk".getBytes("UTF-8"))
           var i = 0
           while (i < 16) { out(blk * 16 + i) = d(i) & 0x7f; i += 1 }
           blk += 1

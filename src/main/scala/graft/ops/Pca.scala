@@ -1,13 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Distributed PCA by power iteration — the standard first step of
   * embedding-space analysis (whitening, dominant-direction removal,
@@ -53,7 +48,7 @@ object Pca {
     * entry a SIGNED 128-BIT accumulator stored as an interleaved
     * (hi, lo) Long pair — value_i = hi·2^64 + unsigned(lo). Each
     * partition folds its rows into one local buffer; partials merge by
-    * elementwise 128-bit addition — the BloomBitmapAgg shape, so at any
+    * elementwise 128-bit addition ([[LongVectorAgg]]), so at any
     * corpus size only numPartitions ~34 KB buffers cross the wire.
     *
     * Why 128-bit (round-6 ADVICE): a signed-Long cross-moment
@@ -67,102 +62,46 @@ object Pca {
     * orders of magnitude; absurd coordinates fail loudly instead of
     * wrapping).
     */
-  case class CovMomentsAgg(
-      child: Expression,
-      dims: Int,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
-
+  case class CovMoments(dims: Int) extends LongFold {
     private val len = 1 + dims + dims * (dims + 1) / 2
+    def width: Int = 2 * len
+    def prettyName: String = "pca_moments"
 
-    override def createAggregationBuffer(): Array[Long] = new Array[Long](2 * len)
-
-    /** buf(2i, 2i+1) += x, exact signed 128-bit: sign-extend x, add the
-      * low words unsigned, propagate the carry into the high word.
-      */
-    @inline private def add128(buf: Array[Long], i: Int, x: Long): Unit = {
-      val lo = buf(2 * i + 1)
-      val nl = lo + x
-      buf(2 * i + 1) = nl
-      buf(2 * i) += (x >> 63) + (((lo & x) | ((lo | x) & ~nl)) >>> 63)
-    }
-
-    override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-      val v = child.eval(input)
-      if (v != null) {
-        val a = v.asInstanceOf[ArrayData]
-        if (a.numElements() != dims)
+    def update(buf: Array[Long], inputs: Array[Any]): Unit = {
+      val a = inputs(0).asInstanceOf[ArrayData]
+      if (a.numElements() != dims)
+        throw new IllegalArgumentException(
+          s"pca_moments: expected $dims-dim vector, got ${a.numElements()}")
+      val q = new Array[Long](dims)
+      var j = 0
+      while (j < dims) {
+        val x = a.getFloat(j)
+        if (!java.lang.Float.isFinite(x))
           throw new IllegalArgumentException(
-            s"pca_moments: expected $dims-dim vector, got ${a.numElements()}")
-        val q = new Array[Long](dims)
-        var j = 0
-        while (j < dims) {
-          val x = a.getFloat(j)
-          if (!java.lang.Float.isFinite(x))
-            throw new IllegalArgumentException(
-              s"pca_moments: non-finite coordinate $x at dim $j")
-          q(j) = halfAway(x.toDouble * Micro)
-          j += 1
-        }
-        add128(buf, 0, 1L)
-        var t = 1 + dims
-        j = 0
-        while (j < dims) {
-          add128(buf, 1 + j, q(j))
-          var k = j
-          while (k < dims) {
-            add128(buf, t, Math.multiplyExact(q(j), q(k)))
-            t += 1; k += 1
-          }
-          j += 1
-        }
+            s"pca_moments: non-finite coordinate $x at dim $j")
+        q(j) = halfAway(x.toDouble * Micro)
+        j += 1
       }
-      buf
-    }
-
-    override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < len) {
-        val lo = buf(2 * i + 1)
-        val x = other(2 * i + 1)
-        val nl = lo + x
-        buf(2 * i + 1) = nl
-        buf(2 * i) += other(2 * i) + (((lo & x) | ((lo | x) & ~nl)) >>> 63)
-        i += 1
+      LongVectorAgg.add128(buf, 0, 1L)
+      var t = 1 + dims
+      j = 0
+      while (j < dims) {
+        LongVectorAgg.add128(buf, 1 + j, q(j))
+        var k = j
+        while (k < dims) {
+          LongVectorAgg.add128(buf, t, Math.multiplyExact(q(j), q(k)))
+          t += 1; k += 1
+        }
+        j += 1
       }
-      buf
     }
 
-    override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-    override def serialize(buf: Array[Long]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(16 * len)
-      var i = 0
-      while (i < 2 * len) { bb.putLong(buf(i)); i += 1 }
-      bb.array()
-    }
-
-    override def deserialize(storage: Array[Byte]): Array[Long] = {
-      val bb = java.nio.ByteBuffer.wrap(storage)
-      val buf = createAggregationBuffer()
-      var i = 0
-      while (i < 2 * len) { buf(i) = bb.getLong; i += 1 }
-      buf
-    }
-
-    override def nullable: Boolean = false
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def withNewMutableAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildInternal(c: Expression): CovMomentsAgg =
-      copy(child = c)
+    def merge(buf: Array[Long], other: Array[Long]): Unit =
+      LongVectorAgg.sum128Into(buf, other)
   }
 
   /** The one distributed job: collect the moment triangle, exact at any
-    * corpus size (the (hi, lo) pairs of [[CovMomentsAgg]] reassemble
+    * corpus size (the (hi, lo) pairs of [[CovMoments]] reassemble
     * into arbitrary-precision integers here; every downstream consumer
     * reads them through .toDouble, so values that still fit a Long —
     * any corpus the oracle can also replay — convert identically to
@@ -174,9 +113,7 @@ object Pca {
     // AQE off for the collect: fixed scan -> partial agg -> single-row
     // final agg (the bloomBitmap / LogReg rationale)
     val raw = graft.util.AqeOff(df.sparkSession)(
-      df.select(GraftBridge.column(
-          CovMomentsAgg(GraftBridge.expression(col(vecCol)), dims)
-            .toAggregateExpression()).as("m"))
+      df.select(LongVectorAgg.column(CovMoments(dims), col(vecCol)).as("m"))
         .first().getAs[scala.collection.Seq[Long]](0))
     val mask = (BigInt(1) << 64) - 1
     (0 until raw.length / 2).map(i =>

@@ -1,15 +1,9 @@
 package graft.ops
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the vector-compression scale path that
@@ -51,7 +45,7 @@ object Pq {
     // refinement aggregation are fixed scan→agg shapes over a bounded
     // model — adaptive staging only adds per-exchange job scheduling it
     // can never improve (the LogReg iteration rationale,
-    // ops/LogReg.scala:196-203)
+    // LogReg.trainCore)
     graft.util.AqeOff(df.sparkSession)(
       trainCodebooksCore(df, vecCol, idCol, m, k, dims))
   }
@@ -64,19 +58,16 @@ object Pq {
       init.map(v => v.slice(s * sub, (s + 1) * sub).map(_.toDouble)))
     // one refinement pass: assign with cb0 (codegen kernel), then exact
     // fixed-point means per (subspace, code, dim) folded into ONE
-    // buffer-per-partition aggregate ([[PqMomentsAgg]]) — the collect is
+    // buffer-per-partition aggregate ([[PqMoments]]) — the collect is
     // the bounded m×k×(sub+1) model (1,088 longs at m=4,k=16,sub=16),
     // the same driver-synchronization contract as KMeans.kmeans.
     // (Round-15: the previous shape posexploded every vector into `dims`
     // rows before a (s,c,i)-keyed groupBy — the explode was ~70% of
     // q63's wall time and all of its shuffle.)
     val moments = graft.util.CollectCapped(
-      df.agg(GraftBridge.column(PqMomentsAgg(
-        GraftBridge.expression(graft.functions.SketchExpressions
-          .pq_encode(col(vecCol), cb0)),
-        GraftBridge.expression(col(vecCol).cast(
-          ArrayType(org.apache.spark.sql.types.FloatType))),
-        m, k, sub).toAggregateExpression()).as("__m")),
+      df.agg(LongVectorAgg.column(PqMoments(m, k, sub),
+        graft.functions.SketchExpressions.pq_encode(col(vecCol), cb0),
+        col(vecCol).cast(ArrayType(FloatType))).as("__m")),
       1L, "PQ codebook moments (m x k x (sub+1) longs)")(0)
       .getSeq[Long](0).toArray
     // empty codes keep their init entry (mirrored by the oracle's
@@ -105,9 +96,10 @@ object Pq {
   /** One-pass Lloyd-update moments for all m subspaces: buffer layout is
     * m·k·sub fixed-point coordinate sums followed by m·k assignment
     * counts. Each partition folds its vectors into ONE local buffer;
-    * partials merge by elementwise addition (the [[Pca.CovMomentsAgg]] /
-    * LogReg.GradArrayAgg shape), so only numPartitions ~9 KB buffers
-    * cross the wire — no explode, no key shuffle, corpus-size-free.
+    * partials merge by elementwise addition (a [[LongVectorAgg]], like
+    * [[Pca.CovMoments]] and [[LogReg.GradArray]]), so only numPartitions
+    * ~9 KB buffers cross the wire — no explode, no key shuffle,
+    * corpus-size-free.
     *
     * Fixed-point contract: each coordinate contributes
     * halfAway(x·[[KMeans.Scale]]) — identical to the previous
@@ -117,84 +109,36 @@ object Pq {
     * oracle. Long sums overflow only past ~9e12 unit-norm rows per
     * (subspace, code) — no realistic ceiling.
     */
-  case class PqMomentsAgg(
-      codes: Expression,
-      vec: Expression,
-      m: Int,
-      k: Int,
-      sub: Int,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with BinaryLike[Expression] {
-
-    override def left: Expression = codes
-    override def right: Expression = vec
-
+  case class PqMoments(m: Int, k: Int, sub: Int) extends LongFold {
     private val sumsLen = m * k * sub
+    def width: Int = sumsLen + m * k
+    def prettyName: String = "pq_moments"
 
-    override def createAggregationBuffer(): Array[Long] =
-      new Array[Long](sumsLen + m * k)
-
-    override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-      val cv = codes.eval(input)
-      val vv = vec.eval(input)
-      if (cv != null && vv != null) {
-        val ca = cv.asInstanceOf[ArrayData]
-        val va = vv.asInstanceOf[ArrayData]
-        require(ca.numElements() == m && va.numElements() == m * sub,
-          s"pq_moments: expected $m codes over ${m * sub} dims, got " +
-            s"${ca.numElements()}/${va.numElements()}")
-        var s = 0
-        while (s < m) {
-          val c = ca.getInt(s)
-          val base = (s * k + c) * sub
-          val voff = s * sub
-          var j = 0
-          while (j < sub) {
-            buf(base + j) +=
-              Pca.halfAway(va.getFloat(voff + j).toDouble * KMeans.Scale)
-            j += 1
-          }
-          buf(sumsLen + s * k + c) += 1L
-          s += 1
+    /** inputs: the m codes of a vector and its m·sub coordinates. */
+    def update(buf: Array[Long], inputs: Array[Any]): Unit = {
+      val ca = inputs(0).asInstanceOf[ArrayData]
+      val va = inputs(1).asInstanceOf[ArrayData]
+      require(ca.numElements() == m && va.numElements() == m * sub,
+        s"pq_moments: expected $m codes over ${m * sub} dims, got " +
+          s"${ca.numElements()}/${va.numElements()}")
+      var s = 0
+      while (s < m) {
+        val c = ca.getInt(s)
+        val base = (s * k + c) * sub
+        val voff = s * sub
+        var j = 0
+        while (j < sub) {
+          buf(base + j) +=
+            Pca.halfAway(va.getFloat(voff + j).toDouble * KMeans.Scale)
+          j += 1
         }
+        buf(sumsLen + s * k + c) += 1L
+        s += 1
       }
-      buf
     }
 
-    override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < buf.length) { buf(i) += other(i); i += 1 }
-      buf
-    }
-
-    override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-    override def serialize(buf: Array[Long]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(8 * buf.length)
-      var i = 0
-      while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-      bb.array()
-    }
-
-    override def deserialize(storage: Array[Byte]): Array[Long] = {
-      val bb = ByteBuffer.wrap(storage)
-      val buf = createAggregationBuffer()
-      var i = 0
-      while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-      buf
-    }
-
-    override def nullable: Boolean = false
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def withNewMutableAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): ImperativeAggregate =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): PqMomentsAgg =
-      copy(codes = newLeft, vec = newRight)
-    override def prettyName: String = "pq_moments"
+    def merge(buf: Array[Long], other: Array[Long]): Unit =
+      LongVectorAgg.sumInto(buf, other)
   }
 
   /** Per-query ADC lookup tables against trained codebooks:

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -102,28 +104,6 @@ object Streaming {
   final case class BestState(em: Long, id: Long, lastSeenMs: Long)
   final case class BestRow(digest: String, doc_id: Long, em: Long)
 
-  /** Per-thread MD5 + allocation-free hex — the keyed-state operators
-    * digest every block/document, so per-record `getInstance` +
-    * `"%02x".format` boxing is pure hot-path waste.
-    */
-  private val md5Tl = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private def md5Hex(s: String): String = {
-    val md = md5Tl.get(); md.reset()
-    val d = md.digest(s.getBytes("UTF-8"))
-    val hex = "0123456789abcdef"
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hex((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hex(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** "N unit" duration string (the withWatermark/window grammar) → ms;
     * calendar months are rejected (no fixed ms length).
     */
@@ -168,8 +148,8 @@ object Streaming {
       // null text == empty text (the batch exactBest normalizeNN
       // contract) — a divergent NullDigest group here made the streaming
       // twin keep one extra document vs batch
-      val digest =
-        md5Hex(graft.ops.Dedup.normalizeText(if (d.text == null) "" else d.text))
+      val digest = graft.ops.Hashing.md5Hex(
+        graft.ops.Dedup.normalizeText(if (d.text == null) "" else d.text))
       (digest, d.doc_id, em, d.ts)
     }.toDF("digest", "doc_id", "em", "ts")
     keyed.withWatermark("ts", s"${horizon.toSeconds} seconds")
@@ -292,32 +272,86 @@ object Streaming {
   }
 
   final case class Doc(doc_id: Long, text: String, ts: java.sql.Timestamp)
-  final case class BandHit(band_sig: Long, doc_id: Long, norm: String,
-      ts: java.sql.Timestamp)
-  final case class BucketState(seen: List[(Long, String, Long)])
   final case class DupPair(id_a: Long, id_b: Long, jaccard: Double)
+
+  /** One banded arrival of a near-dup twin: the bucket key, the record
+    * id, the payload its pair test reads, and its event time.
+    */
+  final case class Hit[K, P](key: K, id: Long, p: P, ts: java.sql.Timestamp)
+  /** A bucket resident: record id, payload, event time in ms. */
+  final case class Resident[P](id: Long, p: P, tsMs: Long)
+  /** Keyed state of one near-dup bucket: its residents, newest first. */
+  final case class Bucket[P](seen: List[Resident[P]])
+
+  /** The keyed-state loop of the near-dup twins. State lives per bucket
+    * key (the same key the batch equi-join shuffles on) and holds the
+    * bucket's residents. Per key and micro-batch, arrivals in (ts, id)
+    * order are paired with every resident but themselves (`pair` gets
+    * the key, the arrival and the resident), then join the residents.
+    * An event-time horizon evicts residents older than the newest
+    * arrival by more than `horizon`, so state is bounded by the stream
+    * rate × horizon, not the corpus — duplicates farther apart than the
+    * horizon are missed, the standard streaming-dedup contract (same
+    * trade as dedupExact's watermark).
+    *
+    * `maxBucket` caps a bucket's residents: a pathological key
+    * (boilerplate shared by millions of documents) would otherwise hold
+    * every resident within the horizon AND do O(bucket²) pair tests —
+    * one hot bucket can wedge the stream. At the cap the oldest
+    * residents are evicted (newest-K survive) and a warning is logged;
+    * pairs against evicted residents are missed, the same bounded-state
+    * contract as the horizon.
+    *
+    * Watermark + event-time timeout drop IDLE buckets from the store:
+    * the horizon filter only prunes a bucket when a new row hits its
+    * key, and a corpus of mostly-unique documents creates several
+    * one-off keys per document — with no timeout their state lived
+    * forever and the store grew with the corpus, not the horizon.
+    */
+  private def nearDupBuckets[K: Encoder, P: TypeTag, O: Encoder](
+      hits: Dataset[Hit[K, P]], horizon: java.time.Duration, maxBucket: Int,
+      what: String)(pair: (K, Resident[P], Resident[P]) => Option[O])
+      : Dataset[O] = {
+    implicit val bucketEnc: Encoder[Bucket[P]] = Encoders.product[Bucket[P]]
+    val horizonMs = horizon.toMillis
+    hits.withWatermark("ts", s"${horizon.toSeconds} seconds")
+      .groupByKey(_.key)
+      .flatMapGroupsWithState[Bucket[P], O](
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+        (key: K, batch: Iterator[Hit[K, P]], state: GroupState[Bucket[P]]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            var seen = state.getOption.map(_.seen).getOrElse(Nil)
+            var newestMs = seen.headOption.map(_.tsMs).getOrElse(0L)
+            val out = scala.collection.mutable.ArrayBuffer[O]()
+            batch.map(h => Resident(h.id, h.p, h.ts.getTime)).toSeq
+              .sortBy(r => (r.tsMs, r.id)).foreach { a =>
+                newestMs = math.max(newestMs, a.tsMs)
+                seen.foreach(o => if (o.id != a.id) out ++= pair(key, a, o))
+                seen = (a :: seen).filter(_.tsMs >= a.tsMs - horizonMs)
+                // the list is newest-first, so take keeps the newest
+                if (seen.lengthCompare(maxBucket) > 0) {
+                  org.slf4j.LoggerFactory.getLogger(Streaming.getClass).warn(
+                    s"$what $key exceeded maxBucket=$maxBucket residents " +
+                      "within the horizon; evicting oldest — near-dups " +
+                      "against evicted entries will be missed")
+                  seen = seen.take(maxBucket)
+                }
+              }
+            state.update(Bucket(seen))
+            state.setTimeoutTimestamp(newestMs + horizonMs)
+            out.iterator
+          }
+      }
+  }
 
   /** Streaming MinHash near-dup detection — the keyed-state twin of
     * `Dedup.minhashNearDups`: each document explodes to its LSH band
-    * signatures; state lives per band bucket (the same key the batch
-    * equi-join shuffles on) holding the documents seen in that bucket;
-    * each arrival is verified with exact Jaccard against its bucket
-    * co-residents. An event-time horizon (`horizon`) evicts bucket
-    * entries older than the newest arrival by more than the horizon, so
-    * state is bounded by the stream rate × horizon, not the corpus —
-    * duplicates farther apart than the horizon are missed, the standard
-    * streaming-dedup contract (same tradeoff as dedupExact's
-    * watermark). Pairs can surface from several shared bands; run a
-    * downstream dropDuplicates(id_a, id_b) when exactly-once pairs
-    * matter.
-    *
-    * `maxBucket` caps per-bucket state: a pathological band signature
-    * (boilerplate text shared by millions of documents) would otherwise
-    * hold every resident within the horizon AND do O(bucket²) Jaccard
-    * work — one hot bucket can wedge the stream. When the cap is hit the
-    * oldest entries are evicted (newest-K survive) and a warning is
-    * logged; pairs against evicted residents are missed, the same
-    * bounded-state contract as the horizon.
+    * signatures, and each arrival is verified with exact Jaccard against
+    * its bucket co-residents ([[nearDupBuckets]]: horizon and
+    * `maxBucket` bound the state). Pairs can surface from several
+    * shared bands; run a downstream dropDuplicates(id_a, id_b) when
+    * exactly-once pairs matter.
     */
   def minhashNearDups(docs: Dataset[Doc], numHashes: Int = 128,
       bands: Int = 32, shingleK: Int = 3, threshold: Double = 0.8,
@@ -328,7 +362,6 @@ object Streaming {
     require(numHashes % bands == 0,
       s"numHashes must divide into bands (got $numHashes/$bands)") // batch parity
     val rowsPerBand = numHashes / bands
-    val horizonMs = horizon.toMillis
     val banded = docs.flatMap { d =>
       // null text ≡ empty (the batch coalesce): no shingles, no pairs
       val norm = graft.ops.Dedup.normalizeText(
@@ -336,62 +369,20 @@ object Streaming {
       val sig = graft.ops.Dedup.minhashSignature(norm, numHashes, shingleK)
       (0 until bands).map { b =>
         val slice = sig.slice(b * rowsPerBand, (b + 1) * rowsPerBand)
-        BandHit(b.toLong << 56 | (java.util.Arrays.hashCode(slice) & 0xffffffffL),
+        Hit(b.toLong << 56 | (java.util.Arrays.hashCode(slice) & 0xffffffffL),
           d.doc_id, norm, d.ts)
       }
     }
-    // watermark + event-time timeout so IDLE buckets are dropped from
-    // the store: the in-callback horizon filter only prunes a bucket
-    // when a NEW row hits the same key, and a corpus of mostly-unique
-    // documents creates ~`bands` one-off keys per document — with
-    // NoTimeout their state objects lived forever and the store grew
-    // with the corpus, not the horizon
-    banded.withWatermark("ts", s"${horizon.toSeconds} seconds")
-      .groupByKey(_.band_sig)
-      .flatMapGroupsWithState[BucketState, DupPair](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, batch: Iterator[BandHit], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var seen = state.getOption.map(_.seen).getOrElse(Nil)
-          var newestMs = seen.headOption.map(_._3).getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer[DupPair]()
-          batch.toSeq.sortBy(h => (h.ts.getTime, h.doc_id)).foreach { h =>
-            val tsMs = h.ts.getTime
-            newestMs = math.max(newestMs, tsMs)
-            seen.foreach { case (oid, onorm, _) =>
-              if (oid != h.doc_id) {
-                val j = graft.ops.Dedup.jaccard(h.norm, onorm, shingleK)
-                if (j >= threshold)
-                  out += DupPair(math.min(oid, h.doc_id),
-                    math.max(oid, h.doc_id), j)
-              }
-            }
-            seen = (h.doc_id, h.norm, tsMs) :: seen
-            // horizon eviction keyed on the newest arrival's event time
-            seen = seen.filter(_._3 >= tsMs - horizonMs)
-            // hot-bucket cap: the list is newest-first, so take keeps
-            // the newest maxBucket residents
-            if (seen.lengthCompare(maxBucket) > 0) {
-              org.slf4j.LoggerFactory.getLogger(Streaming.getClass).warn(
-                s"minhash bucket $bucket exceeded maxBucket=$maxBucket " +
-                  "residents within the horizon; evicting oldest — " +
-                  "near-dups against evicted entries will be missed")
-              seen = seen.take(maxBucket)
-            }
-          }
-          state.update(BucketState(seen))
-          state.setTimeoutTimestamp(newestMs + horizonMs)
-          out.iterator
-          }
-      }
+    nearDupBuckets(banded, horizon, maxBucket, "minhash bucket") { (_, a, o) =>
+      val j = graft.ops.Dedup.jaccard(a.p, o.p, shingleK)
+      if (j >= threshold)
+        Some(DupPair(math.min(a.id, o.id), math.max(a.id, o.id), j))
+      else None
+    }
   }
 
   final case class Vec(vec_id: Long, embedding: Array[Float],
       ts: java.sql.Timestamp)
-  final case class VecBandHit(band_sig: Long, vec_id: Long,
-      vec: Array[Float], ts: java.sql.Timestamp)
-  final case class VecBucketState(seen: List[(Long, Array[Float], Long)])
   final case class CosPair(id_a: Long, id_b: Long, cosine: Double)
 
   /** Streaming embedding near-dup detection — the keyed-state twin of
@@ -400,7 +391,7 @@ object Streaming {
     * same (band, bandSig) the batch equi-join shuffles on); each arrival
     * is verified with exact cosine against its bucket co-residents.
     * State is bounded by the event-time `horizon` and the `maxBucket`
-    * hot-bucket cap, the same contracts as [[minhashNearDups]].
+    * hot-bucket cap ([[nearDupBuckets]]).
     */
   def embeddingNearDups(vecs: Dataset[Vec], threshold: Double = 0.9,
       bits: Int = 24, bands: Int = 4,
@@ -414,60 +405,24 @@ object Streaming {
     require(bits >= 1 && bits <= 32, s"bits must be in 1..32, got $bits")
     val per = bits / bands
     require(per >= 1 && per <= 32, s"bits/bands must be in 1..32, got $per")
-    val horizonMs = horizon.toMillis
     val banded = vecs.flatMap { v =>
       val sig = graft.ops.Ann.lshSignature(v.embedding, bits)
       (0 until bands).map { b =>
         val bandSig = (sig >>> (b * per)) & ((1L << per) - 1L)
-        VecBandHit(b.toLong << 32 | (bandSig & 0xffffffffL),
+        Hit(b.toLong << 32 | (bandSig & 0xffffffffL),
           v.vec_id, v.embedding, v.ts)
       }
     }
-    // watermark + event-time timeout: idle buckets leave the store (see
-    // minhashNearDups — same bounded-state rationale)
-    banded.withWatermark("ts", s"${horizon.toSeconds} seconds")
-      .groupByKey(_.band_sig)
-      .flatMapGroupsWithState[VecBucketState, CosPair](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, batch: Iterator[VecBandHit],
-            state: GroupState[VecBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var seen = state.getOption.map(_.seen).getOrElse(Nil)
-          var newestMs = seen.headOption.map(_._3).getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer[CosPair]()
-          batch.toSeq.sortBy(h => (h.ts.getTime, h.vec_id)).foreach { h =>
-            val tsMs = h.ts.getTime
-            newestMs = math.max(newestMs, tsMs)
-            seen.foreach { case (oid, ovec, _) =>
-              if (oid != h.vec_id) {
-                val c = graft.ops.Ann.cosineArrays(h.vec, ovec)
-                if (c >= threshold)
-                  out += CosPair(math.min(oid, h.vec_id),
-                    math.max(oid, h.vec_id), c)
-              }
-            }
-            seen = (h.vec_id, h.vec, tsMs) :: seen
-            seen = seen.filter(_._3 >= tsMs - horizonMs)
-            if (seen.lengthCompare(maxBucket) > 0) {
-              org.slf4j.LoggerFactory.getLogger(Streaming.getClass).warn(
-                s"embedding bucket $bucket exceeded maxBucket=$maxBucket; " +
-                  "evicting oldest")
-              seen = seen.take(maxBucket)
-            }
-          }
-          state.update(VecBucketState(seen))
-          state.setTimeoutTimestamp(newestMs + horizonMs)
-          out.iterator
-          }
-      }
+    nearDupBuckets(banded, horizon, maxBucket, "embedding bucket") { (_, a, o) =>
+      val c = graft.ops.Ann.cosineArrays(a.p, o.p)
+      if (c >= threshold)
+        Some(CosPair(math.min(a.id, o.id), math.max(a.id, o.id), c))
+      else None
+    }
   }
 
   final case class Media(doc_id: Long, payload: Array[Byte],
       ts: java.sql.Timestamp)
-  final case class HashHit(band_sig: Long, doc_id: Long, hi: Long,
-      lo: Long, ts: java.sql.Timestamp)
-  final case class HashBucketState(seen: List[(Long, Long, Long, Long)])
   final case class HamPair(id_a: Long, id_b: Long, hamming: Long)
 
   /** Streaming perceptual-hash image near-dup detection — the
@@ -480,23 +435,21 @@ object Streaming {
     * — complete for Hamming ≤ 3 by the same pigeonhole argument as the
     * batch join. A pair agreeing on several bands would surface once
     * per agreeing bucket; the first-agreeing-band guard (both full
-    * hashes are in the hit) keeps exactly one emission, mirroring the
-    * batch side's projection-level dedupe. Horizon + maxBucket bound
-    * state exactly as in [[minhashNearDups]]; only 8-byte hashes enter
-    * state — image bytes never do.
+    * hashes are in the residents) keeps exactly one emission, mirroring
+    * the batch side's projection-level dedupe. Horizon + maxBucket bound
+    * state ([[nearDupBuckets]]); only the (hi, lo) hash enters state —
+    * image bytes never do.
     */
   def phashNearDups(media: Dataset[Media], maxHamming: Int = 3,
       horizon: java.time.Duration = java.time.Duration.ofHours(1),
       maxBucket: Int = 256): Dataset[HamPair] = {
     import media.sparkSession.implicits._
     require(maxHamming <= 3, "4-band pigeonhole is complete only to 3")
-    val horizonMs = horizon.toMillis
     val banded = media.flatMap { m =>
       graft.ops.Multimodal.aHashOf(m.payload) match {
         case Some((hi, lo)) =>
           val bv = Array(lo % 65536L, lo / 65536L, hi % 65536L, hi / 65536L)
-          (0 until 4).map(b =>
-            HashHit(b.toLong << 56 | bv(b), m.doc_id, hi, lo, m.ts))
+          (0 until 4).map(b => Hit(b.toLong << 56 | bv(b), m.doc_id, (hi, lo), m.ts))
         case None => Nil
       }
     }
@@ -505,51 +458,18 @@ object Streaming {
       else if (la / 65536L == lb / 65536L) 1
       else if (ha % 65536L == hb % 65536L) 2
       else 3
-    // watermark + event-time timeout: idle buckets leave the store (see
-    // minhashNearDups — same bounded-state rationale)
-    banded.withWatermark("ts", s"${horizon.toSeconds} seconds")
-      .groupByKey(_.band_sig)
-      .flatMapGroupsWithState[HashBucketState, HamPair](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, batch: Iterator[HashHit],
-            state: GroupState[HashBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          val myBand = (bucket >>> 56).toInt
-          var seen = state.getOption.map(_.seen).getOrElse(Nil)
-          var newestMs = seen.headOption.map(_._4).getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer[HamPair]()
-          batch.toSeq.sortBy(h => (h.ts.getTime, h.doc_id)).foreach { h =>
-            val tsMs = h.ts.getTime
-            newestMs = math.max(newestMs, tsMs)
-            seen.foreach { case (oid, ohi, olo, _) =>
-              if (oid != h.doc_id &&
-                  firstAgree(h.hi, h.lo, ohi, olo) == myBand) {
-                val d = java.lang.Long.bitCount(h.hi ^ ohi) +
-                  java.lang.Long.bitCount(h.lo ^ olo)
-                if (d <= maxHamming)
-                  out += HamPair(math.min(oid, h.doc_id),
-                    math.max(oid, h.doc_id), d.toLong)
-              }
-            }
-            seen = (h.doc_id, h.hi, h.lo, tsMs) :: seen
-            seen = seen.filter(_._4 >= tsMs - horizonMs)
-            if (seen.lengthCompare(maxBucket) > 0) {
-              org.slf4j.LoggerFactory.getLogger(Streaming.getClass).warn(
-                s"phash bucket $bucket exceeded maxBucket=$maxBucket; " +
-                  "evicting oldest")
-              seen = seen.take(maxBucket)
-            }
-          }
-          state.update(HashBucketState(seen))
-          state.setTimeoutTimestamp(newestMs + horizonMs)
-          out.iterator
-          }
+    nearDupBuckets(banded, horizon, maxBucket, "phash bucket") { (bucket, a, o) =>
+      val ((ahi, alo), (ohi, olo)) = (a.p, o.p)
+      if (firstAgree(ahi, alo, ohi, olo) != (bucket >>> 56).toInt) None
+      else {
+        val d = java.lang.Long.bitCount(ahi ^ ohi) + java.lang.Long.bitCount(alo ^ olo)
+        if (d <= maxHamming)
+          Some(HamPair(math.min(a.id, o.id), math.max(a.id, o.id), d.toLong))
+        else None
       }
+    }
   }
 
-  final case class FpHit(fp: String, doc_id: Long, ts: java.sql.Timestamp)
-  final case class FpBucketState(seen: List[(Long, Long)])
   final case class FpPair(id_a: Long, id_b: Long, fp: String)
 
   /** Streaming winnowing near-dup detection — the keyed-state twin of
@@ -557,13 +477,13 @@ object Streaming {
     * winnowed fingerprints ([[graft.functions.SketchEval.winnow]] — the
     * same md5 windowed-min sampling as the batch kernel, so any shared
     * ≥ shingleK+window-1 word passage inside the horizon is caught);
-    * state lives per fingerprint holding (doc_id, ts) residents; every
-    * arrival emits a pair per co-resident. Horizon + maxBucket bound
-    * state exactly as in [[minhashNearDups]], and winnowing's ~2/(w+1)
-    * sampling keeps both the state keys and the per-arrival fan-out
-    * small — unlike full shingle hashing, whose state would carry every
-    * shingle of every in-horizon document. Pairs can surface via several
-    * shared fingerprints — dropDuplicates(id_a, id_b) downstream when
+    * state lives per fingerprint holding its residents; every arrival
+    * emits a pair per co-resident. Horizon + maxBucket bound state
+    * ([[nearDupBuckets]]), and winnowing's ~2/(w+1) sampling keeps both
+    * the state keys and the per-arrival fan-out small — unlike full
+    * shingle hashing, whose state would carry every shingle of every
+    * in-horizon document. Pairs can surface via several shared
+    * fingerprints — dropDuplicates(id_a, id_b) downstream when
     * exactly-once pairs matter.
     */
   def winnowNearDups(docs: Dataset[Doc], shingleK: Int = 3,
@@ -571,50 +491,19 @@ object Streaming {
       horizon: java.time.Duration = java.time.Duration.ofHours(1),
       maxBucket: Int = 256): Dataset[FpPair] = {
     import docs.sparkSession.implicits._
-    val horizonMs = horizon.toMillis
     val hits = docs.flatMap { d =>
       // null text ≡ empty: the batch kernel short-circuits null input
       val ad = graft.functions.SketchEval.winnow(
         org.apache.spark.unsafe.types.UTF8String.fromString(
           if (d.text == null) "" else d.text),
         shingleK, window)
+      // the pair test reads only ids: residents carry no payload
       (0 until ad.numElements()).map(i =>
-        FpHit(ad.getUTF8String(i).toString, d.doc_id, d.ts))
+        Hit[String, Null](ad.getUTF8String(i).toString, d.doc_id, null, d.ts))
     }
-    // watermark + event-time timeout: idle fingerprints leave the store
-    // (see minhashNearDups — same bounded-state rationale)
-    hits.withWatermark("ts", s"${horizon.toSeconds} seconds")
-      .groupByKey(_.fp)
-      .flatMapGroupsWithState[FpBucketState, FpPair](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (fp: String, batch: Iterator[FpHit], state: GroupState[FpBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var seen = state.getOption.map(_.seen).getOrElse(Nil)
-          var newestMs = seen.headOption.map(_._2).getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer[FpPair]()
-          batch.toSeq.sortBy(h => (h.ts.getTime, h.doc_id)).foreach { h =>
-            val tsMs = h.ts.getTime
-            newestMs = math.max(newestMs, tsMs)
-            seen.foreach { case (oid, _) =>
-              if (oid != h.doc_id)
-                out += FpPair(math.min(oid, h.doc_id),
-                  math.max(oid, h.doc_id), fp)
-            }
-            seen = (h.doc_id, tsMs) :: seen
-            seen = seen.filter(_._2 >= tsMs - horizonMs)
-            if (seen.lengthCompare(maxBucket) > 0) {
-              org.slf4j.LoggerFactory.getLogger(Streaming.getClass).warn(
-                s"winnow fingerprint $fp exceeded maxBucket=$maxBucket " +
-                  "residents within the horizon; evicting oldest")
-              seen = seen.take(maxBucket)
-            }
-          }
-          state.update(FpBucketState(seen))
-          state.setTimeoutTimestamp(newestMs + horizonMs)
-          out.iterator
-          }
-      }
+    nearDupBuckets(hits, horizon, maxBucket, "winnow fingerprint") { (fp, a, o) =>
+      Some(FpPair(math.min(a.id, o.id), math.max(a.id, o.id), fp))
+    }
   }
 
   final case class BlockHit(bh: String, doc_id: Long, idx: Int, blk: String,
@@ -629,7 +518,7 @@ object Streaming {
         if (d.text == null) "" else d.text), blockTokens)
     (0 until ad.numElements()).map { i =>
       val blk = ad.getUTF8String(i).toString
-      BlockHit(md5Hex(blk), d.doc_id, i, blk, d.ts)
+      BlockHit(graft.ops.Hashing.md5Hex(blk), d.doc_id, i, blk, d.ts)
     }
   }
   final case class BlockFirst(firstDoc: Long, firstIdx: Int, lastSeenMs: Long)

@@ -138,6 +138,31 @@ class CliSpec extends AnyFunSuite {
       "explain listener leaked into a later command")
   }
 
+  test("extract --intersects pushes the four covering comparisons to the " +
+      "Parquet scan") {
+    val dir = tmp("intersects")
+    val df = spark.range(0, 100).toDF("id")
+      .withColumn("geometry", geo.st_point(col("id") % 90, col("id") % 45))
+    GeoTable.fromDataFrame(df, "geometry").addBbox().write(s"$dir/in.parquet")
+    // a fresh session: the shared one may already carry the rule
+    val session = spark.newSession()
+    assert(!session.experimental.extraOptimizations
+      .contains(graft.plans.BboxPushdownRule))
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) {
+      Main.run(session, Seq("extract", s"$dir/in.parquet", s"$dir/out.parquet",
+        "--intersects", "POLYGON ((1.25 2.5, 30.75 2.5, 30.75 40.5, 1.25 40.5, 1.25 2.5))",
+        "--explain"))
+    }
+    val pushed = out.toString.linesIterator.filter(_.contains("PushedFilters")).mkString("\n")
+    for (c <- Seq("GreaterThanOrEqual(bbox.xmax,1.25)", "LessThanOrEqual(bbox.xmin,30.75)",
+        "GreaterThanOrEqual(bbox.ymax,2.5)", "LessThanOrEqual(bbox.ymin,40.5)"))
+      assert(pushed.contains(c), s"$c not pushed:\n$out")
+    val want = df.filter(col("id") % 90 >= 1.25 && col("id") % 90 <= 30.75 &&
+      col("id") % 45 >= 2.5 && col("id") % 45 <= 40.5).count()
+    assert(spark.read.parquet(s"$dir/out.parquet").count() == want)
+  }
+
   test("--verbose on inspect adds footer detail; on stac-item runs the " +
       "validator (r15 #7)") {
     val dir = tmp("verbose")

@@ -706,17 +706,49 @@ class OpsSpec extends AnyFunSuite {
     // plan: the refinement must be ONE partial+final aggregate over the
     // scan — no Generate (posexplode) node, no key exchange beyond the
     // single-group final
-    val agg = df.agg(org.apache.spark.sql.GraftBridge.column(
-      graft.ops.Pq.PqMomentsAgg(
-        org.apache.spark.sql.GraftBridge.expression(
-          SketchExpressions.pq_encode($"embedding", cb)),
-        org.apache.spark.sql.GraftBridge.expression($"embedding"),
-        m, k, sub).toAggregateExpression()).as("mo"))
+    val agg = df.agg(graft.ops.LongVectorAgg.column(graft.ops.Pq.PqMoments(m, k, sub),
+      SketchExpressions.pq_encode($"embedding", cb), $"embedding").as("mo"))
     val plan = agg.queryExecution.executedPlan.toString
     assert(!plan.contains("Generate"), plan)
-    assert(plan.toLowerCase.contains("partial_pq_moments") ||
-      plan.contains("partial_pqmoments") || plan.contains("partial"),
-      s"expected a partial aggregation stage:\n$plan")
+    assert(plan.contains("partial_pq_moments"),
+      s"expected a partial pq_moments aggregation stage:\n$plan")
+  }
+
+  test("each long-vector aggregate plans as one partial plus one final " +
+      "aggregate under its name, and its buffer is big-endian longs") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.ops.{LogReg, LongVectorAgg, Pca, Pq}
+    val df = spark.range(0, 8).repartition(2).select(
+      array(struct($"id", lit(1L))).as("fs"), lit(0.25).as("r"),
+      md5($"id".cast("string")).as("h"),
+      array(Seq.tabulate(4)(j => ($"id" + j).cast("float")): _*).as("v"),
+      array(lit(0), lit(1)).as("codes"))
+    val cases = Seq(
+      "grad_array" -> LongVectorAgg.column(LogReg.GradArray(8), $"fs", $"r"),
+      "bloom_bitmap" -> LongVectorAgg.column(Dedup.BloomBitmap(128, 2), $"h"),
+      "pca_moments" -> LongVectorAgg.column(Pca.CovMoments(4), $"v"),
+      "pq_moments" -> LongVectorAgg.column(Pq.PqMoments(2, 2, 2), $"codes", $"v"))
+    for ((name, c) <- cases) {
+      val agg = df.agg(c.as("x"))
+      val plan = withConf("spark.sql.adaptive.enabled", "false")(
+        agg.queryExecution.executedPlan)
+      val aggs = plan.collect { case a: BaseAggregateExec =>
+        a.aggregateExpressions.map(e => (e.mode, e.aggregateFunction.prettyName))
+      }.flatten
+      assert(aggs.toSet == Set((Partial, name), (Final, name)) && aggs.size == 2,
+        s"$name: $aggs\n$plan")
+      assert(plan.collect { case g: GenerateExec => g }.isEmpty, s"$name:\n$plan")
+      assert(agg.first().getSeq[Long](0).exists(_ != 0L), name)
+    }
+    val lv = LongVectorAgg(Nil, Pq.PqMoments(1, 1, 1))
+    val bytes = lv.serialize(Array(1L, -2L))
+    val bb = java.nio.ByteBuffer.allocate(16).putLong(1L).putLong(-2L)
+    assert(bytes.sameElements(bb.array()))
+    assert(lv.deserialize(bytes).sameElements(Array(1L, -2L)))
+    // folds are case classes: equal parameters, equal aggregates
+    assert(LongVectorAgg(Nil, Pca.CovMoments(4)) == LongVectorAgg(Nil, Pca.CovMoments(4)))
   }
 
   test("kernel misuse fails loudly: bad params, null elements, wrong types") {

@@ -632,6 +632,43 @@ class StreamingSpec extends AnyFunSuite {
     assert(pairs == want, s"got ${pairs.size} pairs, want ${want.size}")
   }
 
+  test("streaming winnow and embedding hot buckets are capped like minhash's") {
+    // 10 identical records -> every bucket receives all 10; with
+    // maxBucket=4 each arrival pairs against at most the 4 newest
+    // residents: distinct pairs = sum_i min(i, 4) = 30 (uncapped: 45)
+    val want = (for {
+      i <- 1 until 10
+      j <- math.max(0, i - 4) until i
+    } yield (j.toLong, i.toLong)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame, name: String) =
+      Streaming.runToCompletion(df, name, outputMode = "update")
+        .select($"id_a", $"id_b").distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val year = java.time.Duration.ofDays(365)
+
+    val docDir = java.nio.file.Files.createTempDirectory("graft_swin_hot")
+    val docs = spark.range(0, 10).toDF("doc_id")
+      .withColumn("text", lit((1 to 40).map(i => s"boiler$i").mkString(" ")))
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + $"doc_id"))
+    docs.write.mode("overwrite").parquet(docDir.toString + "/in")
+    val docStream = spark.readStream.schema(docs.schema)
+      .parquet(docDir.toString + "/in").as[Streaming.Doc]
+    val winnow = pairs(Streaming.winnowNearDups(docStream, horizon = year,
+      maxBucket = 4).toDF(), "swin_hot_test")
+    assert(winnow == want, s"winnow: got ${winnow.size} pairs, want ${want.size}")
+
+    val vecDir = java.nio.file.Files.createTempDirectory("graft_semb_hot")
+    val vecs = spark.range(0, 10).toDF("vec_id")
+      .withColumn("embedding", array((1 to 8).map(j => lit(j.toFloat)): _*))
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + $"vec_id"))
+    vecs.write.mode("overwrite").parquet(vecDir.toString + "/in")
+    val vecStream = spark.readStream.schema(vecs.schema)
+      .parquet(vecDir.toString + "/in").as[Streaming.Vec]
+    val emb = pairs(Streaming.embeddingNearDups(vecStream, horizon = year,
+      maxBucket = 4).toDF(), "semb_hot_test")
+    assert(emb == want, s"embedding: got ${emb.size} pairs, want ${want.size}")
+  }
+
   test("streaming per-group top-k matches the batch TopK aggregate") {
     val streamDir = java.nio.file.Files.createTempDirectory("graft_stopk")
     val rows = spark.range(0, 500).toDF("id")
