@@ -2,17 +2,22 @@ package graft.meta
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.Version
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import scala.jdk.CollectionConverters._
 
 /** Footer-only parquet utilities (reference `core/duckdb_metadata.py` /
   * `core/metadata_utils.py`): O(1) metadata reads with no data scan, and
-  * the footer-rewrite write path that attaches the `geo` key by
-  * byte-copying row groups (reference write strategies, SURVEY §4.3 —
-  * `disk_rewrite.py` without ever decoding pages).
+  * the footer rewrite that changes a written file's schema annotations
+  * or key-value metadata by byte-copying row groups (reference write
+  * strategies, SURVEY §4.3 — `disk_rewrite.py` without ever decoding
+  * pages). Conversions and foreign files use the rewrite; `GeoTable`'s
+  * writers put `geo` in the footer as they write.
   */
 object Footer {
 
@@ -264,13 +269,14 @@ object Footer {
     val groups = meta.getBlocks.asScala.toSeq.map { b =>
       val cols = b.getColumns.asScala.toSeq.map { c =>
         val stats = Option(c.getStatistics)
+        val (min, max) = minMax(stats)
         c.getPath.toDotString -> ColumnStats(
           codec = c.getCodec.name(),
           compressedSize = c.getTotalSize,
           uncompressedSize = c.getTotalUncompressedSize,
           nullCount = stats.filter(_.isNumNullsSet).map(_.getNumNulls),
-          min = stats.filter(s => s.hasNonNullValue).map(_.genericGetMin),
-          max = stats.filter(s => s.hasNonNullValue).map(_.genericGetMax),
+          min = min,
+          max = max,
           geoBbox = Option(c.getGeospatialStatistics)
             .flatMap(gs => Option(gs.getBoundingBox))
             .filter(_.isXYValid)
@@ -340,10 +346,22 @@ object Footer {
     * `groups`; None when any corner has no statistics.
     */
   private def statsBbox(groups: Seq[RowGroupInfo],
-      bboxCol: String): Option[(Double, Double, Double, Double)] = {
+      bboxCol: String): Option[(Double, Double, Double, Double)] =
+    spannedBbox(groups.map(rg => (corner: String, isMin: Boolean) =>
+      rg.columns.get(s"$bboxCol.$corner").flatMap(c => if (isMin) c.min else c.max)))
+
+  /** The bbox per-row-group covering statistics span: each group gives
+    * the min (`isMin`) or max statistic of a corner field (`xmin` …
+    * `ymax`), None where it has none. A corner no group has a statistic
+    * for makes the whole bbox None. The one fold behind a file's `geo`
+    * bbox, whether read from a footer ([[statsBbox]]) or folded by the
+    * writer (`graft.table.GeoWriteSupport`).
+    */
+  private[graft] def spannedBbox(groups: Seq[(String, Boolean) => Option[Any]])
+      : Option[(Double, Double, Double, Double)] = {
     def agg(corner: String, isMin: Boolean): Option[Double] = {
-      val vs = groups.flatMap { rg =>
-        rg.columns.get(s"$bboxCol.$corner").flatMap(c => if (isMin) c.min else c.max)
+      val vs = groups.flatMap { g =>
+        g(corner, isMin)
           .collect {
             // FLOAT coverings are spec-legal (Checks accepts FLOAT or
             // DOUBLE fields) — a Double-only collect silently returned
@@ -359,6 +377,22 @@ object Footer {
       x1 <- agg("xmax", isMin = false); y1 <- agg("ymax", isMin = false)
     } yield (x0, y0, x1, y1)
   }
+
+  /** A chunk statistic's min and max as [[read]] reports them: None
+    * without a non-null value.
+    */
+  private[graft] def minMax(stats: Option[Statistics[_]]): (Option[Any], Option[Any]) = {
+    val s = stats.filter(_.hasNonNullValue)
+    (s.map(_.genericGetMin), s.map(_.genericGetMax))
+  }
+
+  /** `stats` as a reader of the footer gets it back: through the Thrift
+    * form the footer stores, which drops min and max when either is NaN
+    * and turns a zero min into -0.0 and a zero max into +0.0.
+    */
+  private[graft] def asRead(stats: Statistics[_], t: PrimitiveType): Statistics[_] =
+    new ParquetMetadataConverter().fromParquetStatistics(Version.FULL_VERSION,
+      ParquetMetadataConverter.toParquetStatistics(stats), t)
 
   /** GeoParquet flavor of a file (reference `detect_geoparquet_file_type`,
     * `core/common.py:127-195`):
@@ -430,7 +464,7 @@ object Footer {
     * ordinary BINARY WKB.
     */
   private[graft] def withoutNativeGeo(schema: MessageType): MessageType = {
-    import org.apache.parquet.schema.{PrimitiveType, Type}
+    import org.apache.parquet.schema.Type
     val fields: java.util.List[Type] = schema.getFields
     new MessageType(schema.getName,
       fields.asScala.map {
@@ -459,7 +493,7 @@ object Footer {
     */
   private[graft] def withNativeGeo(schema: MessageType, geomCol: String,
       crs: Option[String], geographyAlgorithm: Option[String]): MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Type}
     val fields: java.util.List[Type] = schema.getFields
     var found = false
     val upgraded = new MessageType(schema.getName,
@@ -574,10 +608,15 @@ object Footer {
       conf: Configuration = newConf()): Seq[FooterInfo] =
     fanOut(paths)(read(_, conf))
 
-  /** Attach GeoParquet metadata to every part file of a written dataset.
-    * When `perFileBbox` is set, each part's `geo` carries its own bbox
-    * recomputed from that file's row-group stats (reference strips the
-    * global bbox per partition, `core/partition_common.py:657-706`).
+  /** Attach GeoParquet metadata to every part file of a dataset some
+    * other writer produced, by rewriting each file in place (one
+    * read-back and byte copy per file). When `perFileBboxCol` is set,
+    * each part's `geo` carries its own bbox recomputed from that file's
+    * row-group stats (reference strips the global bbox per partition,
+    * `core/partition_common.py:657-706`). `GeoTable`'s own writers do not
+    * use it: they write `geo` in the Spark write itself
+    * (`graft.table.GeoParquetFormat`), so this serves foreign files and
+    * the tests that check the one-pass footers against it.
     */
   def writeGeoMetadata(path: String, geo: GeoMeta,
       perFileBboxCol: Option[String] = None,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ object Packing {
   def withRunningBefore(df: DataFrame, orderCol: String, valCol: String,
       outCol: String, chunk: Long = 65536L): DataFrame = {
     val key = col(orderCol)
-    val parted = df.withColumn("__bkt", floor(key / chunk))
+    val parted = bucketed(df, key, chunk)
     val w = Window.partitionBy(col("__bkt")).orderBy(key)
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = parted.withColumn("__loc",
@@ -44,7 +44,8 @@ object Packing {
     // every caller, so the running inclusive sum is nondecreasing and
     // its max IS the total) — a groupBy on `parted` would hang a second
     // partial-agg exchange off the un-exchanged input and recompute the
-    // whole upstream subtree (round 8; ReuseExchange shares one shuffle)
+    // whole upstream subtree (round 8; ReuseExchange shares one shuffle,
+    // once both branches see the same plan: see `bucketed`)
     val totals = local.groupBy(col("__bkt"))
       .agg(max(col("__loc") + col(valCol)).as("__tot"))
     val wB = Window.partitionBy(pmod(col("__bkt"), lit(1)))
@@ -68,7 +69,7 @@ object Packing {
     require(valCols.nonEmpty,
       "withRunningBeforeMulti: valCols must be non-empty") // vs opaque .head crash
     val key = col(orderCol)
-    val parted = df.withColumn("__bkt", floor(key / chunk))
+    val parted = bucketed(df, key, chunk)
     val w = Window.partitionBy(col("__bkt")).orderBy(key)
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = valCols.foldLeft(parted) { case (d, (src, out)) =>
@@ -94,6 +95,18 @@ object Packing {
     }.drop("__bkt" +: valCols.flatMap { case (_, out) =>
       Seq(s"__loc_$out", s"__off_$out") }: _*)
   }
+
+  /** `df` with its `__bkt` bucket column, rows of a null bucket (a null
+    * order key) dropped. The inner join on `__bkt` drops those rows
+    * anyway, but the optimizer infers `isnotnull(__bkt)` for the join's
+    * row side only; filtered there alone, the two branches differ below
+    * the bucket exchange, so it cannot be reused and the whole input
+    * subtree runs twice. Filtered once here, both branches share one
+    * shuffle, and a null-key row no longer counts in the offsets of the
+    * rows that are kept.
+    */
+  private def bucketed(df: DataFrame, key: Column, chunk: Long): DataFrame =
+    df.withColumn("__bkt", floor(key / chunk)).filter(col("__bkt").isNotNull)
 
   /** Assign each row to its pack: ⌊(running size before it)/capacity⌋. */
   def packBySize(df: DataFrame, orderCol: String, sizeCol: String,

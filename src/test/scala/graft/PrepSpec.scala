@@ -151,6 +151,37 @@ class PrepSpec extends AnyFunSuite {
     }
   }
 
+  test("withRunningBefore[Multi] shuffle their input once: the totals " +
+      "branch reuses the __bkt exchange, null keys dropped") {
+    // a nullable key over an aggregated input, as the curation pipeline's
+    // survivors: a null-key filter the join infers for one branch only
+    // would split the two branches' plans below the exchange
+    val src = spark.range(3000)
+      .select(when(col("id") % 97 =!= 5, col("id") % 1000).as("k"),
+        (col("id") % 13).as("a"), (col("id") % 5).as("b"))
+      .groupBy("k").agg(sum("a").as("a"), sum("b").as("b"))
+    // (the single form gets only the columns it reads, so the branches
+    // differ in nothing but the inferred filter)
+    val single = graft.ops.Packing.withRunningBefore(src.drop("b"), "k", "a", "ra", 64L)
+    val multi = graft.ops.Packing.withRunningBeforeMulti(src, "k",
+      Seq("a" -> "ra", "b" -> "rb"), 64L)
+    for (df <- Seq(single, multi)) {
+      val got = df.collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("ra")).toMap
+      val plan = df.queryExecution.executedPlan.toString
+      val bkt = plan.linesIterator.takeWhile(!_.contains("== Initial Plan =="))
+        .filter(_.contains("Exchange hashpartitioning(__bkt")).toSeq
+      assert(bkt.count(!_.contains("ReusedExchange")) == 1 &&
+        bkt.count(_.contains("ReusedExchange")) == 1, plan)
+      // the exclusive prefix sum over the non-null keys in key order
+      val rows = src.filter(col("k").isNotNull).orderBy("k").collect()
+      assert(got.size == rows.length)
+      rows.foldLeft(0L) { (before, r) =>
+        assert(got(r.getLong(0)) == before, s"at ${r.getLong(0)}")
+        before + r.getLong(1)
+      }
+    }
+  }
+
   test("winnow edge cases: empty, sub-shingle, sub-window texts") {
     assert(winnowSet("") === Set.empty)
     assert(winnowSet("one two") === Set.empty) // < k tokens
